@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.IndexDir
+
 /** DRIFT-TRIGGERED INDEX REBUILD — the loop that closes the append
   * lifecycle: appends accumulate under frozen centroids, the drift gate
   * fires ([[KMeansIVF.AppendResult.rebuild]]), and something must REFIT
@@ -71,7 +73,7 @@ object IndexLifecycle {
     val g = genName(1)
     KMeansIVF.writeIndex(corpus, idCol, vecCol, s"$root/$g",
       nClusters, iters, sampleCap)
-    swapPointer(root, g)
+    IndexDir.atomicWrite(currentPath(root), g) // the one atomic switch point
   }
 
   /** Append a batch to the CURRENT generation, returning its drift
@@ -91,13 +93,14 @@ object IndexLifecycle {
     * (the at-least-once-runner rule of the per-generation protocol). */
   def append(batch: DataFrame, idCol: String, vecCol: String, root: String,
              batchId: String, lockWaitMs: Long = 0L): KMeansIVF.AppendResult =
-    withLock(root, "append", lockWaitMs) {
+    IndexDir.withLock(lockPath(root), "append", lockWaitMs) {
       val applied = appliedPath(root, batchId)
-      if (java.nio.file.Files.exists(applied)) KMeansIVF.readResult(applied)
+      if (java.nio.file.Files.exists(applied))
+        IndexDir.readResult(applied, "sumMicro", KMeansIVF.AppendResult)
       else {
         val v = KMeansIVF.appendIndex(batch, idCol, vecCol, resolve(root), batchId)
         java.nio.file.Files.createDirectories(applied.getParent)
-        KMeansIVF.writeResult(applied, v)
+        IndexDir.writeResult(applied, "sumMicro", v)
         v
       }
     }
@@ -116,7 +119,7 @@ object IndexLifecycle {
   def rebuild(spark: SparkSession, root: String,
               nClusters: Int = 10, iters: Int = 4,
               sampleCap: Long = 10000): String =
-    withLock(root, "rebuild") {
+    IndexDir.withLock(lockPath(root), "rebuild") {
       val cur = resolve(root)
       graft.sources.IndexTxn.requireNoOpenTxn(cur)
       val curName = java.nio.file.Paths.get(cur).getFileName.toString
@@ -139,12 +142,12 @@ object IndexLifecycle {
       }
       // the union corpus: base + every committed append of the serving
       // generation — the index rows ARE (neighbor_id, cv) pairs
-      val corpus = KMeansIVF.dataPaths(cur)
+      val corpus = IndexDir.dataPaths(cur)
         .map(p => spark.read.parquet(p)).reduce(_ unionByName _)
         .select(col("neighbor_id"), col("cv"))
       KMeansIVF.writeIndex(corpus, "neighbor_id", "cv", s"$root/$next",
         nClusters, iters, sampleCap)
-      swapPointer(root, next)
+      IndexDir.atomicWrite(currentPath(root), next) // the one atomic switch point
       s"$root/$next"
     }
 
@@ -170,7 +173,7 @@ object IndexLifecycle {
     * replayed batch. Without retention a long-running ingest accumulates
     * one marker file per micro-batch forever. */
   def vacuum(root: String, appliedOlderThanMs: Option[Long]): Seq[String] =
-    withLock(root, "vacuum") {
+    IndexDir.withLock(lockPath(root), "vacuum") {
       val cur = java.nio.file.Paths.get(resolve(root)).getFileName.toString
       val dir = new java.io.File(root)
       val dead = dir.listFiles().toSeq
@@ -219,40 +222,4 @@ object IndexLifecycle {
         }
       }
       .start()
-
-  /** write-temp + ATOMIC_MOVE rename: the one atomic switch point. */
-  private def swapPointer(root: String, gen: String): Unit = {
-    val tmp = java.nio.file.Files.createTempFile(
-      java.nio.file.Paths.get(root), ".current-", ".tmp")
-    java.nio.file.Files.writeString(tmp, gen)
-    java.nio.file.Files.move(tmp, currentPath(root),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** `waitMs` > 0 polls for the lock instead of failing immediately — the
-    * STREAMING caller's mode: a live rebuild or vacuum holding the lock
-    * for a bounded window must stall the micro-batch, not kill the
-    * StreamingQuery (maintenance would otherwise terminate continuous
-    * ingest). The wait is BOUNDED: a lock left by a crashed owner still
-    * surfaces loudly once the deadline passes. Interactive callers keep
-    * the fail-fast default. */
-  private def withLock[T](root: String, what: String, waitMs: Long = 0L)(body: => T): T = {
-    val lock = lockPath(root)
-    val deadline = System.nanoTime() + waitMs * 1000000L
-    var held = graft.sources.LshIndex.casCreate(lock)
-    while (!held && System.nanoTime() < deadline) {
-      Thread.sleep(100)
-      held = graft.sources.LshIndex.casCreate(lock)
-    }
-    if (!held) throw new IllegalStateException(
-      s"$what on $root: a rebuild/append/vacuum holds rebuild.lock" +
-        (if (waitMs > 0) s" (waited ${waitMs}ms)" else "") +
-        " — retry when it completes, or remove the lock if its owner is known dead")
-    try body
-    finally {
-      java.nio.file.Files.deleteIfExists(lock)
-      ()
-    }
-  }
 }

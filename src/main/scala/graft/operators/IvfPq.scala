@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 
 import graft.functions.{KMeansNearestUtil, PqExpressions, TextHash, TopKAggregate, VectorExpressions}
+import graft.sources.IndexDir
 
 /** The composed billion-scale ANN layout: an IVF-partitioned index of
   * product-quantization CODES — [[KMeansIVF]]'s routing (learned coarse
@@ -49,22 +50,10 @@ object IvfPq {
       nClusters: Int = 10, ivfIters: Int = 4, m: Int = 8, kCodes: Int = 16,
       pqIters: Int = 3, ivfSampleCap: Long = 10000, pqSampleCap: Long = 500)
       : (Array[Array[Double]], Array[Array[Array[Long]]]) = {
-    // rebuilds serialize with appends on append.lock (the KMeansIVF
-    // protocol): an append reading the OLD sidecars could otherwise commit
-    // its `_done` into the NEW generation after the cleanup below
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val lock = java.nio.file.Paths.get(s"$dir/append.lock")
-    if (!graft.sources.LshIndex.casCreate(lock)) throw new IllegalStateException(
-      s"an append or rebuild is in flight on $dir (append.lock) — retry later " +
-        "or remove the lock if its owner is known dead")
-    try {
-      // a REBUILD over an existing index first revokes readiness: a crash
-      // anywhere below leaves no `_ready`, and probes fail loudly instead of
-      // pairing fresh data with stale sidecars (or truncated JSON); appends
-      // staged against the old centroid/codebook generation are cleared
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$dir/_ready"))
-      val appendsDir = new java.io.File(s"$dir/appends")
-      if (appendsDir.exists()) graft.TempDirs.deleteRecursively(appendsDir)
+    // the IndexDir rebuild scope: lock, `_ready` revoked first, appends of
+    // the old centroid/codebook generation cleared, sidecars atomic,
+    // `_ready` last — data and sidecars never disagree for a reader
+    IndexDir.rebuild(dir) {
       val c = corpus.select(
           col(idCol).as("neighbor_id"), VectorOps.asDouble(col(vecCol)).as("cv"))
         .withColumn("vq", ProductQuantizer.micro(col("cv")))
@@ -87,52 +76,40 @@ object IvfPq {
 
       // bucket assignment AND code encoding are both map-side codegen'd
       // expressions — the corpus is scanned once, never shuffled or joined
-      val encoded = c.withColumn("bucket",
-          element_at(VectorExpressions.nearestCentroids(col("cv"), centroids, 1), 1))
-        .withColumn("pq", PqExpressions.pqEncodeMicro(col("vq"), cb))
-        .select(col("neighbor_id"), col("pq.codes").as("codes"),
-          col("pq.err").as("err"), col("bucket"))
-        .persist() // index write + quantization-error baseline agg
-      encoded.select(col("neighbor_id"), col("codes"), col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/data")
+      val encoded = encode(c, centroids, cb).persist() // index write + error baseline agg
+      val st = writeEncoded(encoded, s"$dir/data")
+      encoded.unpersist()
+      c.unpersist()
       // the append DRIFT baseline: exact integer micro² quantization error
       // of the build corpus under ITS OWN codebooks — what a batch encoded
       // against the frozen codebooks is compared to ([[appendIndex]])
-      val st = encoded.agg(count(lit(1)), sum(col("err"))).head()
-      encoded.unpersist()
-      c.unpersist()
-
-      // sidecars land atomically (temp + same-dir atomic move — never a
-      // torn/truncated JSON), and `_ready` is created only after ALL are in
-      // place, so data and sidecars can never disagree for a reader
-      val cjson = centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-      atomicWrite(s"$dir/centroids.json", cjson)
-      val bjson = cb.map(_.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
-        .mkString("[", ",", "]")
-      atomicWrite(s"$dir/codebooks.json", bjson)
-      atomicWrite(s"$dir/stats.json",
-        s"""{"n":${st.getLong(0)},"sumErr":${st.getLong(1)}}""")
-      atomicWrite(s"$dir/_ready", "1")
-      (centroids, cb)
-    } finally java.nio.file.Files.deleteIfExists(lock)
+      ((centroids, cb), Seq(
+        "centroids.json" -> centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"),
+        "codebooks.json" -> cb.map(_.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
+          .mkString("[", ",", "]"),
+        "stats.json" -> s"""{"n":${st._1},"sumErr":${st._2}}"""))
+    }
   }
 
-  /** Crash-safe small-file write: temp in the target dir + atomic move. */
-  private def atomicWrite(path: String, content: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    val tmp = java.nio.file.Files.createTempFile(p.getParent, ".tmp-", "")
-    java.nio.file.Files.writeString(tmp, content)
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  /** `(neighbor_id, codes, err, bucket)`: coarse bucket + PQ codes of
+    * `(neighbor_id, cv, vq)` rows against a fixed centroid/codebook
+    * generation — the ONE encoding of build and append. */
+  private def encode(c: DataFrame, centroids: Array[Array[Double]],
+      cb: Array[Array[Array[Long]]]): DataFrame =
+    c.withColumn("bucket",
+        element_at(VectorExpressions.nearestCentroids(col("cv"), centroids, 1), 1))
+      .withColumn("pq", PqExpressions.pqEncodeMicro(col("vq"), cb))
+      .select(col("neighbor_id"), col("pq.codes").as("codes"),
+        col("pq.err").as("err"), col("bucket"))
 
-  /** Probe-side integrity gate: an index dir missing `_ready` was interrupted
-    * mid-(re)build — its data and sidecars may disagree. */
-  def requireReady(dir: String): Unit =
-    require(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/_ready")),
-      s"IVF+PQ index at $dir has no _ready marker — a (re)build was " +
-        "interrupted before its sidecars were committed; rebuild the index")
+  /** Write encoded rows (no `err` column) bucket-partitioned to `path`;
+    * returns their (count, Σ err) stats. */
+  private def writeEncoded(encoded: DataFrame, path: String): (Long, Long) = {
+    encoded.select(col("neighbor_id"), col("codes"), col("bucket"))
+      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+    val st = encoded.agg(count(lit(1)), sum(col("err"))).head()
+    (st.getLong(0), st.getLong(1))
+  }
 
   def readCodebooks(dir: String): Array[Array[Array[Long]]] = {
     val json = java.nio.file.Files.readString(
@@ -150,8 +127,7 @@ object IvfPq {
       queries: DataFrame, corpus: DataFrame, indexDir: String,
       idCol: String, vecCol: String, k: Int, nprobe: Int, shortlist: Int): DataFrame = {
     val spark = queries.sparkSession
-    requireReady(indexDir)
-    val centroids = KMeansIVF.readCentroids(indexDir)
+    val centroids = KMeansIVF.readCentroids(indexDir) // `_ready`-gated
     val cb = readCodebooks(indexDir)
     val normsC = KMeansNearestUtil.norms(centroids)
 
@@ -180,7 +156,7 @@ object IvfPq {
     // and the scan schema is (neighbor_id, codes) — no vector column exists.
     // One read per committed root (base + `_done` appends), unioned —
     // partition filters push through the Union into every child scan
-    val codes = KMeansIVF.dataPaths(indexDir).map(p => spark.read.parquet(p))
+    val codes = IndexDir.dataPaths(indexDir).map(p => spark.read.parquet(p))
       .reduce(_ unionByName _)
       .filter(col("bucket").isin(allBuckets.map(Integer.valueOf): _*))
     val short = broadcast(qb).join(codes, Seq("bucket"))
@@ -224,35 +200,12 @@ object IvfPq {
       nPrev: Long, nBatch: Long, prevSumErr: Long, batchSumErr: Long,
       driftBp: Long, rebuild: Boolean)
 
-  /** The shared append-protocol stats parser, keyed for this family's
-    * `sumErr` fragments. */
-  private def readStats(path: java.nio.file.Path): (Long, Long) =
-    KMeansIVF.readStats(path, sumKey = "sumErr")
-
-  private def readResult(path: java.nio.file.Path): AppendResult = {
-    val s = java.nio.file.Files.readString(path).trim
-    val m = ("""\{"nPrev":(-?\d+),"nBatch":(-?\d+),"prevSumErr":(-?\d+),""" +
-      """"batchSumErr":(-?\d+),"driftBp":(-?\d+),"rebuild":(true|false)\}""").r
-    s match {
-      case m(pn, bn, ps, bs, bp, rb) =>
-        AppendResult(pn.toLong, bn.toLong, ps.toLong, bs.toLong, bp.toLong, rb.toBoolean)
-      case other => throw new IllegalStateException(
-        s"unparseable append result sidecar $path: $other")
-    }
-  }
-
   /** Append a batch of NEW vectors without refitting — the
     * [[KMeansIVF.appendIndex]] machinery transplanted to the composed
     * index: the batch is assigned to the FROZEN coarse centroids and
     * encoded against the FROZEN codebooks (both map-side codegen'd
-    * expressions — no shuffle, no join), lands bucket-partitioned under
-    * `appends/<batchId>/` and becomes visible only at the atomic `_done`
-    * marker. A crash before the marker leaves the append invisible; a
-    * retry with the same `batchId` wipes the partial tree and redoes it;
-    * a retry AFTER the marker returns the ORIGINAL persisted verdict
-    * verbatim (recomputing against grown totals could flip the rebuild
-    * decision on an at-least-once runner). Appends serialize with
-    * rebuilds and compactions on `append.lock`.
+    * expressions — no shuffle, no join) and lands through the
+    * [[IndexDir.append]] batch protocol.
     *
     * The DRIFT GATE is what keeps append-without-refit honest here:
     * codebooks fitted on yesterday's corpus lose reconstruction quality
@@ -263,49 +216,16 @@ object IvfPq {
     * doubling point. */
   def appendIndex(
       batch: DataFrame, idCol: String, vecCol: String, dir: String,
-      batchId: String): AppendResult = {
-    require(!batchId.contains("/") && batchId.nonEmpty, s"bad batchId '$batchId'")
-    val lock = java.nio.file.Paths.get(s"$dir/append.lock")
-    if (!graft.sources.LshIndex.casCreate(lock)) throw new IllegalStateException(
-      s"rival append or rebuild in progress on $dir (append.lock exists); " +
-        "retry later or remove the lock if its owner is known dead")
-    try {
-      requireReady(dir) // inside the lock: no rival rebuild can revoke it now
-      val statsPath = java.nio.file.Paths.get(s"$dir/stats.json")
-      require(java.nio.file.Files.exists(statsPath),
-        s"IVF+PQ index at $dir has no stats sidecar — the build predates the " +
-          "append-capable writeIndex; rebuild the index")
-      val appDir = new java.io.File(s"$dir/appends/$batchId")
-      val doneMarker = new java.io.File(appDir, "_done")
-      if (doneMarker.exists())
-        return readResult(appDir.toPath.resolve("result.json"))
-      if (appDir.exists()) graft.TempDirs.deleteRecursively(appDir) // crashed partial
-
-      val centroids = KMeansIVF.readCentroids(dir)
-      val cb = readCodebooks(dir)
-      val encoded = batch.select(
+      batchId: String): AppendResult =
+    IndexDir.append(dir, batchId, "sumErr", AppendResult) { data =>
+      val c = batch.select(
           col(idCol).as("neighbor_id"), VectorOps.asDouble(col(vecCol)).as("cv"))
         .withColumn("vq", ProductQuantizer.micro(col("cv")))
-        .withColumn("bucket",
-          element_at(VectorExpressions.nearestCentroids(col("cv"), centroids, 1), 1))
-        .withColumn("pq", PqExpressions.pqEncodeMicro(col("vq"), cb))
-        .select(col("neighbor_id"), col("pq.codes").as("codes"),
-          col("pq.err").as("err"), col("bucket"))
-        .persist()
-      encoded.select(col("neighbor_id"), col("codes"), col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"${appDir.getPath}/data")
-      val st = encoded.agg(count(lit(1)), sum(col("err"))).head()
+      val encoded = encode(c, KMeansIVF.readCentroids(dir), readCodebooks(dir)).persist()
+      val st = writeEncoded(encoded, data)
       encoded.unpersist()
-      val (bn, bs) = (st.getLong(0), st.getLong(1))
-
-      // running totals = base stats + committed fragments (excluding self)
-      val frags = KMeansIVF.dataPaths(dir).drop(1)
-        .map(p => java.nio.file.Paths.get(p).getParent)
-        .filterNot(_.getFileName.toString == batchId)
-        .map(p => readStats(p.resolve("stats.json")))
-      val base = readStats(statsPath)
-      val (pn, ps) = (base._1 + frags.map(_._1).sum, base._2 + frags.map(_._2).sum)
+      st
+    } { case ((pn, ps), (bn, bs)) =>
       require(pn > 0 && bn > 0 && ps >= 0 && bs >= 0,
         s"drift gate needs positive counts, got prev=($pn,$ps) batch=($bn,$bs)")
       // +1-smoothed sums: ZERO quantization error is a legitimate state
@@ -316,58 +236,17 @@ object IvfPq {
       // At realistic error sums (~1e14 micro²) the +1 is far below the
       // basis-point resolution.
       val bp = (BigInt(bs + 1) * pn * 10000 / (BigInt(ps + 1) * bn)).toLong
-      val v = AppendResult(pn, bn, ps, bs, bp, bp > 20000)
-      java.nio.file.Files.writeString(appDir.toPath.resolve("stats.json"),
-        s"""{"n":$bn,"sumErr":$bs}""")
-      java.nio.file.Files.writeString(appDir.toPath.resolve("result.json"),
-        s"""{"nPrev":${v.nPrev},"nBatch":${v.nBatch},"prevSumErr":${v.prevSumErr},""" +
-          s""""batchSumErr":${v.batchSumErr},"driftBp":${v.driftBp},"rebuild":${v.rebuild}}""")
-      // the atomic commit point: everything above is invisible until this
-      require(graft.sources.LshIndex.casCreate(doneMarker.toPath),
-        s"impossible: $doneMarker already existed under append.lock")
-      v
-    } finally java.nio.file.Files.deleteIfExists(lock)
-  }
+      AppendResult(pn, bn, ps, bs, bp, bp > 20000)
+    }
 
   /** Fold the base tree + every committed append into a FRESH index at
-    * `outDir` (compaction-as-replace — the [[KMeansIVF.compactAppends]]
-    * posture: the source is never modified, readers are undisturbed, the
-    * caller repoints when ready). The centroid/codebook generation carries
-    * over unchanged, so probes against `outDir` are IDENTICAL; `stats.json`
-    * absorbs the fragments so drift baselines carry forward exactly. */
+    * `outDir` ([[IndexDir.compact]] — the [[KMeansIVF.compactAppends]]
+    * posture). The centroid/codebook generation carries over unchanged,
+    * so probes against `outDir` are IDENTICAL; `stats.json` absorbs the
+    * fragments so drift baselines carry forward exactly. */
   def compactAppends(spark: org.apache.spark.sql.SparkSession,
-                     dir: String, outDir: String): Unit = {
-    val src = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
-    val dst = java.nio.file.Paths.get(outDir).toAbsolutePath.normalize
-    require(src != dst && !dst.startsWith(src) && !src.startsWith(dst),
-      s"compactAppends target $dst must be disjoint from the source index $src")
-    val lock = java.nio.file.Paths.get(s"$dir/append.lock")
-    if (!graft.sources.LshIndex.casCreate(lock)) throw new IllegalStateException(
-      s"rival append/rebuild/compaction in progress on $dir (append.lock)")
-    try {
-      requireReady(dir)
-      val roots = KMeansIVF.dataPaths(dir)
-      val frags = roots.drop(1).map(p =>
-        readStats(java.nio.file.Paths.get(p).getParent.resolve("stats.json")))
-      val base = readStats(java.nio.file.Paths.get(s"$dir/stats.json"))
-      val n = base._1 + frags.map(_._1).sum
-      val se = base._2 + frags.map(_._2).sum
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-      roots.map(p => spark.read.parquet(p)).reduce(_ unionByName _)
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$outDir/data")
-      // sidecars LAST, `_ready` dead last: presence = completeness
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/centroids.json"),
-        java.nio.file.Paths.get(s"$outDir/centroids.json"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/codebooks.json"),
-        java.nio.file.Paths.get(s"$outDir/codebooks.json"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      atomicWrite(s"$outDir/stats.json", s"""{"n":$n,"sumErr":$se}""")
-      atomicWrite(s"$outDir/_ready", "1")
-    } finally java.nio.file.Files.deleteIfExists(lock)
-  }
+                     dir: String, outDir: String): Unit =
+    IndexDir.compact(spark, dir, outDir, Seq("centroids.json", "codebooks.json"), "sumErr")
 
   /** DuckDB replay of probe-after-append: BOTH fits learned on the BASE
     * subset only, the whole table (base + batch) assigned to those coarse

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextHash
+import graft.sources.IndexDir
 
 /** IVF ANN with a LEARNED coarse quantizer: k-means centroids fitted with
   * driver-side Lloyd iterations on a deterministic hash-sample, replacing
@@ -224,33 +225,13 @@ object KMeansIVF {
     * level saving, the layout you want under 100 TB of embeddings.
     * Also records the build's assignment-quality statistic (row count +
     * Σ floor(cos·10⁶ + 0.5) to the assigned centroid) as `stats.json` —
-    * the baseline [[appendIndex]]'s drift gate compares against. A
-    * rebuild clears any previous appends (they belonged to the old
-    * centroid generation). */
+    * the baseline [[appendIndex]]'s drift gate compares against. Runs
+    * inside the [[IndexDir.rebuild]] scope, which clears any previous
+    * appends (they belonged to the old centroid generation). */
   def writeIndex(
       corpus: DataFrame, idCol: String, vecCol: String, dir: String,
-      nClusters: Int = 10, iters: Int = 4, sampleCap: Long = 10000): Array[Array[Double]] = {
-    // a rebuild and an append racing corrupts silently (an append reading
-    // the OLD centroids could commit its _done into the NEW generation
-    // after the cleanup below) — both paths serialize on append.lock
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val lock = java.nio.file.Paths.get(s"$dir/append.lock")
-    if (!graft.sources.LshIndex.casCreate(lock)) throw new IllegalStateException(
-      s"an append or rebuild is in flight on $dir (append.lock) — retry later " +
-        "or remove the lock if its owner is known dead")
-    try {
-      // readiness revoked FIRST (the IvfPq sidecar discipline): the data
-      // overwrite and the centroids write below are two separate steps, and
-      // a crash between them would leave NEW bucket assignments served
-      // against the OLD centroids.json — silently wrong neighbors. With
-      // `_ready` gone, every read path refuses until the rebuild completes.
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$dir/_ready"))
-      // stale-generation cleanup: appends assigned against the old
-      // centroids must never survive a rebuild, and a missing stats.json
-      // makes appendIndex refuse loudly if this rebuild crashes mid-way
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$dir/stats.json"))
-      val appendsDir = new java.io.File(s"$dir/appends")
-      if (appendsDir.exists()) graft.TempDirs.deleteRecursively(appendsDir)
+      nClusters: Int = 10, iters: Int = 4, sampleCap: Long = 10000): Array[Array[Double]] =
+    IndexDir.rebuild(dir) {
       val c = corpus.select(
         col(idCol).as("neighbor_id"), VectorOps.asDouble(col(vecCol)).as("cv"))
       val sampleMod = sampleModFor(c.count(), sampleCap)
@@ -264,15 +245,10 @@ object KMeansIVF {
       assigned.write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/data")
       val st = assigned.agg(count(lit(1)), sum(microCol(centroids))).head()
       assigned.unpersist()
-      val json = centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/centroids.json"), json)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/stats.json"),
-        s"""{"n":${st.getLong(0)},"sumMicro":${st.getLong(1)}}""")
-      // readiness restored LAST, after data AND both sidecars agree
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/_ready"), "1")
-      centroids
-    } finally java.nio.file.Files.deleteIfExists(lock)
-  }
+      (centroids, Seq(
+        "centroids.json" -> centroids.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"),
+        "stats.json" -> s"""{"n":${st.getLong(0)},"sumMicro":${st.getLong(1)}}"""))
+    }
 
   /** Portably-rounded micro-unit assignment cosine of a `(cv, bucket)`
     * row to its own centroid: `floor(cos·10⁶ + 0.5)` — floor and IEEE
@@ -312,182 +288,48 @@ object KMeansIVF {
     AppendResult(pn, bn, ps, bs, bp, bp < 5000 || bp > 20000)
   }
 
-  /** Parse an append-protocol stats fragment `{"n":…,"<sumKey>":…}` —
-    * ONE parser for every index family's sidecars (KMeansIVF/NswGraph use
-    * `sumMicro`, IvfPq `sumErr`): the protocol must never fork, a format
-    * change in one family's writer with a stale copy of this parser in
-    * another would surface only as a crash on replay. */
-  private[operators] def readStats(
-      path: java.nio.file.Path, sumKey: String = "sumMicro"): (Long, Long) = {
-    val s = java.nio.file.Files.readString(path)
-    val m = ("""\{"n":(-?\d+),"""" + sumKey + """":(-?\d+)\}""").r
-    s.trim match {
-      case m(n, sm) => (n.toLong, sm.toLong)
-      case other => throw new IllegalStateException(s"unparseable stats sidecar $path: $other")
-    }
-  }
-
-  /** Every committed data root of the index: the base build plus each
-    * append whose `_done` marker landed (an append without the marker is
-    * invisible — crash-atomic visibility, the SnapshotTable manifest idea
-    * at file-tree granularity). */
-  private[operators] def dataPaths(dir: String): Seq[String] = {
-    val appends = new java.io.File(s"$dir/appends")
-    val done =
-      if (!appends.isDirectory) Seq.empty
-      else appends.listFiles().toSeq
-        .filter(f => new java.io.File(f, "_done").exists())
-        .map(f => s"${f.getPath}/data").sorted
-    s"$dir/data" +: done
-  }
-
   /** Append a batch of NEW vectors to a persisted index without refitting:
     * the batch is assigned to the EXISTING centroids map-side and lands
-    * bucket-partitioned under `appends/<batchId>/`, committed by an atomic
-    * `_done` marker — a crash before the marker leaves the append
-    * invisible and a retry with the same `batchId` wipes the partial tree
-    * and redoes it; a retry AFTER the marker is a no-op that just
-    * recomputes the result from the committed stats fragment. Appends
-    * serialize on `append.lock` (rival-worker TOCTOU — the
-    * LshIndex/HammingIndex protocol).
+    * bucket-partitioned through the [[IndexDir.append]] batch protocol
+    * (`appends/<batchId>/`, `_done` commit, idempotent replay, crashed
+    * partials wiped).
     *
     * The DRIFT GATE is what makes append-without-refit honest: centroids
     * fitted on yesterday's corpus quietly degrade as the distribution
     * moves, so each append compares its mean assigned-cosine against the
     * index's running mean (base build + previously committed appends,
     * summed from per-append stats fragments — no global mutable state,
-    * no corpus rescan) and flags `rebuild` at >10% deviation. */
+    * no corpus rescan) and flags `rebuild` outside [5000, 20000] bp. */
   def appendIndex(
       batch: DataFrame, idCol: String, vecCol: String, dir: String,
-      batchId: String): AppendResult = {
-    require(!batchId.contains("/") && batchId.nonEmpty, s"bad batchId '$batchId'")
-    val lock = java.nio.file.Paths.get(s"$dir/append.lock")
-    if (!graft.sources.LshIndex.casCreate(lock)) throw new IllegalStateException(
-      s"rival append or rebuild in progress on $dir (append.lock exists); " +
-        "retry later or remove the lock if its owner is known dead")
-    try {
-      // INSIDE the lock: a rival rebuild can no longer yank stats.json /
-      // centroids between this check and the writes below
-      val statsPath = java.nio.file.Paths.get(s"$dir/stats.json")
-      require(java.nio.file.Files.exists(statsPath),
-        s"IVF index at $dir has no stats sidecar — the build predates the " +
-          "append-capable writeIndex or crashed mid-write; rebuild the index")
-      val appDir = new java.io.File(s"$dir/appends/$batchId")
-      val doneMarker = new java.io.File(appDir, "_done")
-      def totals(excluding: String): (Long, Long) = {
-        val frags = dataPaths(dir).drop(1) // committed appends only
-          .map(p => java.nio.file.Paths.get(p).getParent)
-          .filterNot(_.getFileName.toString == excluding)
-          .map(p => readStats(p.resolve("stats.json")))
-        val base = readStats(statsPath)
-        (base._1 + frags.map(_._1).sum, base._2 + frags.map(_._2).sum)
-      }
-      def verdict(prev: (Long, Long), batchStats: (Long, Long)): AppendResult =
-        driftVerdict(prev._1, prev._2, batchStats._1, batchStats._2)
-      if (doneMarker.exists()) {
-        // idempotent replay of a committed append: return the ORIGINAL
-        // verdict verbatim (persisted at commit time — recomputing against
-        // totals would shift once LATER appends land and could flip the
-        // rebuild decision on an at-least-once runner's retry)
-        return readResult(appDir.toPath.resolve("result.json"))
-      }
-      if (appDir.exists()) graft.TempDirs.deleteRecursively(appDir) // crashed partial
+      batchId: String): AppendResult =
+    IndexDir.append(dir, batchId, "sumMicro", AppendResult) { data =>
       val centroids = readCentroids(dir)
       val c = batch.select(
         col(idCol).as("neighbor_id"), VectorOps.asDouble(col(vecCol)).as("cv"))
       val assigned = assignBuckets(c, centroids).persist()
-      assigned.write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"${appDir.getPath}/data")
+      assigned.write.mode("overwrite").partitionBy("bucket").parquet(data)
       val st = assigned.agg(count(lit(1)), sum(microCol(centroids))).head()
       assigned.unpersist()
-      val batchStats = (st.getLong(0), st.getLong(1))
-      val prev = totals(excluding = batchId)
-      java.nio.file.Files.writeString(appDir.toPath.resolve("stats.json"),
-        s"""{"n":${batchStats._1},"sumMicro":${batchStats._2}}""")
-      val v = verdict(prev, batchStats)
-      writeResult(appDir.toPath.resolve("result.json"), v)
-      // the atomic commit point: everything above is invisible until this
-      require(graft.sources.LshIndex.casCreate(doneMarker.toPath),
-        s"impossible: $doneMarker already existed under append.lock")
-      v
-    } finally java.nio.file.Files.deleteIfExists(lock)
-  }
+      (st.getLong(0), st.getLong(1))
+    } { case ((pn, ps), (bn, bs)) => driftVerdict(pn, ps, bn, bs) }
 
   /** Fold the base tree + every committed append into a FRESH index at
     * `outDir` — the small-file compaction of the append lifecycle (daily
     * appends accumulate one subtree each; probes union them all, and at
-    * some point the union's file count costs more than one rewrite).
-    * Compaction-as-replace, the [[graft.sources.SnapshotTable]]
-    * philosophy: the source index is never modified (an in-place
-    * directory swap has an unrepairable crash window between its two
-    * renames), so readers of `dir` are undisturbed and the caller
-    * repoints to `outDir` when ready. Runs under the SOURCE's
-    * `append.lock` so the fold set is stable; the centroid generation
-    * carries over unchanged, so probes against `outDir` are IDENTICAL to
-    * probes against the uncompacted source (spec-proven). `stats.json`
-    * absorbs the fragments, so drift baselines carry forward exactly; a
-    * crash mid-write leaves `outDir` without its stats/centroids
-    * sidecars, which every reader and appendIndex refuse loudly. */
+    * some point the union's file count costs more than one rewrite). See
+    * [[IndexDir.compact]]: the source is never modified, the centroid
+    * generation carries over unchanged, so probes against `outDir` are
+    * IDENTICAL to probes against the uncompacted source (spec-proven). */
   def compactAppends(spark: org.apache.spark.sql.SparkSession,
-                     dir: String, outDir: String): Unit = {
-    // outDir == dir (or nested either way) would let the mode("overwrite")
-    // of $outDir/data clobber the source while the reduce-union lazily
-    // reads it — the documented crash story ("outDir left without
-    // sidecars") silently becomes data loss on the LIVE index
-    val src = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
-    val dst = java.nio.file.Paths.get(outDir).toAbsolutePath.normalize
-    require(src != dst && !dst.startsWith(src) && !src.startsWith(dst),
-      s"compactAppends target $dst must be disjoint from the source index $src")
-    val lock = java.nio.file.Paths.get(s"$dir/append.lock")
-    if (!graft.sources.LshIndex.casCreate(lock)) throw new IllegalStateException(
-      s"rival append/rebuild/compaction in progress on $dir (append.lock)")
-    try {
-      val roots = dataPaths(dir)
-      val frags = roots.drop(1).map(p =>
-        readStats(java.nio.file.Paths.get(p).getParent.resolve("stats.json")))
-      val base = readStats(java.nio.file.Paths.get(s"$dir/stats.json"))
-      val n = base._1 + frags.map(_._1).sum
-      val sm = base._2 + frags.map(_._2).sum
-      roots.map(p => spark.read.parquet(p)).reduce(_ unionByName _)
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$outDir/data")
-      // sidecars LAST: their presence is the completeness signal
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/centroids.json"),
-        java.nio.file.Paths.get(s"$outDir/centroids.json"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/stats.json"),
-        s"""{"n":$n,"sumMicro":$sm}""")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/_ready"), "1")
-    } finally java.nio.file.Files.deleteIfExists(lock)
-  }
-
-  private[operators] def writeResult(path: java.nio.file.Path, v: AppendResult): Unit =
-    java.nio.file.Files.writeString(path,
-      s"""{"nPrev":${v.nPrev},"nBatch":${v.nBatch},"prevSumMicro":${v.prevSumMicro},""" +
-        s""""batchSumMicro":${v.batchSumMicro},"driftBp":${v.driftBp},"rebuild":${v.rebuild}}""")
-
-  private[operators] def readResult(path: java.nio.file.Path): AppendResult = {
-    val s = java.nio.file.Files.readString(path).trim
-    val m = ("""\{"nPrev":(-?\d+),"nBatch":(-?\d+),"prevSumMicro":(-?\d+),""" +
-      """"batchSumMicro":(-?\d+),"driftBp":(-?\d+),"rebuild":(true|false)\}""").r
-    s match {
-      case m(pn, bn, ps, bs, bp, rb) =>
-        AppendResult(pn.toLong, bn.toLong, ps.toLong, bs.toLong, bp.toLong, rb.toBoolean)
-      case other => throw new IllegalStateException(
-        s"unparseable append result sidecar $path: $other")
-    }
-  }
+                     dir: String, outDir: String): Unit =
+    IndexDir.compact(spark, dir, outDir, Seq("centroids.json"), "sumMicro")
 
   def readCentroids(dir: String): Array[Array[Double]] = {
     // `_ready` gate: a (re)build that crashed between the data overwrite
     // and the centroids write would otherwise serve NEW bucket assignments
-    // against the OLD centroids — silently wrong neighbors (appendIndex's
-    // missing-stats refusal never covered the pure read paths)
-    require(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/_ready")),
-      s"IVF index at $dir has no _ready marker — a (re)build was interrupted " +
-        "before its sidecars were committed; rebuild the index")
+    // against the OLD centroids — silently wrong neighbors
+    IndexDir.requireReady(dir)
     val json = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/centroids.json"))
     // minimal parser for the [[d,d,...],[...]] layout written above
     json.trim.stripPrefix("[[").stripSuffix("]]").split("\\],\\[")
@@ -521,7 +363,7 @@ object KMeansIVF {
     // one read per committed root (base + _done appends), unioned: a
     // multi-path read would demand a single discovery root, and partition
     // filters push through the Union into every child scan anyway
-    val data = dataPaths(indexDir).map(p => spark.read.parquet(p))
+    val data = IndexDir.dataPaths(indexDir).map(p => spark.read.parquet(p))
       .reduce(_ unionByName _)
       .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
     broadcast(probed)

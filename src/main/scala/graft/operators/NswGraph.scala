@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextHash
+import graft.sources.IndexDir
 
 /** Graph-based ANN routing — a navigable-small-world (NSW / HNSW-family)
   * layer over the embedding corpus (Malkov & Yashunin 2018, simplified to
@@ -254,34 +255,14 @@ object NswGraph {
     * partition pruning turns nprobe into a disk-level saving. */
   def writeIndex(corpus: DataFrame, idCol: String, vecCol: String,
                  dir: String, p: Params): Graph = {
-    // rebuilds serialize with appends on append.lock (the KMeansIVF
-    // protocol): an append attaching to the OLD hubs could otherwise
-    // commit its `_done` into the NEW generation after the cleanup below
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val lock = java.nio.file.Paths.get(s"$dir/append.lock")
-    if (!graft.sources.LshIndex.casCreate(lock)) throw new IllegalStateException(
-      s"an append or rebuild is in flight on $dir (append.lock) — retry later " +
-        "or remove the lock if its owner is known dead")
-    try {
-      // a REBUILD over an existing index first revokes readiness: a crash
-      // anywhere below leaves no `_ready`, and readers fail loudly instead
-      // of routing fresh bucket data with a stale/truncated sidecar graph
-      // (the IvfPq sidecar discipline); appends attached to the old hub
-      // generation are cleared
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$dir/_ready"))
-      val appendsDir = new java.io.File(s"$dir/appends")
-      if (appendsDir.exists()) graft.TempDirs.deleteRecursively(appendsDir)
+    // the IndexDir rebuild scope: lock, `_ready` revoked first, appends
+    // attached to the old hub generation cleared, sidecars atomic, `_ready`
+    // last — readers never route fresh bucket data with a stale graph
+    IndexDir.rebuild(dir) {
       val g = build(corpus, idCol, vecCol, p)
       val c = corpus.select(col(idCol).as("neighbor_id"),
         VectorOps.asDouble(col(vecCol)).as("cv"))
-      val attached = attach(c, g).persist() // data write + drift baseline agg
-      attached.write.mode("overwrite")
-        .partitionBy("bucket").parquet(s"$dir/data")
-      // the append DRIFT baseline: exact micro attachment cosine of the
-      // build corpus to its own hubs (bucket = index into the hub array,
-      // so hubVecs plays the centroid role in KMeansIVF.microCol exactly)
-      val st = attached.agg(count(lit(1)), sum(KMeansIVF.microCol(g.hubVecs))).head()
-      attached.unpersist()
+      val st = writeAttached(c, g, s"$dir/data")
       val sb = new StringBuilder
       sb ++= s"mod=${g.sampleMod}\n"
       sb ++= s"entries=${g.entries.mkString(",")}\n"
@@ -289,26 +270,29 @@ object NswGraph {
         val hid = g.hubIds(i)
         sb ++= s"hub=$hid:${g.hubVecs(i).mkString(",")}:${g.adj(hid).mkString(",")}\n"
       }
-      // sidecars land atomically (temp + same-dir atomic move — never torn),
-      // `_ready` only after ALL of them, so data and graph never disagree
-      atomicWrite(s"$dir/graph.txt", sb.toString)
-      atomicWrite(s"$dir/stats.json",
-        s"""{"n":${st.getLong(0)},"sumMicro":${st.getLong(1)}}""")
-      atomicWrite(s"$dir/_ready", "1")
-      g
-    } finally java.nio.file.Files.deleteIfExists(lock)
+      (g, Seq("graph.txt" -> sb.toString,
+        "stats.json" -> s"""{"n":${st._1},"sumMicro":${st._2}}"""))
+    }
+  }
+
+  /** Attach `(neighbor_id, cv)` rows to `g`'s hubs and write them
+    * bucket-partitioned to `path`; returns the drift statistic (count,
+    * Σ exact micro attachment cosine — bucket = index into the hub array,
+    * so hubVecs plays the centroid role in KMeansIVF.microCol exactly). */
+  private def writeAttached(c: DataFrame, g: Graph, path: String): (Long, Long) = {
+    val attached = attach(c, g).persist() // data write + drift stats agg
+    attached.write.mode("overwrite").partitionBy("bucket").parquet(path)
+    val st = attached.agg(count(lit(1)), sum(KMeansIVF.microCol(g.hubVecs))).head()
+    attached.unpersist()
+    (st.getLong(0), st.getLong(1))
   }
 
   /** Append a batch of NEW vectors to a persisted graph index without
     * rebuilding the routing layer — the [[KMeansIVF.appendIndex]]
     * machinery for graph ANN: the FROZEN hub set plays the centroid role,
     * each batch vector attaches to its nearest hub map-side
-    * ([[attach]] — no shuffle, no join), lands bucket-partitioned under
-    * `appends/<batchId>/` and becomes visible only at the atomic `_done`
-    * marker. Crash/retry/idempotence semantics are identical to the IVF
-    * path (partial trees wiped on same-batchId retry; committed replays
-    * return the ORIGINAL persisted verdict). Appends serialize with
-    * rebuilds and compactions on `append.lock`.
+    * ([[attach]] — no shuffle, no join) and lands through the
+    * [[IndexDir.append]] batch protocol.
     *
     * Drift = the batch's mean best-hub micro-cosine vs the index's
     * running mean (base + committed fragments), two-sided like the IVF
@@ -316,101 +300,25 @@ object NswGraph {
     * distribution moves, and past the halving point the routing layer —
     * not just the buckets — needs a rebuild. */
   def appendIndex(batch: DataFrame, idCol: String, vecCol: String,
-                  dir: String, batchId: String): KMeansIVF.AppendResult = {
-    require(!batchId.contains("/") && batchId.nonEmpty, s"bad batchId '$batchId'")
-    val lock = java.nio.file.Paths.get(s"$dir/append.lock")
-    if (!graft.sources.LshIndex.casCreate(lock)) throw new IllegalStateException(
-      s"rival append or rebuild in progress on $dir (append.lock exists); " +
-        "retry later or remove the lock if its owner is known dead")
-    try {
-      val g = readGraph(dir) // `_ready`-gated, inside the lock
-      val statsPath = java.nio.file.Paths.get(s"$dir/stats.json")
-      require(java.nio.file.Files.exists(statsPath),
-        s"NSW index at $dir has no stats sidecar — the build predates the " +
-          "append-capable writeIndex; rebuild the index")
-      val appDir = new java.io.File(s"$dir/appends/$batchId")
-      val doneMarker = new java.io.File(appDir, "_done")
-      if (doneMarker.exists())
-        return KMeansIVF.readResult(appDir.toPath.resolve("result.json"))
-      if (appDir.exists()) graft.TempDirs.deleteRecursively(appDir) // crashed partial
-
-      val c = batch.select(col(idCol).as("neighbor_id"),
-        VectorOps.asDouble(col(vecCol)).as("cv"))
-      val attached = attach(c, g).persist()
-      attached.write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"${appDir.getPath}/data")
-      val st = attached.agg(count(lit(1)), sum(KMeansIVF.microCol(g.hubVecs))).head()
-      attached.unpersist()
-      val (bn, bs) = (st.getLong(0), st.getLong(1))
-
-      val frags = KMeansIVF.dataPaths(dir).drop(1)
-        .map(p => java.nio.file.Paths.get(p).getParent)
-        .filterNot(_.getFileName.toString == batchId)
-        .map(p => KMeansIVF.readStats(p.resolve("stats.json")))
-      val base = KMeansIVF.readStats(statsPath)
-      val v = KMeansIVF.driftVerdict(
-        base._1 + frags.map(_._1).sum, base._2 + frags.map(_._2).sum, bn, bs)
-      java.nio.file.Files.writeString(appDir.toPath.resolve("stats.json"),
-        s"""{"n":$bn,"sumMicro":$bs}""")
-      KMeansIVF.writeResult(appDir.toPath.resolve("result.json"), v)
-      // the atomic commit point: everything above is invisible until this
-      require(graft.sources.LshIndex.casCreate(doneMarker.toPath),
-        s"impossible: $doneMarker already existed under append.lock")
-      v
-    } finally java.nio.file.Files.deleteIfExists(lock)
-  }
+                  dir: String, batchId: String): KMeansIVF.AppendResult =
+    IndexDir.append(dir, batchId, "sumMicro", KMeansIVF.AppendResult) { data =>
+      writeAttached(batch.select(col(idCol).as("neighbor_id"),
+        VectorOps.asDouble(col(vecCol)).as("cv")), readGraph(dir), data)
+    } { case ((pn, ps), (bn, bs)) => KMeansIVF.driftVerdict(pn, ps, bn, bs) }
 
   /** Fold the base tree + every committed append into a FRESH index at
-    * `outDir` (compaction-as-replace — the [[KMeansIVF.compactAppends]]
+    * `outDir` ([[IndexDir.compact]] — the [[KMeansIVF.compactAppends]]
     * posture). The graph sidecar carries over unchanged, so searches
     * against `outDir` are IDENTICAL; `stats.json` absorbs the fragments
     * so drift baselines carry forward exactly. */
-  def compactAppends(spark: SparkSession, dir: String, outDir: String): Unit = {
-    val src = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
-    val dst = java.nio.file.Paths.get(outDir).toAbsolutePath.normalize
-    require(src != dst && !dst.startsWith(src) && !src.startsWith(dst),
-      s"compactAppends target $dst must be disjoint from the source index $src")
-    val lock = java.nio.file.Paths.get(s"$dir/append.lock")
-    if (!graft.sources.LshIndex.casCreate(lock)) throw new IllegalStateException(
-      s"rival append/rebuild/compaction in progress on $dir (append.lock)")
-    try {
-      require(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/_ready")),
-        s"NSW index at $dir has no _ready marker — rebuild before compacting")
-      val roots = KMeansIVF.dataPaths(dir)
-      val frags = roots.drop(1).map(p =>
-        KMeansIVF.readStats(java.nio.file.Paths.get(p).getParent.resolve("stats.json")))
-      val base = KMeansIVF.readStats(java.nio.file.Paths.get(s"$dir/stats.json"))
-      val n = base._1 + frags.map(_._1).sum
-      val sm = base._2 + frags.map(_._2).sum
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-      roots.map(p => spark.read.parquet(p)).reduce(_ unionByName _)
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$outDir/data")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/graph.txt"),
-        java.nio.file.Paths.get(s"$outDir/graph.txt"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      atomicWrite(s"$outDir/stats.json", s"""{"n":$n,"sumMicro":$sm}""")
-      atomicWrite(s"$outDir/_ready", "1")
-    } finally java.nio.file.Files.deleteIfExists(lock)
-  }
-
-  /** Crash-safe small-file write: temp in the target dir + atomic move. */
-  private def atomicWrite(path: String, content: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    val tmp = java.nio.file.Files.createTempFile(p.getParent, ".tmp-", "")
-    java.nio.file.Files.writeString(tmp, content)
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  def compactAppends(spark: SparkSession, dir: String, outDir: String): Unit =
+    IndexDir.compact(spark, dir, outDir, Seq("graph.txt"), "sumMicro")
 
   /** Read the persisted routing layer back (hub order preserved — the
     * array index IS the attachment bucket id). Refuses an index whose
     * (re)build was interrupted before the sidecar committed. */
   def readGraph(dir: String): Graph = {
-    require(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/_ready")),
-      s"NSW index at $dir has no _ready marker — a (re)build was " +
-        "interrupted before its graph sidecar was committed; rebuild the index")
+    IndexDir.requireReady(dir)
     val lines = java.nio.file.Files.readAllLines(
       java.nio.file.Paths.get(s"$dir/graph.txt"))
     var mod = 0
@@ -460,7 +368,7 @@ object NswGraph {
     val probed = probeRows.toDF("query_id", "bucket")
     // one read per committed root (base + `_done` appends), unioned —
     // partition filters push through the Union into every child scan
-    val data = KMeansIVF.dataPaths(dir).map(p => spark.read.parquet(p))
+    val data = IndexDir.dataPaths(dir).map(p => spark.read.parquet(p))
       .reduce(_ unionByName _)
       .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
     broadcast(probed.join(qdf, "query_id"))
@@ -500,7 +408,7 @@ object NswGraph {
     val buckets = probeRows.map(_._2).distinct.sorted
     import spark.implicits._
     val probed = probeRows.toDF("query_id", "bucket")
-    val data = KMeansIVF.dataPaths(dir).map(p => spark.read.parquet(p))
+    val data = IndexDir.dataPaths(dir).map(p => spark.read.parquet(p))
       .reduce(_ unionByName _)
       .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
     broadcast(probed.join(qdf, "query_id"))

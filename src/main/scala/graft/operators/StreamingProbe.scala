@@ -114,11 +114,11 @@ object StreamingProbe {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          val before = KMeansIVF.dataPaths(indexDir).size - 1
+          val before = graft.sources.IndexDir.dataPaths(indexDir).size - 1
           val v = KMeansIVF.appendIndex(batch, idCol, vecCol, indexDir, s"s$batchId")
           onVerdict(v, batchId)
           if (compactEvery > 0) {
-            val committed = KMeansIVF.dataPaths(indexDir).size - 1
+            val committed = graft.sources.IndexDir.dataPaths(indexDir).size - 1
             // fire only when THIS batch advanced the count into a multiple:
             // a crash-replayed crossing batch is a marker no-op (count
             // unchanged) and must not re-signal the same crossing
@@ -143,11 +143,11 @@ object StreamingProbe {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          val before = KMeansIVF.dataPaths(indexDir).size - 1
+          val before = graft.sources.IndexDir.dataPaths(indexDir).size - 1
           val v = IvfPq.appendIndex(batch, idCol, vecCol, indexDir, s"s$batchId")
           onVerdict(v, batchId)
           if (compactEvery > 0) {
-            val committed = KMeansIVF.dataPaths(indexDir).size - 1
+            val committed = graft.sources.IndexDir.dataPaths(indexDir).size - 1
             // fire only when THIS batch advanced the count into a multiple:
             // a crash-replayed crossing batch is a marker no-op (count
             // unchanged) and must not re-signal the same crossing
@@ -172,11 +172,11 @@ object StreamingProbe {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          val before = KMeansIVF.dataPaths(indexDir).size - 1
+          val before = graft.sources.IndexDir.dataPaths(indexDir).size - 1
           val v = NswGraph.appendIndex(batch, idCol, vecCol, indexDir, s"s$batchId")
           onVerdict(v, batchId)
           if (compactEvery > 0) {
-            val committed = KMeansIVF.dataPaths(indexDir).size - 1
+            val committed = graft.sources.IndexDir.dataPaths(indexDir).size - 1
             // fire only when THIS batch advanced the count into a multiple:
             // a crash-replayed crossing batch is a marker no-op (count
             // unchanged) and must not re-signal the same crossing

@@ -25,40 +25,21 @@ import graft.functions.TextHash
   *
   * The geometry (bits, nParts) rides `meta.json` and probes must match it
   * (the BloomFileIndex lesson: a mismatched probe is silent false
-  * negatives). Rebuild = overwrite; for incremental ingest compose with
-  * the batch-claim discipline of [[LshIndex.append]].
+  * negatives). The directory protocol — rebuild scope, `append.lock`,
+  * `_ready` gate — is [[IndexDir]]'s; incremental ingest is [[append]]
+  * (in place, id-gated) or [[startDedupStream]].
   */
 object HammingIndex {
 
   /** Build (or rebuild) the index from `(idCol, fpCol)` fingerprints.
     * NULL fingerprints (malformed media) are skipped — they can never
-    * pair anyway.
-    *
-    * Holds `append.lock` for the whole rebuild (the [[LshIndex.write]]
-    * lock-closure): `IndexTxn.acquire` closes its race with [[append]]
-    * via this lock, so an unlocked rebuild would let a `SnapshotTxn.begin`
-    * land between the open-txn check and the overwrite, invisible to both
-    * sides — its committed pending (staged under the old corpus/geometry)
-    * would then survive into the new generation. */
+    * pair anyway. Runs inside the [[IndexDir.rebuild]] scope (lock,
+    * open-txn refusal, pending reset, `_ready` revoked first and written
+    * last; `meta.json` is the sidecar). */
   def write(fps: DataFrame, idCol: String, fpCol: String, dir: String,
             bits: Int, nParts: Int = 64): Unit = {
     require(bits % 4 == 0 && bits <= 60, s"bits=$bits must be a multiple of 4, <= 60")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val lock = java.nio.file.Paths.get(s"$dir/append.lock")
-    if (!LshIndex.casCreate(lock)) throw new IllegalStateException(
-      s"an append or rebuild is in flight on $dir (append.lock) — retry later " +
-        "or remove the lock if its owner is known dead")
-    try {
-      IndexTxn.requireNoOpenTxn(dir)
-      // a REBUILD starts a new generation: committed transactional pendings
-      // belong to the old corpus/geometry and must not survive into the
-      // live view (the KMeansIVF.writeIndex stale-append discipline)
-      IndexTxn.clearPendings(dir)
-      // revoke the ready marker BEFORE the first overwrite (the LshIndex
-      // discipline): a crash between the chunk overwrite and meta.json
-      // would leave mixed-generation geometry that probes would serve
-      // silently — readers refuse until a rebuild completes
-      java.nio.file.Files.deleteIfExists(readyPath(dir))
+    IndexDir.rebuild(dir) {
       // cluster by the partition column before the write (guide-§6
       // rebalance): one file per pk dir regardless of upstream
       // parallelism — without it every upstream task writes to every dir
@@ -74,37 +55,12 @@ object HammingIndex {
           lit(nParts.toLong)))
         .repartition(col("hb"))
         .write.mode("overwrite").partitionBy("hb").parquet(s"$dir/ids")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/meta.json"),
-        s"""{"bits":$bits,"nParts":$nParts}""")
-      java.nio.file.Files.createFile(readyPath(dir))
-      ()
-    } finally java.nio.file.Files.deleteIfExists(lock)
+      ((), Seq("meta.json" -> s"""{"bits":$bits,"nParts":$nParts}"""))
+    }
   }
 
-  private def readyPath(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(s"$dir/_ready")
-
-  /** [[LshIndex.markReady]]'s one-time migration for the Hamming index. */
-  def markReady(dir: String): Unit = {
-    val lock = java.nio.file.Paths.get(s"$dir/append.lock")
-    if (!LshIndex.casCreate(lock)) throw new IllegalStateException(
-      s"an append or rebuild is in flight on $dir (append.lock) — markReady later")
-    try {
-      require(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/meta.json")),
-        s"$dir has no meta.json — nothing to mark ready (build it with write())")
-      if (!java.nio.file.Files.exists(readyPath(dir)))
-        java.nio.file.Files.createFile(readyPath(dir))
-      ()
-    } finally java.nio.file.Files.deleteIfExists(lock)
-  }
-
-  /** [[LshIndex.requireReady]]'s contract for the Hamming index. */
-  private def requireReady(dir: String): Unit =
-    require(java.nio.file.Files.exists(readyPath(dir)),
-      s"index $dir has no _ready marker — a rebuild crashed mid-overwrite " +
-        "(chunk/id trees and meta.json may be mixed generations); re-run " +
-        "write() to rebuild, or markReady() if this is a known-consistent " +
-        "pre-gate index")
+  /** [[IndexDir.markReady]]'s one-time migration for the Hamming index. */
+  def markReady(dir: String): Unit = IndexDir.markReady(dir)
 
   /** Incrementally index a batch — the daily-ingest path: new chunk rows
     * land as additional files inside the existing `pk` partition
@@ -120,26 +76,18 @@ object HammingIndex {
     * Concurrency: the id-collision gate is check-then-act, so two
     * CONCURRENT appends overlapping on an id (different fingerprints)
     * would both pass it and corrupt the index. Appends therefore
-    * serialize on an index-wide `append.lock` (atomic create-new, the
-    * [[LshIndex.append]] protocol) held across the gate and both writes.
-    * A lock left by a crashed append fails the next one LOUDLY — remove
-    * `dir/append.lock` after confirming no rival append is live, then
-    * re-run (the chunks-before-ids retry convergence is unchanged). */
+    * serialize on the index's `append.lock` ([[IndexDir.withLock]]) held
+    * across the gate and both writes. */
   def append(spark: SparkSession, batch: DataFrame, idCol: String,
              fpCol: String, dir: String): Unit = {
     val meta = metaOf(dir)
     val bits = meta("bits"); val nParts = meta("nParts")
-    val lock = java.nio.file.Paths.get(s"$dir/append.lock")
-    if (!LshIndex.casCreate(lock)) throw new IllegalStateException(
-      s"another append holds $lock (in flight, or crashed while holding it) — " +
-        "concurrent appends would race the id-collision gate; if no rival is " +
-        "live, remove the lock file and re-run")
-    try {
+    IndexDir.withLock(IndexDir.appendLock(dir), "append") {
       // INSIDE the lock (IndexTxn.acquire checks append.lock after its own
       // CAS, so one side of any interleaving always sees the other)
       IndexTxn.requireNoOpenTxn(dir)
       appendLocked(spark, batch, idCol, fpCol, dir, bits, nParts)
-    } finally java.nio.file.Files.deleteIfExists(lock)
+    }
   }
 
   private def appendLocked(spark: SparkSession, batch: DataFrame,
@@ -246,7 +194,7 @@ object HammingIndex {
   }
 
   private def metaOf(dir: String): Map[String, Int] = {
-    requireReady(dir)
+    IndexDir.requireReady(dir)
     val txt = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$dir/meta.json"))
     """"(\w+)":(\d+)""".r.findAllMatchIn(txt)
@@ -259,7 +207,8 @@ object HammingIndex {
     * the index is modality-agnostic) is probed against the corpus,
     * near-dups of the corpus AND of smaller-id batchmates drop, and the
     * survivors are indexed. Exactly-once per batch via the same
-    * hard-link commit-marker + claim protocol as [[LshIndex]]. */
+    * hard-link commit-marker + claim ([[IndexDir.claimed]]) as
+    * [[LshIndex]]. */
   def startDedupStream(
       spark: SparkSession, stream: DataFrame, idCol: String, fpCol: String,
       dir: String, checkpointDir: String,
@@ -330,21 +279,7 @@ object HammingIndex {
       // candidate distinct() absorbs; duplicated ids would NOT be benign,
       // so ids go second, filtered against what the index already holds
       rows.write.mode("append").partitionBy("pk").parquet(s"$dir/chunks")
-      val claim = commits.resolve(s"claim-$batchId")
-      if (!LshIndex.casCreate(claim)) {
-        val deadline = System.nanoTime() + rivalWaitMs * 1000000L
-        while (!java.nio.file.Files.exists(marker) && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        if (java.nio.file.Files.exists(marker)) {
-          rows.unpersist()
-          return None // the rival finished this batch
-        }
-        throw new IllegalStateException(
-          s"batch $batchId is claimed by a rival worker that has not " +
-            s"completed within ${rivalWaitMs}ms — remove " + claim +
-            " after confirming no rival is live, then replay")
-      }
-      try {
+      val won = IndexDir.claimed(commits, batchId, marker, rivalWaitMs) {
         val newIds = rows.select(col("id")).distinct()
           .withColumn("hb", pmod(TextHash.md5Long(col("id").cast("string")),
             lit(nParts.toLong)))
@@ -353,15 +288,10 @@ object HammingIndex {
           .filter(col("hb").isin(hbs: _*)).select(col("id"))
         newIds.join(existing, Seq("id"), "left_anti")
           .write.mode("append").partitionBy("hb").parquet(s"$dir/ids")
-        rows.unpersist()
-        LshIndex.commitMarker(commits, marker)
-      } catch {
-        case e: Throwable =>
-          java.nio.file.Files.deleteIfExists(claim); throw e
       }
-      java.nio.file.Files.deleteIfExists(claim)
-      ()
-    } else LshIndex.commitMarker(commits, marker)
+      rows.unpersist()
+      if (!won) return None // the rival finished this batch
+    } else IndexDir.commitMarker(commits, marker)
     Some(survivors)
   }
 
@@ -417,7 +347,7 @@ object HammingIndex {
   def candidateDrift(spark: SparkSession, dir: String,
       batchPred: org.apache.spark.sql.Column,
       skewAboveBp: Long = 20000): DataFrame = {
-    requireReady(dir) // the only reader that never touches metaOf
+    IndexDir.requireReady(dir) // the only reader that never touches metaOf
     val ch = readLive(spark, dir, "chunks", chunksSchema)
       .select(col("id"), col("ci"), col("cv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -70,7 +70,7 @@ object IndexTxn {
     // re-checks open.txn INSIDE it; acquire checks append.lock AFTER its
     // own CAS — whichever interleaving occurs, one side always observes
     // the other and backs off
-    if (Files.exists(Paths.get(dir, "append.lock"))) {
+    if (Files.exists(IndexDir.appendLock(dir))) {
       Files.deleteIfExists(openTxnPath(dir))
       throw new SnapshotTable.ConcurrentCommitException(
         s"index $dir has an append in flight (append.lock) — cannot enroll")

@@ -42,35 +42,12 @@ import graft.operators.MinHashDedup
   */
 object LshIndex {
 
-  /** Build (or rebuild) the index at `dir` from the corpus.
-    *
-    * Holds `append.lock` for the whole rebuild: `IndexTxn.acquire` closes
-    * its race with [[append]] via this lock, and an UNLOCKED rebuild would
-    * reopen it — a `SnapshotTxn.begin` landing between the open-txn check
-    * and the overwrite would be invisible to both sides, letting a
-    * `stageAppend` gate against a half-rebuilt live view (its committed
-    * pending, staged under the OLD corpus, would then survive into the new
-    * generation until the next rebuild). Same lock-closure as append:
-    * acquire checks `append.lock` after its own CAS, we re-check
-    * `requireNoOpenTxn` inside the lock. */
+  /** Build (or rebuild) the index at `dir` from the corpus, inside the
+    * [[IndexDir.rebuild]] scope (lock, open-txn refusal, pending reset,
+    * `_ready` revoked first and written last; `meta.json` is the sidecar). */
   def write(corpus: DataFrame, idCol: String, shingleHashes: Column, dir: String,
-      cfg: MinHashDedup.Config = MinHashDedup.Config(), nParts: Int = 64): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val lock = java.nio.file.Paths.get(s"$dir/append.lock")
-    if (!casCreate(lock)) throw new IllegalStateException(
-      s"an append or rebuild is in flight on $dir (append.lock) — retry later " +
-        "or remove the lock if its owner is known dead")
-    try {
-      IndexTxn.requireNoOpenTxn(dir)
-      // rebuild = new generation: stale committed pendings must not be
-      // unioned into the new live view (see HammingIndex.write)
-      IndexTxn.clearPendings(dir)
-      // revoke the ready marker BEFORE the first overwrite (the KMeansIVF
-      // `_ready` discipline): a crash mid-rebuild — bands/docs from the new
-      // generation, meta.json still the old one — would otherwise serve a
-      // silently mismatched index; with the marker gone every reader
-      // refuses until a rebuild completes
-      java.nio.file.Files.deleteIfExists(readyPath(dir))
+      cfg: MinHashDedup.Config = MinHashDedup.Config(), nParts: Int = 64): Unit =
+    IndexDir.rebuild(dir) {
       val sh = MinHashDedup.hashed(corpus, idCol, shingleHashes)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val sig = MinHashDedup.withSignature(sh, cfg)
@@ -86,52 +63,13 @@ object LshIndex {
         .repartition(col("hb"))
         .write.mode("overwrite").partitionBy("hb").parquet(s"$dir/docs")
       sh.unpersist()
-      // meta.json second-to-last, marker last: the marker certifies that
-      // EVERYTHING it gates (data trees + geometry sidecar) is one
-      // consistent generation
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/meta.json"),
-        s"""{"numHashes":${cfg.numHashes},"bands":${cfg.bands},"nParts":$nParts}""")
-      java.nio.file.Files.createFile(readyPath(dir))
-      ()
-    } finally java.nio.file.Files.deleteIfExists(lock)
-  }
+      ((), Seq("meta.json" ->
+        s"""{"numHashes":${cfg.numHashes},"bands":${cfg.bands},"nParts":$nParts}"""))
+    }
 
-  private def readyPath(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(s"$dir/_ready")
-
-  /** ONE-TIME MIGRATION for an index written before the `_ready` gate
-    * existed: stamps the marker on a tree the OPERATOR knows is
-    * consistent. The gate cannot auto-stamp — a legacy-complete index
-    * and one whose rebuild crashed between the data overwrite and
-    * meta.json are indistinguishable on disk (both lack the marker, both
-    * have a meta.json) — so the judgment is deliberately manual. Takes
-    * `append.lock` so it can't race a live rebuild. */
-  def markReady(dir: String): Unit = {
-    val lock = java.nio.file.Paths.get(s"$dir/append.lock")
-    if (!casCreate(lock)) throw new IllegalStateException(
-      s"an append or rebuild is in flight on $dir (append.lock) — markReady later")
-    try {
-      require(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/meta.json")),
-        s"$dir has no meta.json — nothing to mark ready (build it with write())")
-      if (!java.nio.file.Files.exists(readyPath(dir)))
-        java.nio.file.Files.createFile(readyPath(dir))
-      ()
-    } finally java.nio.file.Files.deleteIfExists(lock)
-  }
-
-  /** Refuse to serve an index whose last rebuild did not complete: the
-    * `_ready` marker is revoked before [[write]]'s first overwrite and
-    * recreated only after meta.json lands, so its absence means the data
-    * trees and the geometry sidecar may be MIXED GENERATIONS — silent
-    * false negatives if served (a PRE-GATE index trips this too — an
-    * operator who knows it is consistent migrates with [[markReady]]).
-    * Every reader path funnels through [[metaOf]] (or calls this
-    * directly). */
-  private[sources] def requireReady(dir: String): Unit =
-    require(java.nio.file.Files.exists(readyPath(dir)),
-      s"index $dir has no _ready marker — a rebuild crashed mid-overwrite " +
-        "(data trees and meta.json may be mixed generations); re-run write() " +
-        "to rebuild before serving probes or appends")
+  /** [[IndexDir.markReady]]: the one-time `_ready` migration for an index
+    * written before the gate existed. */
+  def markReady(dir: String): Unit = IndexDir.markReady(dir)
 
   /** Incrementally index a new batch into an existing index — the daily
     * ingest path: the corpus is never re-shingled, only the batch pays
@@ -146,10 +84,8 @@ object LshIndex {
     *
     * Concurrency: the gate is check-then-write, so two CONCURRENT appends
     * could both pass it before either writes. Appends therefore serialize
-    * on an index-wide `append.lock` (atomic create-new). A lock left by a
-    * crashed append fails the next one LOUDLY — remove `dir/append.lock`
-    * after confirming no rival append is live, then re-run (the retry
-    * convergence below is unchanged).
+    * on the index's `append.lock` ([[IndexDir.withLock]]); a lock left by
+    * a crashed append fails the next one loudly.
     *
     * Crash ordering: bands are written before docs. A failure between the
     * two leaves band rows whose docs are missing — probes stay correct
@@ -166,12 +102,7 @@ object LshIndex {
       s"append cfg (${cfg.numHashes}/${cfg.bands}) != index meta " +
         s"(${meta("numHashes")}/${meta("bands")})")
     val nParts = meta("nParts")
-    val lock = java.nio.file.Paths.get(s"$dir/append.lock")
-    if (!casCreate(lock)) throw new IllegalStateException(
-      s"another append holds $lock (in flight, or crashed while holding it) — " +
-        "concurrent appends would race the collision gate; if no rival is " +
-        "live, remove the lock file and re-run")
-    try {
+    IndexDir.withLock(IndexDir.appendLock(dir), "append") {
       // INSIDE the lock (IndexTxn.acquire checks append.lock after its own
       // CAS, so one side of any interleaving always sees the other)
       IndexTxn.requireNoOpenTxn(dir)
@@ -205,14 +136,8 @@ object LshIndex {
         .write.mode("append").partitionBy("hb").parquet(s"$dir/docs")
       newDocs.unpersist()
       sh.unpersist()
-    } finally java.nio.file.Files.deleteIfExists(lock)
+    }
   }
-
-  /** Atomic create-new (the local fail-if-exists primitive): true iff this
-    * caller created the file, false if it already existed. */
-  private[graft] def casCreate(p: java.nio.file.Path): Boolean =
-    try { java.nio.file.Files.createFile(p); true }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
 
   /** Streaming near-dup ingest: each micro-batch is probed against the
     * index, near-dups (of the corpus AND of smaller-id batchmates) are
@@ -232,9 +157,9 @@ object LshIndex {
     * workers running the same batch (two drivers on one checkpoint — a
     * deployment error the commit marker alone cannot catch in time) could
     * both anti-join against the pre-write docs and both append. The docs
-    * section therefore runs under a per-batch `claim-<id>` marker (atomic
-    * create-new): the loser waits for the winner's completion marker and
-    * no-ops. A claim left by a CRASH inside the docs write fails the
+    * section therefore runs under a per-batch `claim-<id>` marker
+    * ([[IndexDir.claimed]]): the loser waits for the winner's completion
+    * marker and no-ops. A claim left by a CRASH inside the docs write fails the
     * replay LOUDLY — remove `dir/commits/claim-<id>` after confirming no
     * rival is live; every crash window BEFORE the claim still replays
     * automatically as before.
@@ -321,22 +246,7 @@ object LshIndex {
       // TOCTOU: without it, two workers on this batch both anti-join
       // against the PRE-write docs and both append). Held only across the
       // docs section; released after the completion marker lands.
-      val claim = commits.resolve(s"claim-$batchId")
-      if (!casCreate(claim)) {
-        val deadline = System.nanoTime() + rivalWaitMs * 1000000L
-        while (!java.nio.file.Files.exists(marker) && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        if (java.nio.file.Files.exists(marker)) {
-          sh.unpersist(); survivors.unpersist()
-          return None // the rival finished this batch — protocol working
-        }
-        throw new IllegalStateException(
-          s"batch $batchId is claimed by a rival worker that has not " +
-            s"completed within ${rivalWaitMs}ms (in flight, or crashed " +
-            "inside its docs write) — remove " + claim +
-            " after confirming no rival is live, then replay")
-      }
-      try {
+      val won = IndexDir.claimed(commits, batchId, marker, rivalWaitMs) {
         val newDocs = sh.select(col("id"), col("hashes"))
           .withColumn("hb", pmod(TextHash.md5Long(col("id").cast("string")), lit(nParts)))
         val hbs = newDocs.select(col("hb")).distinct().collect().map(_.getLong(0))
@@ -345,26 +255,14 @@ object LshIndex {
         newDocs.join(existing, Seq("id"), "left_anti")
           .repartition(col("hb"))
           .write.mode("append").partitionBy("hb").parquet(s"$dir/docs")
-        sh.unpersist()
-        commitMarker(commits, marker)
-      } catch {
-        // a FAILED (not crashed) docs write releases the claim so the
-        // replay converges unattended; a crash leaves it for the loud path
-        case e: Throwable =>
-          java.nio.file.Files.deleteIfExists(claim); throw e
       }
-      java.nio.file.Files.deleteIfExists(claim)
-    } else commitMarker(commits, marker)
+      sh.unpersist()
+      if (!won) {
+        survivors.unpersist()
+        return None // the rival finished this batch — protocol working
+      }
+    } else IndexDir.commitMarker(commits, marker)
     Some(survivors)
-  }
-
-  /** Atomic commit marker (lost race with a rival worker = already done). */
-  private[sources] def commitMarker(
-      commits: java.nio.file.Path, marker: java.nio.file.Path): Unit = {
-    val tmp = java.nio.file.Files.createTempFile(commits, ".tmp-", "")
-    try java.nio.file.Files.createLink(marker, tmp)
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    finally java.nio.file.Files.deleteIfExists(tmp)
   }
 
   /** All LIVE copies of an index subtree: the main tree plus committed
@@ -553,7 +451,7 @@ object LshIndex {
   }
 
   private def metaOf(dir: String): Map[String, Int] = {
-    requireReady(dir)
+    IndexDir.requireReady(dir)
     val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/meta.json"))
     "\"(\\w+)\":(\\d+)".r.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toInt).toMap
   }

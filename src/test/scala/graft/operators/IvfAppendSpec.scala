@@ -173,6 +173,14 @@ class IvfAppendSpec extends AnyFunSuite {
       KMeansIVF.indexTopK(q, idx, "vec_id", "embedding", k = 3, nprobe = 2)
     }
     assert(ex.getMessage.contains("_ready"))
+    // compaction must not launder the unready source into a ready target
+    val out = freshIdx("noready_out")
+    val exC = intercept[IllegalArgumentException] {
+      KMeansIVF.compactAppends(spark, idx, out)
+    }
+    assert(exC.getMessage.contains("_ready"))
+    assert(!new java.io.File(s"$out/_ready").exists(), "the target must not be stamped ready")
+    assert(!new java.io.File(s"$idx/append.lock").exists(), "the refusal must release the lock")
     // a completed rebuild restores service
     KMeansIVF.writeIndex(base, "vec_id", "embedding", idx, sampleCap = 100)
     assert(KMeansIVF.indexTopK(q, idx, "vec_id", "embedding", k = 3, nprobe = 2).count() > 0)
