@@ -20,9 +20,11 @@ import org.apache.spark.sql.functions._
   * FRONTIER (not the settled set, not the node set) against the fixed
   * checkpointed adjacency, a distinct, and an anti-join against settled —
   * work is proportional to the frontier's edge boundary, the minimum any
-  * BFS must touch. `localCheckpoint` truncates per-round lineage
-  * (KCore's measured 3x lesson) and the previous round's blocks are freed
-  * once the new frontier materializes.
+  * BFS must touch. Each round is one job, as in [[PinnedLoop.fixpoint]]
+  * (lazy checkpoint + one count, see its scaladoc), but Bfs runs its own
+  * loop: the last two levels feed each round and the result unions EVERY
+  * level, so no level's checkpoint may be released before the end — the
+  * opposite of fixpoint's free-the-previous-round rule.
   */
 object Bfs {
 
@@ -43,7 +45,7 @@ object Bfs {
       .localCheckpoint()
     // PinnedLoop scope (see its scaladoc): one driver round-trip per
     // frontier round; partitions derived from the checkpointed adjacency
-    PinnedLoop.scoped(adj.sparkSession, adj.count()) { _ =>
+    PinnedLoop.scoped(adj.sparkSession, adj.count()) {
       distancesLoop(adj, sources, idCol, maxDepth)
     }
   }
@@ -52,10 +54,7 @@ object Bfs {
                             idCol: String, maxDepth: Int): DataFrame = {
     val allNodes = adj.select(col("v")).distinct().localCheckpoint()
 
-    // LAZY checkpoint + count: the count is the ONE action per round — it
-    // materializes every checkpoint partition (count computes all of them)
-    // AND answers the loop's emptiness question, where the old eager
-    // checkpoint + isEmpty paid two driver round-trips per round
+    // lazy checkpoint + count = one action per round (see PinnedLoop)
     val seed = sources.select(col(idCol).as("v")).distinct()
       .localCheckpoint(false)
     var frontierN = seed.count()
@@ -121,7 +120,7 @@ object Bfs {
       .unionAll(e0.select(col("b").as("v"), col("a").as("w")))
       .localCheckpoint()
     // PinnedLoop scope — same rationale as [[distances]]
-    PinnedLoop.scoped(adj.sparkSession, adj.count()) { _ =>
+    PinnedLoop.scoped(adj.sparkSession, adj.count()) {
       pathCountsLoop(adj, sources, idCol, maxDepth)
     }
   }
@@ -129,7 +128,7 @@ object Bfs {
   private def pathCountsLoop(adj: DataFrame, sources: DataFrame,
                              idCol: String, maxDepth: Int): DataFrame = {
     val allNodes = adj.select(col("v")).distinct().localCheckpoint()
-    // lazy checkpoint + count = one action per round (see [[distances]])
+    // lazy checkpoint + count = one action per round (see PinnedLoop)
     val seed = sources.select(col(idCol).as("s"))
       .distinct()
       .select(col("s"), col("s").as("v"), lit(1L).as("sigma"))

@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions._
   * Scale design: each round is one shuffle (join edges to current labels +
   * groupBy min); rounds needed = component diameter, and dup-cluster
   * diameters are tiny in practice (most clusters are pairs or triangles, so
-  * 2–3 rounds). Labels are `localCheckpoint`ed per round to truncate lineage
-  * exactly like the org-hierarchy fixpoint (`ops/UltimateParent.scala`).
-  * The alternative large-diameter algorithm (pointer-doubling, O(log n)
-  * rounds) is not needed for dedup graphs; `maxIter` bounds pathology.
+  * 2–3 rounds). The rounds run on [[PinnedLoop.fixpoint]], like the
+  * org-hierarchy fixpoint (`ops/UltimateParent.scala`). Large-diameter
+  * graphs take [[contractive]], whose level count does not depend on the
+  * diameter; `maxIter` bounds pathology.
   *
   * Reference analogy: the reference's only graph op is the parent-closure
   * walk (`ror_scripts/get_ultimate_parent.py:55-90`); this is the undirected
@@ -35,51 +35,35 @@ object ConnectedComponents {
     // second full pipeline evaluation — measured +1.7 s on q52)
     val sym = und.union(und.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint()
-    // PinnedLoop scope (see its scaladoc)
-    PinnedLoop.scoped(edges.sparkSession, sym.count()) { _ =>
-      minLabelLoop(sym, maxIter)
-    }
-  }
-
-  private def minLabelLoop(sym: DataFrame, maxIter: Int): DataFrame = {
     // round 1 fused into initialization: propagating identity labels once
     // is just min(id, min(neighbor)) — one groupBy instead of an identity
     // checkpoint plus a full join round (2 fewer jobs on the common
-    // tiny-diameter dedup graphs)
-    // LAZY checkpoints + the convergence count as the ONE materializing
-    // job per round (the Bfs pattern): the filter-count computes every
-    // checkpoint partition, so eager + count's second job disappears.
-    // The init checkpoint folds into round 1's count job the same way.
-    var labels = sym.groupBy(col("a"))
-      .agg(min(col("b")).as("nb"))
-      .select(col("a").as("id"), least(col("a"), col("nb")).as("label"))
-      .localCheckpoint(false)
-    var changed = 1L
-    var iter = 1
-    while (changed > 0 && iter < maxIter) {
+    // tiny-diameter dedup graphs); the loop runs the other maxIter - 1
+    val run = PinnedLoop.fixpoint(edges.sparkSession, sym.count(), col("chg"), maxIter - 1) {
+      sym.groupBy(col("a"))
+        .agg(min(col("b")).as("nb"))
+        .select(col("a").as("id"), least(col("a"), col("nb")).as("label"))
+    } { labels =>
       val nbrMin = sym.join(labels, sym("b") === labels("id"))
         .groupBy(col("a")).agg(min(col("label")).as("nlabel"))
       // carry the per-row "label shrank" flag through the checkpoint so the
       // convergence check is a filter over checkpointed rows, not a second
       // join of consecutive label generations
-      val next = labels.as("l")
+      labels.as("l")
         .join(nbrMin, col("l.id") === nbrMin("a"), "left")
         .select(col("l.id").as("id"),
           least(col("l.label"), coalesce(col("nlabel"), col("l.label"))).as("label"),
           (col("nlabel") < col("l.label")).as("chg"))
-        .localCheckpoint(false)
-      changed = next.filter(col("chg")).count()
-      labels = next.select(col("id"), col("label"))
-      iter += 1
     }
     sym.unpersist() // before the require: don't leak the cache on failure
     // a silent non-converged return would hand every caller (q52's oracle
     // comparison, CorpusPipeline's keep-set) subtly wrong clusters — fail
-    // loudly instead; components deeper than maxIter need pointer doubling
-    require(changed == 0,
-      s"min-label propagation did not converge in $maxIter rounds " +
-        s"($changed labels still shrinking — component diameter exceeds maxIter)")
-    labels.select(col("id"), col("label").as("root"))
+    // loudly instead; components deeper than maxIter need [[contractive]]
+    require(run.converged,
+      s"min-label propagation did not converge in $maxIter rounds (labels " +
+        s"shrinking per round: ${run.pending.mkString(", ")} — component " +
+        "diameter exceeds maxIter)")
+    run.state.select(col("id"), col("label").as("root"))
   }
 
   /** INCREMENTAL maintenance — the daily-ingest form: given the previous
@@ -128,71 +112,6 @@ object ConnectedComponents {
     base2.unionByName(fresh)
   }
 
-  /** Min-label CC with POINTER JUMPING — O(log diameter) rounds, for
-    * LARGE-diameter graphs (spatial meshes, near-path graphs) where
-    * [[minLabel]]'s diameter-many rounds would dominate: a DBSCAN blob
-    * spanning 40 grid cells is a ~40-hop component, and 40 propagate
-    * rounds of shuffles is the scale failure, not the row count.
-    *
-    * Each round: (a) PROPAGATE — label := min(label, neighbor labels), one
-    * edge join + min agg; (b) JUMP — label := label(label), one self-join
-    * on the post-propagate labels. Reach doubles per round, so rounds =
-    * O(log diameter). Labels always hold ids of component members (init =
-    * min(id, neighbors); propagate mins over member labels; jump follows a
-    * member's label), and the fixpoint is stable under propagate ⇒ labels
-    * constant per component ⇒ that constant c satisfies c = label(c) ≤
-    * every member ⇒ c is the component minimum. Same loud non-convergence
-    * contract and per-round `localCheckpoint` lineage truncation as
-    * [[minLabel]]. */
-  def minLabelJumped(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    val Array(ca, cb) = edges.columns
-    val und = edges.select(col(ca).cast("long").as("a"), col(cb).cast("long").as("b"))
-    // eager checkpoint leaf — see [[minLabel]]'s persist-vs-checkpoint note
-    val sym = und.union(und.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint()
-    // PinnedLoop scope — same rationale as [[minLabel]]
-    PinnedLoop.scoped(edges.sparkSession, sym.count()) { _ =>
-      minLabelJumpedLoop(sym, maxIter)
-    }
-  }
-
-  private def minLabelJumpedLoop(sym: DataFrame, maxIter: Int): DataFrame = {
-    // lazy checkpoint + fused convergence count per round (see [[minLabel]])
-    var labels = sym.groupBy(col("a"))
-      .agg(min(col("b")).as("nb"))
-      .select(col("a").as("id"), least(col("a"), col("nb")).as("label"))
-      .localCheckpoint(false)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val prop = sym.join(labels, sym("b") === labels("id"))
-        .groupBy(col("a")).agg(min(col("label")).as("nl"))
-      val merged = labels.as("l")
-        .join(prop, col("l.id") === prop("a"), "left")
-        .select(col("l.id").as("id"),
-          least(col("l.label"), coalesce(col("nl"), col("l.label"))).as("lab1"),
-          col("l.label").as("old"))
-      // jump on the POST-propagate mapping; carry the round's "shrank" flag
-      // so convergence is a filter over checkpointed rows, not an extra join
-      val jump = merged.select(col("id").as("jid"), col("lab1").as("jl"))
-      val next = merged.as("m")
-        .join(jump, col("m.lab1") === col("jid"), "left")
-        .select(col("m.id").as("id"),
-          least(col("m.lab1"), coalesce(col("jl"), col("m.lab1"))).as("label"),
-          col("m.old").as("old"))
-        .withColumn("chg", col("label") < col("old"))
-        .localCheckpoint(false)
-      changed = next.filter(col("chg")).count()
-      labels = next.select(col("id"), col("label"))
-      iter += 1
-    }
-    sym.unpersist()
-    require(changed == 0,
-      s"jumped min-label propagation did not converge in $maxIter rounds " +
-        s"($changed labels still shrinking)")
-    labels.select(col("id"), col("label").as("root"))
-  }
-
   /** CONTRACTIVE min-label CC — the Kiveris-et-al. MapReduce-CC family:
     * per level, hash-partition the edge list and run an IN-MEMORY
     * union-find per partition (sound for ANY edge subset — partial merges
@@ -202,7 +121,7 @@ object ConnectedComponents {
     * the edge set fits `localCap` rows one single-task union-find
     * finishes connectivity exactly. Practical level count is 2–3 with
     * large per-level shrink, INDEPENDENT of graph diameter — a 50-hop
-    * DBSCAN blob that costs [[minLabelJumped]] ~log₂(50) shuffle rounds
+    * DBSCAN blob that costs [[minLabel]] ~50 shuffle rounds
     * contracts here in one local pass. Correctness: every per-partition
     * root is a component member; relabeling maps each original edge to a
     * label edge, so any original path maps to a label walk — components
@@ -228,7 +147,7 @@ object ConnectedComponents {
     var n = e.count()
     // PinnedLoop scope (see its scaladoc); level sizes only shrink, so the
     // initial count is the honest bound for the whole drain
-    PinnedLoop.scoped(spark, n) { _ =>
+    PinnedLoop.scoped(spark, n) {
     while (n > 0) {
       level += 1
       require(level <= maxLevels,
@@ -237,14 +156,14 @@ object ConnectedComponents {
       val parted =
         if (single) e.coalesce(1)
         else e.repartition(col("a"))
-      // LAZY checkpoints throughout the level (the Bfs pattern): each
-      // still cuts the plan to a constant-size RDD scan, but the level's
-      // ONE action — the surviving-edge count — materializes m and e
-      // together, where the eager form paid three jobs per level. On the
-      // final (single-partition) level there is NO count job, so that
-      // level's m — and the whole returned mapping chain — stays lazy and
-      // is first computed (and its checkpoint blocks cached) only by the
-      // caller's first action.
+      // LAZY checkpoints throughout the level: each still cuts the plan to
+      // a constant-size RDD scan, and a non-final level's ONE action — the
+      // surviving-edge count — computes m and e together, where the eager
+      // form paid three jobs per level. Nothing here ever computes the
+      // mapping: no count reads it, and the final (single-partition) level
+      // runs no action at all, so that level's m and the whole returned
+      // mapping chain stay lazy until the caller's first action computes
+      // them (and caches their checkpoint blocks).
       val m = parted.as[(Long, Long)]
         .mapPartitions(unionFindPartition)
         .toDF("id", "r")

@@ -18,9 +18,9 @@ import org.apache.spark.sql.functions._
   * Scale shape per round: one degree aggregate over surviving edges + two
   * semi-joins restricting the edge set — all key-partitioned shuffles,
   * O(diameter-like) round count (each round strictly shrinks the node
-  * set, so ≤ |V| rounds; in practice a handful). `localCheckpoint`
-  * truncates the per-round lineage like ConnectedComponents; exceeding
-  * `maxRounds` fails loudly rather than returning a half-peeled graph.
+  * set, so ≤ |V| rounds; in practice a handful). The rounds run on
+  * [[PinnedLoop.fixpoint]]; exceeding `maxRounds` fails loudly rather than
+  * returning a half-peeled graph.
   */
 object KCore {
 
@@ -36,24 +36,13 @@ object KCore {
       .filter(col("a") =!= col("b"))
       .distinct()
       .localCheckpoint()
-    // PinnedLoop scope (see its scaladoc): one driver round-trip per peel
-    // round instead of one per shuffle stage, partition count derived from
-    // the checkpointed edge count (cheap — counts cached blocks)
-    PinnedLoop.scoped(e0.sparkSession, e0.count()) { _ =>
-      decomposeLoop(e0, k, maxRounds)
-    }
-  }
-
-  private def decomposeLoop(e0: DataFrame, k: Int, maxRounds: Int): Result = {
-    // lazy + count: one init job, the same fusion as the loop below
-    var alive = e0.select(explode(array(col("a"), col("b"))).as("v"))
-      .distinct().localCheckpoint(false)
-    val drops = Seq.newBuilder[(Int, Long)]
-    var round = 0
-    // carried across rounds: one count action per round, not two
-    var nAlive = alive.count()
-    while (round < maxRounds) {
-      round += 1
+    // state: the round's node set, each node flagged with whether it drops
+    // this round — so the pending count IS the round's attrition
+    val run = PinnedLoop.fixpoint(e0.sparkSession, e0.count(), col("drop"), maxRounds) {
+      e0.select(explode(array(col("a"), col("b"))).as("v")).distinct()
+        .withColumn("drop", lit(false))
+    } { nodes =>
+      val alive = nodes.filter(!col("drop")).select(col("v"))
       // surviving edges = the FIXED checkpointed edge set restricted by
       // the current node set (two semi-joins) — re-restricting e0 each
       // round is cheaper than maintaining a shrinking edge relation,
@@ -65,28 +54,16 @@ object KCore {
       // them — they must be dropped AND counted, like the SQL replay)
       val deg = e.select(explode(array(col("a"), col("b"))).as("v"))
         .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-      val withDeg = alive.join(deg, Seq("v"), "left")
-        .select(col("v"), coalesce(col("deg"), lit(0L)).as("deg"))
-      // the per-round localCheckpoint on the NODE set is NOT optional:
-      // without lineage truncation round r's aggregate re-executes every
-      // prior round's chain (measured 3.0 → 8.6 s at only 4 rounds).
-      // LAZY checkpoint + count = ONE job per round (the Bfs pattern):
-      // count materializes every checkpoint partition AND answers the
-      // convergence question, where eager + count paid two jobs
-      val survivors = withDeg.filter(col("deg") >= k).select(col("v")).localCheckpoint(false)
-      val nAfter = survivors.count() // materializes the lazy checkpoint before the unpersist below
-      // free the PREVIOUS round's checkpoint blocks once the new node set is
-      // materialized (BpeVocab's lastCheckpoint pattern) — without this,
-      // block-manager memory accumulates one node-set per round per query
-      if (nAfter == nAlive) { alive.unpersist(); e0.unpersist(); return Result(survivors, drops.result()) }
-      drops += (round -> (nAlive - nAfter))
-      alive.unpersist()
-      alive = survivors
-      nAlive = nAfter
-      if (nAfter == 0) { e0.unpersist(); return Result(survivors, drops.result()) }
+      alive.join(deg, Seq("v"), "left")
+        .select(col("v"), (coalesce(col("deg"), lit(0L)) < k).as("drop"))
     }
-    throw new IllegalStateException(
+    e0.unpersist()
+    if (!run.converged) throw new IllegalStateException(
       s"k-core peel did not converge within $maxRounds rounds — " +
         "raise maxRounds or check the graph for pathological structure")
+    val attrition = run.pending.zipWithIndex.collect {
+      case (dropped, i) if dropped > 0 => (i + 1) -> dropped
+    }
+    Result(run.state.filter(!col("drop")).select(col("v")), attrition)
   }
 }

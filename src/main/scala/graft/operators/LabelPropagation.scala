@@ -38,7 +38,7 @@ object LabelPropagation {
     // PinnedLoop scope (see its scaladoc): the fixed-budget chain is one
     // action — static planning runs it as ONE job where AQE pays a
     // driver round-trip per shuffle stage of every round
-    PinnedLoop.scoped(adj.sparkSession, adj.count()) { _ =>
+    PinnedLoop.scoped(adj.sparkSession, adj.count()) {
       labelsLoop(adj, rounds)
     }
   }

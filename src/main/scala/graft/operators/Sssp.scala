@@ -22,10 +22,8 @@ import org.apache.spark.sql.functions._
   * Distances within <= maxRounds relaxations are exact (Bellman–Ford
   * invariant); nodes beyond the horizon report -1, keeping the Spark
   * fixpoint (which may stop early once the frontier drains) aligned with a
-  * fixed-depth SQL unroll — identical to the [[Bfs]] contract. The
-  * distance relation is localCheckpoint-ed per round (lineage truncation:
-  * KCore's measured 3x lesson) and the previous round's blocks are freed
-  * once the new one materializes.
+  * fixed-depth SQL unroll — identical to the [[Bfs]] contract. The rounds
+  * run on [[PinnedLoop.fixpoint]].
   *
   * PARTITIONING: everything the loop joins is hash-clustered on v at one
   * pinned, count-derived partition count — the adjacency once up front
@@ -50,99 +48,79 @@ object Sssp {
     // PinnedLoop scope (see its scaladoc): AQE off — every decision in
     // this loop is already pinned (merge/shuffle_hash hints + the
     // clustering assertion, which AssumeHashClusteredSpec proves under
-    // static planning) and adaptive execution only adds ~4 extra driver
-    // round-trips per round — plus a count-derived partition count shared
-    // by every loop exchange, so the candidate aggregation always matches
+    // static planning) — plus a count-derived partition count shared by
+    // every loop exchange, so the candidate aggregation always matches
     // the carried clustering (a mismatch would make EnsureRequirements
-    // re-shuffle the O(V) distance side every round). Measured on q199
-    // (12 rounds, sf0.1): 66 jobs / 5.6 s -> 22 jobs / 3.7 s.
-    PinnedLoop.scoped(spark, edges.count()) { _ =>
-      distancesImpl(edges, src, dst, weight, sources, idCol, maxRounds)
-    }
-  }
+    // re-shuffle the O(V) distance side every round). The adjacency and
+    // the final join are planned in the same scope as the rounds.
+    val rows = edges.count()
+    PinnedLoop.scoped(spark, rows) {
+      // Pin the loop's partition count: every relation the rounds join is
+      // clustered on v at this SAME count, so EnsureRequirements recognizes
+      // co-partitioning.
+      val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val e0 = edges
+        .select(least(col(src), col(dst)).as("a"),
+          greatest(col(src), col(dst)).as("b"), col(weight).as("wt"))
+        .filter(col("a") =!= col("b"))
+        .groupBy(col("a"), col("b")).agg(min(col("wt")).as("wt"))
+      // Hash-cluster the adjacency ON v ONCE (localCheckpoint carries the
+      // partitioning), so every round's adj ⋈ frontier runs with ZERO
+      // exchange on the O(E) side. Deliberately NOT sorted: the frontier
+      // join is forced shuffled-hash with the (bounded, improving-boundary)
+      // frontier as build side, so the adjacency is only ever STREAMED —
+      // a sorted adjacency would buy nothing and cost a full O(E log E)
+      // sort up front. Without the repartition, each round re-shuffled O(E).
+      val adj = e0.select(col("a").as("v"), col("b").as("w"), col("wt"))
+        .unionAll(e0.select(col("b").as("v"), col("a").as("w"), col("wt")))
+        .repartition(nParts, col("v"))
+        .localCheckpoint()
+      val allNodes = adj.select(col("v")).distinct().localCheckpoint()
 
-  private def distancesImpl(
-      edges: DataFrame, src: String, dst: String, weight: String,
-      sources: DataFrame, idCol: String, maxRounds: Int): DataFrame = {
-    val spark = edges.sparkSession
-    // Pin the loop's partition count: every relation the rounds join is
-    // clustered on v at this SAME count, so EnsureRequirements recognizes
-    // co-partitioning and AQE cannot coalesce one side out from under the
-    // other (REPARTITION_BY_NUM exchanges are never coalesced, and the
-    // checkpointed leaves are not exchanges at all).
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val e0 = edges
-      .select(least(col(src), col(dst)).as("a"),
-        greatest(col(src), col(dst)).as("b"), col(weight).as("wt"))
-      .filter(col("a") =!= col("b"))
-      .groupBy(col("a"), col("b")).agg(min(col("wt")).as("wt"))
-    // Hash-cluster the adjacency ON v ONCE (localCheckpoint carries the
-    // partitioning), so every round's adj ⋈ frontier runs with ZERO
-    // exchange on the O(E) side. Deliberately NOT sorted: the frontier
-    // join is forced shuffled-hash with the (bounded, improving-boundary)
-    // frontier as build side, so the adjacency is only ever STREAMED —
-    // a sorted adjacency would buy nothing and cost a full O(E log E)
-    // sort up front. Without the repartition, each round re-shuffled O(E).
-    val adj = e0.select(col("a").as("v"), col("b").as("w"), col("wt"))
-      .unionAll(e0.select(col("b").as("v"), col("a").as("w"), col("wt")))
-      .repartition(nParts, col("v"))
-      .localCheckpoint()
-    val allNodes = adj.select(col("v")).distinct().localCheckpoint()
-
-    // LAZY checkpoint + a count over the improved rows = ONE job per
-    // round (the Bfs pattern): the count computes every partition of the
-    // merged relation — materializing the checkpoint — AND answers the
-    // frontier-emptiness question, where the old eager checkpoint +
-    // isEmpty paid two driver round-trips per round
-    var ck = sources.select(col(idCol).as("v")).distinct()
-      .withColumn("dist", lit(0L))
-      .repartition(nParts, col("v")).sortWithinPartitions("v")
-      .localCheckpoint(false)
-    var dist = ck
-    var frontier = ck
-    var frontierN = ck.count()
-    var round = 0
-    while (round < maxRounds && frontierN > 0) {
-      round += 1
-      // shuffled-hash, frontier as build side: both sides are already
-      // hash(v)-clustered at nParts (zero exchange), the frontier hash
-      // table is bounded by the improving boundary, and the adjacency
-      // streams through unsorted — a sort-merge here would re-sort O(E)
-      // every round
-      val cand = adj.join(frontier.hint("shuffle_hash"), Seq("v"))
-        .select(col("w").as("v"), (col("dist") + col("wt")).as("nd"))
-        .groupBy(col("v")).agg(min(col("nd")).as("nd"))
-      // The round merge: dist arrives hash-clustered on v AND v-sorted
-      // from the previous round's checkpoint, so the forced sort-merge
-      // full-outer join exchanges and sorts ONLY the candidate side —
-      // nothing O(V) moves per round. The MERGE hint is load-bearing: a
-      // broadcast full-outer join would not leave unmatched build rows
-      // clustered, which the partitioning assertion below relies on. The
-      // SMJ's output IS hash(v)-clustered and v-sorted (see
-      // AssumeHashClustered's contract) — assert it so the checkpoint
-      // carries both into the next round instead of re-shuffling dist.
-      val merged = graft.plans.AssumeHashClustered(
-        dist.join(cand.hint("merge"), Seq("v"), "full")
-          .select(col("v"),
-            least(coalesce(col("dist"), lit(Long.MaxValue)),
-              coalesce(col("nd"), lit(Long.MaxValue))).as("dist"),
-            (col("nd").isNotNull &&
-              (col("dist").isNull || (col("nd") < col("dist")))).as("improved")),
-        "v").localCheckpoint(false)
-      frontierN = merged.filter(col("improved")).count()
-      val prevCk = ck
-      ck = merged
-      dist = merged.select(col("v"), col("dist"))
-      frontier = merged.filter(col("improved")).select(col("v"), col("dist"))
-      prevCk.unpersist()
+      // state: the distance relation, hash-clustered and sorted on v, with
+      // the rows whose distance improved last round flagged — the frontier
+      val run = PinnedLoop.fixpoint(spark, rows, col("improved"), maxRounds) {
+        sources.select(col(idCol).as("v")).distinct()
+          .select(col("v"), lit(0L).as("dist"), lit(true).as("improved"))
+          .repartition(nParts, col("v")).sortWithinPartitions("v")
+      } { state =>
+        val dist = state.select(col("v"), col("dist"))
+        val frontier = state.filter(col("improved")).select(col("v"), col("dist"))
+        // shuffled-hash, frontier as build side: both sides are already
+        // hash(v)-clustered at nParts (zero exchange), the frontier hash
+        // table is bounded by the improving boundary, and the adjacency
+        // streams through unsorted — a sort-merge here would re-sort O(E)
+        // every round
+        val cand = adj.join(frontier.hint("shuffle_hash"), Seq("v"))
+          .select(col("w").as("v"), (col("dist") + col("wt")).as("nd"))
+          .groupBy(col("v")).agg(min(col("nd")).as("nd"))
+        // The round merge: dist arrives hash-clustered on v AND v-sorted
+        // from the previous round's checkpoint, so the forced sort-merge
+        // full-outer join exchanges and sorts ONLY the candidate side —
+        // nothing O(V) moves per round. The MERGE hint is load-bearing: a
+        // broadcast full-outer join would not leave unmatched build rows
+        // clustered, which the partitioning assertion below relies on. The
+        // SMJ's output IS hash(v)-clustered and v-sorted (see
+        // AssumeHashClustered's contract) — assert it so the checkpoint
+        // carries both into the next round instead of re-shuffling dist.
+        graft.plans.AssumeHashClustered(
+          dist.join(cand.hint("merge"), Seq("v"), "full")
+            .select(col("v"),
+              least(coalesce(col("dist"), lit(Long.MaxValue)),
+                coalesce(col("nd"), lit(Long.MaxValue))).as("dist"),
+              (col("nd").isNotNull &&
+                (col("dist").isNull || (col("nd") < col("dist")))).as("improved")),
+          "v")
+      }
+      val dist = run.state.select(col("v"), col("dist"))
+      val out = allNodes.join(dist, Seq("v"), "left")
+        .select(col("v"), coalesce(col("dist"), lit(-1L)).as("dist"))
+        // seeds outside the graph still belong to the result (dist 0)
+        .unionAll(dist.join(allNodes, Seq("v"), "left_anti"))
+      val result = out.localCheckpoint() // materialize before freeing inputs
+      adj.unpersist(); allNodes.unpersist(); run.state.unpersist()
+      result
     }
-    val out = allNodes.join(dist, Seq("v"), "left")
-      .select(col("v"), coalesce(col("dist"), lit(-1L)).as("dist"))
-      // seeds outside the graph still belong to the result (dist 0)
-      .unionAll(dist.join(allNodes, Seq("v"), "left_anti"))
-    val result = out.localCheckpoint() // materialize before freeing inputs
-    adj.unpersist(); allNodes.unpersist(); ck.unpersist()
-    result
   }
 
   /** DuckDB replay over a caller-supplied `wedges(a, b, wt)` CTE:

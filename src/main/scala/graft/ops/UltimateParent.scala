@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.PinnedLoop
+
 /** Ultimate-parent resolution (reference ops G1/G2): follow `id → parent`
   * edges to the fixpoint root, per id.
   *
@@ -27,10 +29,10 @@ import org.apache.spark.sql.functions._
   *     `anc := anc(anc)` and `dist := dist + dist(anc)` via a single self
   *     equi-join, so the frontier depth DOUBLES per round:
   *     O(log2 maxDepth) ≈ 8 shuffles total for the reference's cap of 200,
-  *     regardless of row count — this is the 100 TB scale path.
-  *     `localCheckpoint` truncates lineage each round so the plan doesn't
-  *     grow exponentially. Cycle rows never settle and their `dist` doubles
-  *     past `maxDepth`, reproducing the depth-cap fallback exactly.
+  *     regardless of row count — this is the 100 TB scale path. The rounds
+  *     run on [[graft.operators.PinnedLoop.fixpoint]] (one job per round).
+  *     Cycle rows never settle and their `dist` doubles past `maxDepth`,
+  *     reproducing the depth-cap fallback exactly.
   *
   *  2. `resolveCollected`: collect the edge map to the driver and walk it —
   *     byte-faithful to the reference's in-memory dict (it collected
@@ -53,7 +55,7 @@ object UltimateParent {
       math.ceil(math.log(math.max(maxDepth, 2).toDouble) / math.log(2.0)).toInt + 2
 
     val selfRoot = col("id") === col("parent")
-    var state = edges
+    val init = edges
       .select(
         col("id"),
         col("parent").as("anc"),
@@ -61,9 +63,8 @@ object UltimateParent {
         selfRoot.as("settled"))
       .localCheckpoint()
 
-    var round  = 0
-    var active = state.filter(!col("settled") && col("dist") <= maxDepth).count()
-    while (active > 0 && round < maxRounds) {
+    val run = PinnedLoop.fixpoint(edges.sparkSession, init.count(),
+        !col("settled") && col("dist") <= maxDepth, maxRounds)(init) { state =>
       val hop = state.select(
         col("id").as("h_id"),
         col("anc").as("h_anc"),
@@ -76,7 +77,7 @@ object UltimateParent {
       val ancIsRoot  = col("h_settled") && col("h_dist") === 0L
       val ancMissing = col("h_id").isNull
       val frozen     = col("settled") || col("dist") > maxDepth
-      state = state
+      state
         .join(hop, state("anc") === col("h_id"), "left")
         .select(
           col("id"),
@@ -84,13 +85,11 @@ object UltimateParent {
           when(frozen, col("dist"))
             .otherwise(col("dist") + coalesce(col("h_dist"), lit(0L))).as("dist"),
           (frozen || ancMissing || ancIsRoot || col("h_settled")).as("settled"))
-        .localCheckpoint()
-      active = state.filter(!col("settled") && col("dist") <= maxDepth).count()
-      round += 1
     }
 
+    // rows unsettled at the round cap or past maxDepth fall back to self
     val resolved = col("settled") && col("dist") <= maxDepth
-    state.select(
+    run.state.select(
       col("id"),
       when(resolved, col("anc")).otherwise(col("id")).as("ultimate_parent"),
       (!resolved).as("capped"))
@@ -125,11 +124,4 @@ object UltimateParent {
       .map { id => val (up, capped) = walk(id); (id, up, capped) }
       .toDF("id", "ultimate_parent", "capped")
   }
-
-  /** Dispatch: distributed pointer-jumping unless the caller knows the graph
-    * is small enough to mirror the reference's collect-to-memory approach.
-    */
-  def resolve(edges: DataFrame, maxDepth: Int = 200, smallGraph: Boolean = false): DataFrame =
-    if (smallGraph) resolveCollected(edges, maxDepth)
-    else resolveDistributed(edges, maxDepth)
 }

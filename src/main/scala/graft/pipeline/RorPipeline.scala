@@ -30,7 +30,6 @@ object RorPipeline {
       dumpPath: String,
       warehouseDir: String,
       maxDepth: Int = 200,
-      smallGraph: Boolean = false,
       runDate: LocalDate = LocalDate.now(),
       // promote through sources/SnapshotTable instead of a plain overwrite:
       // K2 becomes an atomic versioned commit (readers mid-query keep their
@@ -80,7 +79,7 @@ object RorPipeline {
 
     // T2 + G1/G2: edges → ultimate-parent fixpoint.
     val edges  = ParentEdges.edges(records)
-    val rollup = UltimateParent.resolve(edges, cfg.maxDepth, cfg.smallGraph)
+    val rollup = UltimateParent.resolveDistributed(edges, cfg.maxDepth)
 
     // K6 warning channel: depth-capped / cyclic orgs fell back to self.
     // Bounded driver materialization: count distributed, sample via

@@ -38,7 +38,7 @@ object StreamingIngest {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           ParentEdges.requireUniqueIds(batch, "id")
-          val rollup = UltimateParent.resolve(ParentEdges.edges(batch), maxDepth)
+          val rollup = UltimateParent.resolveDistributed(ParentEdges.edges(batch), maxDepth)
           Enrich.withUltimateParent(batch, rollup.select("id", "ultimate_parent"))
             .write.mode(SaveMode.Overwrite).parquet(s"$stagingDir/batch_id=$batchId")
         }

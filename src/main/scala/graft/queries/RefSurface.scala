@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.PinnedLoop
 import graft.ops.{Enrich, ParentEdges, QualityGates, UltimateParent}
 
 /** The reference's own operator surface (SURVEY.md §2) expressed over the
@@ -195,27 +196,31 @@ object RefSurface {
     // Transitive ancestor ENUMERATION over the same hierarchy q05 rolls
     // up — every (node, ancestor, depth) pair, not just the root: the
     // lineage/bill-of-materials closure. Iterated frontier joins against
-    // the (self-loop-free) edge set, one localCheckpoint per level; the
-    // frontier shrinks to empty at the hierarchy depth, and roots stop
-    // naturally because self-loops are excluded from the edge relation.
-    // The oracle is a genuine RECURSIVE CTE — DuckDB's own fixpoint
-    // evaluator must agree with the iterated joins.
+    // the (self-loop-free) edge set on PinnedLoop.fixpoint: the state is
+    // the closure so far, its last level flagged `fresh` (the only pairs
+    // extended next round); the loop converges when a round adds no pair,
+    // at the hierarchy depth, and roots stop naturally because self-loops
+    // are excluded from the edge relation. A hierarchy deeper than 50
+    // levels (or a cycle) fails loudly rather than returning a truncated
+    // closure. The oracle is a genuine RECURSIVE CTE — DuckDB's own
+    // fixpoint evaluator must agree with the iterated joins.
     "q139_ancestor_closure" -> ((s, d) => {
       val e = hierarchyNodes(s, d)
         .filter(col("id") =!= col("parent")).localCheckpoint()
-      var frontier = e.select(col("id"), col("parent").as("ancestor"),
-        lit(1).as("depth")).localCheckpoint()
-      var acc = Vector(frontier)
-      var depth = 1
-      while (depth < 50 && !frontier.isEmpty) {
-        depth += 1
-        frontier = frontier
-          .join(e.select(col("id").as("ancestor"), col("parent").as("up")), "ancestor")
-          .select(col("id"), col("up").as("ancestor"), lit(depth).as("depth"))
-          .localCheckpoint()
-        if (!frontier.isEmpty) acc :+= frontier
+      val up = e.select(col("id").as("ancestor"), col("parent").as("up"))
+      val maxDepth = 50
+      val run = PinnedLoop.fixpoint(s, e.count(), col("fresh"), maxDepth) {
+        e.select(col("id"), col("parent").as("ancestor"), lit(1).as("depth"),
+          lit(true).as("fresh"))
+      } { closure =>
+        closure.select(col("id"), col("ancestor"), col("depth"), lit(false).as("fresh"))
+          .unionAll(closure.filter(col("fresh")).join(up, "ancestor")
+            .select(col("id"), col("up").as("ancestor"), (col("depth") + 1).as("depth"),
+              lit(true).as("fresh")))
       }
-      acc.reduce(_ unionAll _)
+      require(run.converged,
+        s"ancestor closure deeper than $maxDepth levels (or a parent cycle)")
+      run.state.select(col("id"), col("ancestor"), col("depth"))
     }),
 
     // HITS hubs/authorities over the same hierarchy as q81's PageRank —

@@ -59,25 +59,6 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       .filter { case (a, b) => a != b }
   }
 
-  test("minLabelJumped matches minLabel and the union-find reference") {
-    for (seed <- 1 to 4) {
-      val edges = randomEdges(seed, 60, 45)
-      val ref = reference(edges)
-      val jumped = ConnectedComponents.minLabelJumped(edges.toDF("a", "b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(jumped == ref, s"seed=$seed")
-    }
-  }
-
-  test("minLabelJumped converges in O(log d) rounds on a long path") {
-    // path of 300 nodes: diameter 299 >> default maxIter 25 of plain
-    // propagation, but jumping doubles reach per round (log2(300) ~ 9)
-    val edges = (0L until 299L).map(i => (i, i + 1))
-    val out = ConnectedComponents.minLabelJumped(edges.toDF("a", "b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out == (0L to 299L).map(_ -> 0L).toMap)
-  }
-
   test("contractive matches the reference on random graphs at every scale knob") {
     for (seed <- 1 to 4) {
       val edges = randomEdges(100 + seed, 80, 70)

@@ -1,0 +1,155 @@
+package graft.operators
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+import graft.ops.UltimateParent
+import graft.queries.RefSurface
+
+/** Every count-driven loop runs on [[PinnedLoop.fixpoint]]: on small graphs
+  * with a known round count, each ported operator (a) leaves the session
+  * conf exactly as it found it — also when it raises at its round cap — and
+  * (b) submits at most one job per round plus a small fixed set-up/consume
+  * cost, whatever the number of shuffle stages in a round. */
+class PinnedLoopSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  /** Fixed jobs outside the rounds: reading the input, the operator's eager
+    * input checkpoints and sizing count (run under the session's adaptive
+    * planning, so a count can take two jobs), its final join and
+    * checkpoint, and the test's own collect. */
+  private val setupJobs = 8
+
+  /** Jobs `body` submits. They are tagged with a job group; a marker job in
+    * the same group, submitted after `body`, tells when the listener has
+    * seen every earlier job (one listener sees events in order). */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"pinned-loop-spec-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        if (p.exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (p.exists(_.getProperty("spark.job.description") == "marker")) drained.countDown()
+          else jobs.incrementAndGet()
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "body")
+    try {
+      body
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener never saw the marker job")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  private def path(n: Int) = (0L until n.toLong).map(i => (i, i + 1))
+
+  /** The harness tables q139 reads its hierarchy from: 2 regions, 4 nations,
+    * 20 customers. */
+  private lazy val hierarchyDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("pinned_loop_hierarchy").toString
+    Seq(0L, 1L).toDF("r_regionkey").write.parquet(s"$dir/region.parquet")
+    (0L until 4L).map(n => (n, n % 2)).toDF("n_nationkey", "n_regionkey")
+      .write.parquet(s"$dir/nation.parquet")
+    (1L to 20L).map(c => (c, c % 4)).toDF("c_custkey", "c_nationkey")
+      .write.parquet(s"$dir/customer.parquet")
+    dir
+  }
+
+  /** (operator, rounds it runs on its graph, call + consume). */
+  private val cases: Seq[(String, Int, () => Unit)] = Seq(
+    // pointer jumping doubles reach per round: the 230-deep chain settles
+    // (or freezes past maxDepth 200) after 8 rounds; the 9th finds nothing
+    // pending
+    ("UltimateParent.resolveDistributed, 230-deep chain", 9, () => {
+      val chain = (0 until 230).map(i => s"x$i" -> s"x${i + 1}") :+ ("x230" -> "x230")
+      val up = UltimateParent.resolveDistributed(chain.toDF("id", "parent"))
+        .collect().map(r => r.getString(0) -> r.getBoolean(2)).toMap
+      assert(up("x0") && !up("x30"), "depth 230 hits the cap, depth 200 resolves")
+    }),
+    // identity labels + round 1 are fused into the init; label(9) reaches 0
+    // after 8 more rounds, and the 9th changes nothing
+    ("ConnectedComponents.minLabel, 10-node path", 9, () => {
+      val out = ConnectedComponents.minLabel(path(9).toDF("a", "b")).collect()
+      assert(out.length == 10 && out.forall(_.getLong(1) == 0L))
+    }),
+    // unit weights from node 0: round r settles node r, round 5 improves
+    // nothing
+    ("Sssp.distances, 5-node path", 5, () => {
+      val e = path(4).map { case (a, b) => (a, b, 1L) }.toDF("a", "b", "w")
+      val d = Sssp.distances(e, "a", "b", "w", Seq(0L).toDF("id"), "id", maxRounds = 10)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(d == (0L to 4L).map(v => v -> v).toMap)
+    }),
+    // k = 2 peels a path from both ends: drops 2, 2, 1, then an empty round
+    ("KCore.decompose, 5-node path", 4, () => {
+      val res = KCore.decompose(path(4).toDF("a", "b"), "a", "b", k = 2)
+      assert(res.core.collect().isEmpty && res.attrition == Seq(1 -> 2L, 2 -> 2L, 3 -> 1L))
+    }),
+    // region <- nation <- customer: round 1 adds the depth-2 pairs, round 2
+    // adds none
+    ("q139_ancestor_closure, 3-level hierarchy", 2, () => {
+      val closure = RefSurface.queries("q139_ancestor_closure")(spark, hierarchyDir).count()
+      assert(closure == 4 + 2 * 20, "one ancestor per nation, two per customer")
+    }),
+  )
+
+  for ((name, rounds, run) <- cases) {
+    test(s"$name: session conf untouched, at most one job per round") {
+      hierarchyDir // written before, not inside, the counted call
+      val before = spark.conf.getAll
+      val jobs = jobsOf(run())
+      assert(spark.conf.getAll == before)
+      assert(jobs <= rounds + setupJobs, s"$jobs jobs for $rounds rounds")
+    }
+  }
+
+  test("a loop that raises at its round cap restores the session conf too") {
+    val before = spark.conf.getAll
+    val cc = intercept[IllegalArgumentException] {
+      ConnectedComponents.minLabel(path(9).toDF("a", "b"), maxIter = 1)
+    }
+    assert(cc.getMessage.contains("did not converge"))
+    assert(spark.conf.getAll == before)
+    val kc = intercept[IllegalStateException] {
+      KCore.decompose(path(4).toDF("a", "b"), "a", "b", k = 2, maxRounds = 1)
+    }
+    assert(kc.getMessage.contains("did not converge"))
+    assert(spark.conf.getAll == before)
+  }
+
+  test("fixpoint: per-round pending counts, cap, and only the last round stays cached") {
+    val sc = spark.sparkContext
+    def countdown(maxRounds: Int) =
+      PinnedLoop.fixpoint(spark, 10L, col("n") > 0, maxRounds) {
+        spark.range(10).select(col("id").as("n"))
+      } { s => s.select(greatest(col("n") - 1, lit(0L)).as("n")) }
+
+    val cachedBefore = sc.getPersistentRDDs.keySet
+    var run: PinnedLoop.Fixpoint = null
+    val jobs = jobsOf { run = countdown(20) }
+    assert(run.pending == (8L to 0L by -1L) && run.rounds == 9 && run.converged)
+    assert(jobs == run.rounds, "one job per round, none to set up")
+    assert((sc.getPersistentRDDs.keySet -- cachedBefore).size == 1, "earlier rounds released")
+    assert(run.state.as[Long].collect().forall(_ == 0L))
+
+    val capped = countdown(3)
+    assert(capped.pending == Seq(8L, 7L, 6L) && !capped.converged)
+    assert(!countdown(0).converged, "no round run is not convergence")
+  }
+}

@@ -160,15 +160,4 @@ class RorPipelineSpec extends AnyFunSuite {
     assert(report.cappedCount == n)
     assert(report.cappedIds == ids.sorted.take(RorPipeline.cappedIdSample))
   }
-
-  test("small-graph (collected) mode produces identical results") {
-    val wh = Files.createTempDirectory("ror_wh4").toString
-    val dump = writeDump(s"$wh/in", fullRecs)
-    val report = RorPipeline.run(spark, RorPipeline.Config(dump, wh, smallGraph = true))
-    assert(report.cappedIds == Seq("cy1", "cy2"))
-    val up = spark.read.parquet(s"$wh/prod/ror")
-      .select("id", "ultimate_parent").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(up("g1") == "r1" && up("cy1") == "cy1")
-  }
 }
