@@ -112,12 +112,16 @@ object PinnedLoop {
       Fixpoint(state, counts)
     }
 
-  /** Drop a checkpoint's blocks. `Dataset.unpersist` only touches the
-    * CacheManager, which never holds checkpoint blocks; they belong to the
-    * RDD under the checkpoint's `LogicalRDD` leaf. */
-  private def release(checkpoint: DataFrame): Unit =
-    checkpoint.queryExecution.logical match {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+  /** Drop the blocks of every checkpoint `frame` reads (the frame itself
+    * when it is one, or a projection of one). `Dataset.unpersist` only
+    * touches the CacheManager, which never holds checkpoint blocks; they
+    * belong to the RDD under each checkpoint's `LogicalRDD` leaf. Only for
+    * frames whose checkpoints the caller owns: a `LogicalRDD` built from
+    * someone else's RDD would be unpersisted too. `blocking` returns only
+    * once the blocks are gone; otherwise their removal is just scheduled. */
+  def release(frame: DataFrame, blocking: Boolean = false): Unit =
+    frame.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking)
       case _ =>
     }
 }

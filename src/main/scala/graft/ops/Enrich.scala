@@ -21,6 +21,11 @@ object Enrich {
 
   /** Append `ultimate_parent` (and `capped` if present in `rollup`) to
     * `records`. `rollup` must be keyed `(id, ultimate_parent[, capped])`.
+    *
+    * `requireResolved` asserts inside the plan that every record resolved:
+    * a row without an `ultimate_parent` fails the first action that
+    * computes it, naming the record's id, so the check rides the consumer's
+    * own scan (the pipeline's staging write) instead of an extra one.
     */
   def withUltimateParent(
       records: DataFrame,
@@ -31,14 +36,14 @@ object Enrich {
     val right0  = rollup.withColumnRenamed("id", idCol)
     val right   = if (hintBroadcast) broadcast(right0) else right0
     val joined  = records.join(right, Seq(idCol), "left")
-    if (requireResolved) {
+    if (!requireResolved) joined
+    else {
       // The reference's dict lookup can never miss (ids come from the same
-      // scan); assert the same invariant after the join, cheaply.
-      val missing = joined.filter(col("ultimate_parent").isNull).limit(5).collect()
-      if (missing.nonEmpty)
-        throw new IllegalStateException(
-          s"ultimate_parent unresolved for ${missing.length}+ record(s), e.g. id=${missing.head.getAs[Any](idCol)}")
+      // scan); a miss here is a broken invariant, not a value to carry.
+      val up = col("ultimate_parent")
+      joined.withColumn("ultimate_parent", when(up.isNull, raise_error(concat(
+        lit("ultimate_parent unresolved for record id="),
+        coalesce(col(idCol).cast("string"), lit("null"))))).otherwise(up))
     }
-    joined
   }
 }

@@ -43,12 +43,19 @@ object ParentEdges {
   /** G3 gate: hard abort naming (a sample of) the duplicate ids, before any
     * downstream output — faithful to the reference's
     * `assert ror_id not in id_to_parent` (get_ultimate_parent.py:80).
+    *
+    * Returns the row count of `records`: the per-id counts the guard needs
+    * sum to it, so one aggregate answers both, and a caller that sizes work
+    * by the input's rows (the rollup's scope) pays no count of its own. Only
+    * a failing guard runs a second query, for the bounded id sample.
     */
-  def requireUniqueIds(records: DataFrame, idCol: String = "id", sample: Int = 10): Unit = {
-    val dups = duplicateIds(records, idCol).limit(sample).collect()
-    if (dups.nonEmpty) {
-      val ids = dups.map(_.get(0)).mkString(", ")
+  def requireUniqueIds(records: DataFrame, idCol: String = "id", sample: Int = 10): Long = {
+    val row = records.groupBy(col(idCol)).agg(count(lit(1)).as("cnt"))
+      .agg(coalesce(sum(col("cnt")), lit(0L)), count_if(col("cnt") > 1)).head()
+    if (row.getLong(1) > 0) {
+      val ids = duplicateIds(records, idCol).limit(sample).collect().map(_.get(0)).mkString(", ")
       throw new IllegalStateException(s"Duplicate ID(s): $ids")
     }
+    row.getLong(0)
   }
 }

@@ -7,24 +7,31 @@ import org.apache.spark.sql.functions._
   * semantics: a gate PASSES iff its single-row result is truthy, and a failed
   * gate must block promotion (`/root/reference/ror_dag.py:178-192`).
   *
-  * Both gates are single full-table aggregates — Catalyst plans them as
-  * partial (map-side) + final HashAggregate, so the shuffle carries only one
-  * row per partition. `uniqueIds` uses EXACT `count(distinct)` (it is a
-  * correctness gate, `ror_dag.py:181`), which Spark executes with the
-  * two-phase distinct expansion — still one pass over the data.
+  * The staging side of both gates is ONE full-table aggregate
+  * ([[stagingCounts]]): row count, id count and EXACT `count(distinct id)`
+  * (A1 is a correctness gate, `ror_dag.py:181`). Catalyst plans it as
+  * partial (map-side) + final HashAggregate with the two-phase distinct
+  * expansion — one pass over the data, and the shuffles carry only the
+  * distinct ids and one row per partition. A2's production side is a count
+  * the caller supplies.
   */
 object QualityGates {
 
   final case class GateResult(name: String, passed: Boolean, detail: String)
 
-  /** A1 (`ror_dag.py:181`): `count(distinct id) = count(id)`. */
-  def uniqueIds(df: DataFrame, idCol: String): GateResult = {
-    val row = df.agg(
-      countDistinct(col(idCol)).as("d"),
-      count(col(idCol)).as("c")).head()
-    val (d, c) = (row.getLong(0), row.getLong(1))
-    GateResult("unique_ids", d == c, s"count(distinct $idCol)=$d count($idCol)=$c")
+  /** What one aggregate over the staging table tells both gates (and the
+    * run report): rows, non-null ids and distinct ids. */
+  final case class StagingCounts(rows: Long, ids: Long, distinctIds: Long)
+
+  def stagingCounts(df: DataFrame, idCol: String): StagingCounts = {
+    val row = df.agg(count(lit(1)), count(col(idCol)), countDistinct(col(idCol))).head()
+    StagingCounts(row.getLong(0), row.getLong(1), row.getLong(2))
   }
+
+  /** A1 (`ror_dag.py:181`): `count(distinct id) = count(id)`. */
+  def uniqueIds(c: StagingCounts, idCol: String): GateResult =
+    GateResult("unique_ids", c.distinctIds == c.ids,
+      s"count(distinct $idCol)=${c.distinctIds} count($idCol)=${c.ids}")
 
   /** A1 as a declarative single-row plan (for the oracle harness). */
   def uniqueIdsDf(df: DataFrame, idCol: String): DataFrame =
@@ -32,10 +39,9 @@ object QualityGates {
 
   /** A2 (`ror_dag.py:186-189`): staging row count must be >= production's —
     * guards against a shrinking dataset. */
-  def monotonicCount(staging: DataFrame, production: DataFrame): GateResult = {
-    val s = staging.count(); val p = production.count()
-    GateResult("monotonic_count", s >= p, s"staging=$s production=$p")
-  }
+  def monotonicCount(stagingRows: Long, productionRows: Long): GateResult =
+    GateResult("monotonic_count", stagingRows >= productionRows,
+      s"staging=$stagingRows production=$productionRows")
 
   /** A2 as one declarative plan: two scalar aggregates cross-joined (each a
     * partial+final count; the cross join is 1x1 rows). */

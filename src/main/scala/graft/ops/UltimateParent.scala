@@ -47,23 +47,29 @@ object UltimateParent {
   /** Distributed pointer-jumping fixpoint. `edges` must be `(id, parent)` with
     * unique ids (enforce with [[ParentEdges.requireUniqueIds]] first).
     * A parent id absent from `edges` is treated as a terminal root.
+    *
+    * `rows` is the row count of `edges` when the caller already has it
+    * (the G3 guard returns it), which sizes the loop's scope; the initial
+    * state is then read from `edges` inside round 1's job. Without it the
+    * initial state is checkpointed and counted here first.
     */
-  def resolveDistributed(edges: DataFrame, maxDepth: Int = 200): DataFrame = {
+  def resolveDistributed(edges: DataFrame, maxDepth: Int = 200, rows: Option[Long] = None): DataFrame = {
     // ceil(log2(maxDepth)) rounds reach any root within the cap; +2 margin
     // lets stragglers' dist overshoot the cap so they classify as capped.
     val maxRounds =
       math.ceil(math.log(math.max(maxDepth, 2).toDouble) / math.log(2.0)).toInt + 2
 
     val selfRoot = col("id") === col("parent")
-    val init = edges
+    val state0 = edges
       .select(
         col("id"),
         col("parent").as("anc"),
         when(selfRoot, lit(0L)).otherwise(lit(1L)).as("dist"),
         selfRoot.as("settled"))
-      .localCheckpoint()
+    val counted = Option.when(rows.isEmpty)(state0.localCheckpoint())
+    val init = counted.getOrElse(state0)
 
-    val run = PinnedLoop.fixpoint(edges.sparkSession, init.count(),
+    val run = PinnedLoop.fixpoint(edges.sparkSession, rows.getOrElse(init.count()),
         !col("settled") && col("dist") <= maxDepth, maxRounds)(init) { state =>
       val hop = state.select(
         col("id").as("h_id"),
@@ -86,6 +92,8 @@ object UltimateParent {
             .otherwise(col("dist") + coalesce(col("h_dist"), lit(0L))).as("dist"),
           (frozen || ancMissing || ancIsRoot || col("h_settled")).as("settled"))
     }
+    // round 1 has materialized its own state: the sizing checkpoint is spent
+    counted.foreach(PinnedLoop.release(_))
 
     // rows unsettled at the round cap or past maxDepth fall back to self
     val resolved = col("settled") && col("dist") <= maxDepth

@@ -1,13 +1,15 @@
 package graft.pipeline
 
+import java.io.IOException
 import java.nio.file.Paths
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path => HPath}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.PinnedLoop
 import graft.ops.{Enrich, ParentEdges, QualityGates, UltimateParent}
 import graft.schema.{BqSchema, RorSchema}
 import graft.sources.{DumpSource, Jsonl, LocalDumpSource}
@@ -15,14 +17,21 @@ import graft.sources.{DumpSource, Jsonl, LocalDumpSource}
 /** The reference DAG (`ror_updater`, `/root/reference/ror_dag.py:228-238`)
   * as sequential Spark driver code — each stage is a declarative plan;
   * Catalyst/Tungsten replace both the "pod script" role (transforms) and
-  * the "BigQuery" role (SQL, schema enforcement, table copies).
+  * the "BigQuery" role (SQL, schema enforcement); the table copies stay
+  * file copies, as the reference's BigQuery copy jobs are.
   *
   * Stage map (SURVEY.md §2): clearTmp (S9) → fetch+select (S1–S3) →
-  * array→JSONL (S4/K1-style staging) → schema'd load (S6–S8) → duplicate
-  * gate (G3) → edge extraction (T2) → rollup fixpoint (G1/G2) → enrichment
-  * join (J1) → staging write → quality gates (A1/A2, blocking) → promote
-  * (K2) → dated snapshot (K3) → metadata sidecar (K4) → run report (K5/K6 —
-  * capped/cycle ids surface here, the reference's Slack-alert channel).
+  * array→JSONL (S4/K1-style staging) → schema'd load (S6–S8) → edge
+  * extraction (T2, checkpointed once) → duplicate gate (G3, whose aggregate
+  * also counts the edges) → rollup fixpoint (G1/G2, sized by that count) →
+  * enrichment join (J1, its every-id-resolves check inside the staging
+  * write) → staging write → quality gates (A1/A2, blocking; their staging
+  * side is one aggregate, which also gives the report's record count) →
+  * promote (K2: staging's files copied to production) → dated snapshot (K3:
+  * the same files copied to the dated backup) → metadata sidecar (K4) →
+  * run report (K5/K6 — capped/cycle ids surface here, the reference's
+  * Slack-alert channel). The JSONL is parsed twice after S4: once for the
+  * edges, once for the staging write; the table is encoded once.
   */
 object RorPipeline {
 
@@ -74,62 +83,106 @@ object RorPipeline {
     // S6-S8: schema'd load (explicit schema, no inference).
     val records = Jsonl.read(spark, RorSchema.schema, jsonlDir)
 
-    // G3: duplicate-id abort BEFORE any output (get_ultimate_parent.py:80).
-    ParentEdges.requireUniqueIds(records, "id")
+    // T2: the (id, parent) edges, parsed once for the guard and the rollup;
+    // their checkpoint and the rollup's final state are released however
+    // the run ends, and are gone (not just scheduled for removal) when it
+    // returns.
+    var edges, rollup: DataFrame = null
+    try {
+      edges = ParentEdges.edges(records).localCheckpoint(false)
 
-    // T2 + G1/G2: edges → ultimate-parent fixpoint.
-    val edges  = ParentEdges.edges(records)
-    val rollup = UltimateParent.resolveDistributed(edges, cfg.maxDepth)
+      // G3: duplicate-id abort BEFORE any output (get_ultimate_parent.py:80).
+      val edgeRows = ParentEdges.requireUniqueIds(edges, "id")
 
-    // K6 warning channel: depth-capped / cyclic orgs fell back to self.
-    // Bounded driver materialization: count distributed, sample via
-    // sort+limit (both computed before collect — mirrors the
-    // ParentEdges.requireUniqueIds sample cap).
-    val capped = rollup.filter(col("capped")).select("id")
-    val cappedCount = capped.count()
-    val cappedIds = capped.orderBy("id").limit(cappedIdSample)
-      .collect().map(_.getString(0)).toSeq
+      // G1/G2: ultimate-parent fixpoint.
+      rollup = UltimateParent.resolveDistributed(edges, cfg.maxDepth, Some(edgeRows))
 
-    // J1: broadcast enrichment; ultimate_parent is REQUIRED — every id must
-    // resolve (the reference's dict lookup cannot miss).
-    val enriched = Enrich.withUltimateParent(
-      records, rollup.select("id", "ultimate_parent"), requireResolved = true)
+      // K6 warning channel: depth-capped / cyclic orgs fell back to self.
+      // Bounded driver materialization: count distributed, sample via
+      // sort+limit (both computed before collect — mirrors the
+      // ParentEdges.requireUniqueIds sample cap).
+      val capped = rollup.filter(col("capped")).select("id")
+      val cappedCount = capped.count()
+      val cappedIds = capped.orderBy("id").limit(cappedIdSample)
+        .collect().map(_.getString(0)).toSeq
 
-    // Staging write (WRITE_TRUNCATE semantics).
-    enriched.write.mode(SaveMode.Overwrite).parquet(staging)
-    val stagingDf = spark.read.parquet(staging)
+      // J1: broadcast enrichment; ultimate_parent is REQUIRED — every id must
+      // resolve (the reference's dict lookup cannot miss), checked by the
+      // staging write itself.
+      val enriched = Enrich.withUltimateParent(
+        records, rollup.select("id", "ultimate_parent"), requireResolved = true)
 
-    // A1 + A2 gates — both must pass before promotion (BigQueryCheckOperator
-    // semantics: hard fail blocks everything downstream).
-    val prodExists =
-      if (cfg.snapshotMode) graft.sources.SnapshotTable.latestVersion(prod).isDefined
-      else fs.exists(new HPath(prod))
-    def readProd() =
-      if (cfg.snapshotMode) graft.sources.SnapshotTable.read(spark, prod)
-      else spark.read.parquet(prod)
-    val gates = Seq(QualityGates.uniqueIds(stagingDf, "id")) ++
-      (if (prodExists) Seq(QualityGates.monotonicCount(stagingDf, readProd())) else Nil)
-    QualityGates.requireAll(gates)
+      // Staging write (WRITE_TRUNCATE semantics).
+      enriched.write.mode(SaveMode.Overwrite).parquet(staging)
+      val stagingDf = spark.read.schema(enriched.schema).parquet(staging)
 
-    val backupRef = if (cfg.snapshotMode) {
-      // K2 + K3 in one step: the replace commit is atomic AND versioned —
-      // any prior run stays time-travelable, which IS the dated backup
-      val v = graft.sources.SnapshotTable.commitReplace(stagingDf, prod)
-      s"$prod@v$v"
-    } else {
-      // K2: staging → production (atomic-replace-style overwrite).
-      stagingDf.write.mode(SaveMode.Overwrite).parquet(prod)
-      // K3: production → dated backup snapshot (idempotent per day).
-      spark.read.parquet(prod).write.mode(SaveMode.Overwrite).parquet(backup)
-      backup
+      // A1 + A2 gates — both must pass before promotion (BigQueryCheckOperator
+      // semantics: hard fail blocks everything downstream).
+      val counts = QualityGates.stagingCounts(stagingDf, "id")
+      val prodRows =
+        if (cfg.snapshotMode)
+          graft.sources.SnapshotTable.latestVersion(prod)
+            .map(_ => graft.sources.SnapshotTable.read(spark, prod).count())
+        else if (fs.exists(new HPath(prod)))
+          Some(spark.read.schema(enriched.schema).parquet(prod).count())
+        else None
+      val gates = QualityGates.uniqueIds(counts, "id") +:
+        prodRows.map(QualityGates.monotonicCount(counts.rows, _)).toSeq
+      QualityGates.requireAll(gates)
+
+      // K4: the column-description sidecar travels with the table.
+      def writeSidecar(table: HPath): Unit = {
+        val out = fs.create(new HPath(table, "_column_descriptions.json"), true)
+        try out.write(BqSchema.commentSidecar(RorSchema.enrichedSchema).getBytes("UTF-8"))
+        finally out.close()
+      }
+      val backupRef = if (cfg.snapshotMode) {
+        // K2 + K3 in one step: the replace commit is atomic AND versioned —
+        // any prior run stays time-travelable, which IS the dated backup
+        val v = graft.sources.SnapshotTable.commitReplace(stagingDf, prod)
+        writeSidecar(new HPath(prod))
+        s"$prod@v$v"
+      } else {
+        // K2: staging → production; K3: the same data files → the dated
+        // backup (idempotent per day). Production holds staging's bytes, so
+        // copying staging is copying production, minus the sidecar.
+        replaceByCopy(fs, new HPath(staging), new HPath(prod))(writeSidecar)
+        replaceByCopy(fs, new HPath(staging), new HPath(backup))()
+        backup
+      }
+
+      // K5: success report (the terminal alert, minus the Slack transport).
+      RunReport(counts.rows, cappedIds, cappedCount, gates, staging, prod, backupRef)
+    } finally {
+      Seq(edges, rollup).filter(_ != null).foreach(PinnedLoop.release(_, blocking = true))
     }
+  }
 
-    // K4: column-description sidecar travels with the table.
-    val sidecar = BqSchema.commentSidecar(RorSchema.enrichedSchema)
-    val out = fs.create(new HPath(s"$prod/_column_descriptions.json"), true)
-    out.write(sidecar.getBytes("UTF-8")); out.close()
-
-    // K5: success report (the terminal alert, minus the Slack transport).
-    RunReport(stagingDf.count(), cappedIds, cappedCount, gates, staging, prod, backupRef)
+  /** K2/K3 as the reference's copy jobs: replace `dst` with a byte copy of
+    * `src`'s files (same names, no decode or encode). The copy, plus what
+    * `finish` adds to it, lands in a hidden sibling directory that is then
+    * renamed into place: a copy that fails part-way leaves `dst` as it was,
+    * and a reader sees the old table or the new one, never a partial one
+    * (or, between the two renames, none). */
+  private[pipeline] def replaceByCopy(fs: FileSystem, src: HPath, dst: HPath)(
+      finish: HPath => Unit = _ => ()): Unit = {
+    val fresh = new HPath(dst.getParent, s"_${dst.getName}.copying")
+    val old   = new HPath(dst.getParent, s"_${dst.getName}.replaced")
+    fs.delete(fresh, true)
+    try {
+      if (!FileUtil.copy(fs, src, fs, fresh, false, fs.getConf))
+        throw new IOException(s"copy $src -> $fresh failed")
+      finish(fresh)
+    } catch {
+      case e: Throwable => fs.delete(fresh, true); throw e
+    }
+    fs.delete(old, true)
+    if (fs.exists(dst) && !fs.rename(dst, old))
+      throw new IOException(s"could not move $dst aside")
+    if (!fs.rename(fresh, dst)) {
+      fs.rename(old, dst)
+      throw new IOException(s"could not move $fresh to $dst")
+    }
+    fs.delete(old, true)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
+import graft.operators.PinnedLoop
 import graft.ops.{Enrich, ParentEdges, UltimateParent}
 
 /** Incremental (streaming) variant of the ingest+enrich stage: watch a
@@ -37,10 +38,11 @@ object StreamingIngest {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          ParentEdges.requireUniqueIds(batch, "id")
-          val rollup = UltimateParent.resolveDistributed(ParentEdges.edges(batch), maxDepth)
-          Enrich.withUltimateParent(batch, rollup.select("id", "ultimate_parent"))
+          val rows = ParentEdges.requireUniqueIds(batch, "id")
+          val rollup = UltimateParent.resolveDistributed(ParentEdges.edges(batch), maxDepth, Some(rows))
+          try Enrich.withUltimateParent(batch, rollup.select("id", "ultimate_parent"))
             .write.mode(SaveMode.Overwrite).parquet(s"$stagingDir/batch_id=$batchId")
+          finally PinnedLoop.release(rollup)
         }
         ()
       }

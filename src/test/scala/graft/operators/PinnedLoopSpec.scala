@@ -1,13 +1,9 @@
 package graft.operators
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TestJobs, TestSpark}
 import graft.ops.UltimateParent
 import graft.queries.RefSurface
 
@@ -25,37 +21,6 @@ class PinnedLoopSpec extends AnyFunSuite {
     * planning, so a count can take two jobs), its final join and
     * checkpoint, and the test's own collect. */
   private val setupJobs = 8
-
-  /** Jobs `body` submits. They are tagged with a job group; a marker job in
-    * the same group, submitted after `body`, tells when the listener has
-    * seen every earlier job (one listener sees events in order). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"pinned-loop-spec-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = Option(e.properties)
-        if (p.exists(_.getProperty("spark.jobGroup.id") == group)) {
-          if (p.exists(_.getProperty("spark.job.description") == "marker")) drained.countDown()
-          else jobs.incrementAndGet()
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "body")
-    try {
-      body
-      sc.setJobDescription("marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener never saw the marker job")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
 
   private def path(n: Int) = (0L until n.toLong).map(i => (i, i + 1))
 
@@ -113,7 +78,7 @@ class PinnedLoopSpec extends AnyFunSuite {
     test(s"$name: session conf untouched, at most one job per round") {
       hierarchyDir // written before, not inside, the counted call
       val before = spark.conf.getAll
-      val jobs = jobsOf(run())
+      val jobs = TestJobs.count(spark)(run())
       assert(spark.conf.getAll == before)
       assert(jobs <= rounds + setupJobs, s"$jobs jobs for $rounds rounds")
     }
@@ -142,7 +107,7 @@ class PinnedLoopSpec extends AnyFunSuite {
 
     val cachedBefore = sc.getPersistentRDDs.keySet
     var run: PinnedLoop.Fixpoint = null
-    val jobs = jobsOf { run = countdown(20) }
+    val jobs = TestJobs.count(spark) { run = countdown(20) }
     assert(run.pending == (8L to 0L by -1L) && run.rounds == 9 && run.converged)
     assert(jobs == run.rounds, "one job per round, none to set up")
     assert((sc.getPersistentRDDs.keySet -- cachedBefore).size == 1, "earlier rounds released")

@@ -13,13 +13,15 @@ class EdgeCasesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("enrich requireResolved throws when an id is missing from the rollup") {
+  test("enrich requireResolved fails the first action when an id is missing from the rollup") {
     val records = Seq(("a", 1), ("b", 2)).toDF("id", "x")
     val rollup = Seq(("a", "root")).toDF("id", "ultimate_parent")
-    val ex = intercept[IllegalStateException] {
-      Enrich.withUltimateParent(records, rollup, requireResolved = true)
-    }
-    assert(ex.getMessage.contains("unresolved"))
+    // the check is part of the plan: building the frame runs nothing
+    val checked = Enrich.withUltimateParent(records, rollup, requireResolved = true)
+    val ex = intercept[Exception](checked.collect())
+    assert(ex.getMessage.contains("unresolved") && ex.getMessage.contains("id=b"))
+    // resolved rows pass through unchanged
+    assert(checked.filter(col("id") === "a").select("ultimate_parent").head().getString(0) == "root")
     // without the flag, the left join simply carries a null
     val lax = Enrich.withUltimateParent(records, rollup)
       .filter(col("id") === "b").head()

@@ -3,9 +3,11 @@ package graft.pipeline
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TestJobs, TestSpark}
 
 class RorPipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -159,5 +161,93 @@ class RorPipelineSpec extends AnyFunSuite {
     val report = RorPipeline.run(spark, RorPipeline.Config(writeDump(s"$wh/in", recs), wh))
     assert(report.cappedCount == n)
     assert(report.cappedIds == ids.sorted.take(RorPipeline.cappedIdSample))
+  }
+
+  /** `name -> bytes` of the files in `dir` named `part-*.parquet`. */
+  private def partFiles(dir: String): Map[String, Seq[Byte]] =
+    Files.list(Paths.get(dir)).iterator().asScala
+      .map(_.getFileName.toString).filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      .map(n => n -> Files.readAllBytes(Paths.get(dir, n)).toSeq).toMap
+
+  test("K2/K3 copy staging's part files byte for byte, under their own names") {
+    val wh = Files.createTempDirectory("ror_wh_copy").toString
+    RorPipeline.run(spark, RorPipeline.Config(writeDump(s"$wh/in1", fullRecs), wh,
+      runDate = LocalDate.of(2026, 8, 12)))
+    // a second run replaces an existing production table the same way
+    val r = RorPipeline.run(spark, RorPipeline.Config(
+      writeDump(s"$wh/in2", fullRecs :+ rec("x1", "", "Extra Org")), wh,
+      runDate = LocalDate.of(2026, 8, 19)))
+    val staged = partFiles(r.stagingPath)
+    assert(staged.nonEmpty)
+    assert(partFiles(r.productionPath) == staged)
+    assert(partFiles(r.backupPath) == staged)
+    assert(spark.read.parquet(r.backupPath).count() == 7)
+    // only the tables themselves are left: no copy or swap directory
+    assert(Files.list(Paths.get(s"$wh/prod")).iterator().asScala.map(_.getFileName.toString).toSeq
+      == Seq("ror"))
+    assert(Files.list(Paths.get(s"$wh/backups")).iterator().asScala.map(_.getFileName.toString).toSet
+      == Set("ror_20260812", "ror_20260819"))
+  }
+
+  test("a copy that fails part-way leaves the destination as it was") {
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    val wh = Files.createTempDirectory("ror_wh_swap").toString
+    val r = RorPipeline.run(spark, RorPipeline.Config(writeDump(s"$wh/in", fullRecs), wh))
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val before = partFiles(r.productionPath)
+    val other = Files.createTempDirectory("ror_other").toString
+    spark.range(3).write.mode("overwrite").parquet(other)
+    val ex = intercept[java.io.IOException] {
+      RorPipeline.replaceByCopy(fs, new HPath(other), new HPath(r.productionPath)) { _ =>
+        throw new java.io.IOException("disk full")
+      }
+    }
+    assert(ex.getMessage == "disk full")
+    assert(partFiles(r.productionPath) == before)
+    assert(Files.exists(Paths.get(r.productionPath, "_column_descriptions.json")))
+    assert(Files.list(Paths.get(s"$wh/prod")).iterator().asScala.map(_.getFileName.toString).toSeq
+      == Seq("ror"))
+  }
+
+  test("a record without an id fails the refresh as unresolved and leaves prod unchanged") {
+    val wh = Files.createTempDirectory("ror_wh_noid").toString
+    val r = RorPipeline.run(spark, RorPipeline.Config(writeDump(s"$wh/in1", fullRecs), wh))
+    val before = partFiles(r.productionPath)
+    val noId = rec("zz", "", "Nameless Org").replace("\"id\": \"zz\", ", "")
+    assert(!noId.contains("\"id\""))
+    val ex = intercept[Exception] {
+      RorPipeline.run(spark, RorPipeline.Config(writeDump(s"$wh/in2", fullRecs :+ noId), wh))
+    }
+    assert(ex.getMessage.contains("unresolved"))
+    assert(partFiles(r.productionPath) == before)
+  }
+
+  test("a refresh releases what it checkpoints, on success and on a gate failure") {
+    val sc = spark.sparkContext
+    val wh = Files.createTempDirectory("ror_wh_release").toString
+    val cached = sc.getPersistentRDDs.keySet
+    RorPipeline.run(spark, RorPipeline.Config(writeDump(s"$wh/in1", fullRecs), wh))
+    assert(sc.getPersistentRDDs.keySet == cached)
+    intercept[IllegalStateException] {
+      RorPipeline.run(spark, RorPipeline.Config(writeDump(s"$wh/in2", fullRecs.take(2)), wh))
+    }
+    assert(sc.getPersistentRDDs.keySet == cached)
+  }
+
+  /** Jobs of a refresh over an existing warehouse: the array → JSONL pass
+    * (1), the G3 aggregate that also materializes the edge checkpoint (3:
+    * each shuffle stage is a job of its own under adaptive execution), the
+    * rollup's rounds (8 here: the two-cycle's dist doubles past maxDepth),
+    * the capped count and sample (2), the enrichment broadcast and staging
+    * write (2), the staging gate aggregate (3) and production's count (2).
+    * K2/K3 are file copies and run none. */
+  private val refreshJobs = 21
+
+  test(s"job census: a refresh over an existing warehouse runs at most $refreshJobs jobs") {
+    val wh = Files.createTempDirectory("ror_wh_jobs").toString
+    RorPipeline.run(spark, RorPipeline.Config(writeDump(s"$wh/in1", fullRecs), wh))
+    val dump = writeDump(s"$wh/in2", fullRecs)
+    val jobs = TestJobs.count(spark)(RorPipeline.run(spark, RorPipeline.Config(dump, wh)))
+    assert(jobs <= refreshJobs, s"$jobs jobs")
   }
 }
