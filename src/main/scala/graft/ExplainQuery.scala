@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `.explain("formatted")` of one declared query to a file
   * (plan evidence for the optimization rounds). Any internal actions the
   * query performs (index builds, table commits) run as part of constructing
@@ -13,16 +11,7 @@ object ExplainQuery {
     val name = args(0)
     val outFile = args(1)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.localSession()
     val df = SparkEntry.queries(name)(spark, sfDir)
     val plan = df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)

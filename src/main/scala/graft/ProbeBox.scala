@@ -1,21 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: absolute box-speed anchors (see CLAUDE.md round-12 close).
   * Prints per-job scheduling overhead (spark.range(1).count x30) and a
-  * 32-core compute anchor (32M-mult sum) so bench totals can be compared
-  * across rounds on a drifting box. Usage: runMain graft.ProbeBox
+  * compute anchor (32M-mult sum over SPARK_GRAFT_CPUS cores) so bench
+  * totals can be compared across rounds on a drifting box.
+  * Usage: runMain graft.ProbeBox
   */
 object ProbeBox {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.localSession()
     // warm
     (1 to 5).foreach(_ => spark.range(1).count())
     val t0 = System.nanoTime()

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: honest wall-time of queries under bench conditions —
-  * local[32], noop sink, cache cleared between passes (a query with an
+/** Dev tool: honest wall-time of queries under bench conditions — Bench's
+  * session, noop sink, cache cleared between passes (a query with an
   * internal persist() otherwise reuses pass 1's cache and reports a lie;
   * see CLAUDE.md perf traps). Usage:
   *   runMain graft.TimeQuery <queryName>[,<queryName>...] [sfDir] [passes]
@@ -13,16 +11,7 @@ object TimeQuery {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val passes = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.localSession()
     names.foreach { name =>
       val times = (1 to passes).map { _ =>
         val t0 = System.nanoTime()

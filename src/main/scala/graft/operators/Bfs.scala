@@ -89,9 +89,8 @@ object Bfs {
       .select(col("v"), coalesce(col("dist"), lit(-1L)).as("dist"))
       // seeds outside the graph still belong to the result (dist 0)
       .unionAll(settled.join(allNodes, Seq("v"), "left_anti"))
-    adj.unpersist()
     val result = out.localCheckpoint() // materialize before freeing inputs
-    levels.foreach(_._2.unpersist()); allNodes.unpersist()
+    (adj +: allNodes +: levels.map(_._2)).foreach(PinnedLoop.release(_))
     result
   }
 
@@ -164,9 +163,8 @@ object Bfs {
       // seeds outside the graph still belong to the result
       .unionAll(settled.join(allNodes, Seq("v"), "left_anti")
         .select(col("s").as("source"), col("v"), col("dist"), col("sigma")))
-    adj.unpersist()
     val result = out.localCheckpoint()
-    levels.foreach(_._2.unpersist()); allNodes.unpersist()
+    (adj +: allNodes +: levels.map(_._2)).foreach(PinnedLoop.release(_))
     result
   }
 

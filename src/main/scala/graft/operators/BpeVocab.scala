@@ -106,8 +106,7 @@ object BpeVocab {
       (if (narrow.rdd.getNumPartitions < par) narrow.repartition(par) else narrow)
         .localCheckpoint()
     // `syms` may chain un-checkpointed merges off the last checkpoint;
-    // unpersisting the CHAIN would be a no-op, so track the real one
-    var lastCheckpoint = syms
+    // releasing the chain releases that checkpoint
     var sinceCheckpoint = 0
     val merges = ArrayBuffer.empty[(Int, Merge)]
     val rounds = (numMerges + batch - 1) / batch
@@ -143,15 +142,14 @@ object BpeVocab {
           BpeExpressions.mergePair(acc, lit(m.a), lit(m.b))).as("syms"))
         sinceCheckpoint += picked.length
         if (sinceCheckpoint >= checkpointEvery && round < rounds) {
-          val next = merged.localCheckpoint() // eager: materialized before the unpersist
-          lastCheckpoint.unpersist()
-          lastCheckpoint = next
+          val next = merged.localCheckpoint() // eager: materialized before the release
+          PinnedLoop.release(syms)
           syms = next
           sinceCheckpoint = 0
         } else syms = merged
       }
     }
-    lastCheckpoint.unpersist()
+    PinnedLoop.release(syms)
     merges.toSeq
   }
 

@@ -55,7 +55,7 @@ object ConnectedComponents {
           least(col("l.label"), coalesce(col("nlabel"), col("l.label"))).as("label"),
           (col("nlabel") < col("l.label")).as("chg"))
     }
-    sym.unpersist() // before the require: don't leak the cache on failure
+    PinnedLoop.release(sym) // before the require: don't leak it on failure
     // a silent non-converged return would hand every caller (q52's oracle
     // comparison, CorpusPipeline's keep-set) subtly wrong clusters — fail
     // loudly instead; components deeper than maxIter need [[contractive]]

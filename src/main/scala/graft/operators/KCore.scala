@@ -57,7 +57,7 @@ object KCore {
       alive.join(deg, Seq("v"), "left")
         .select(col("v"), (coalesce(col("deg"), lit(0L)) < k).as("drop"))
     }
-    e0.unpersist()
+    PinnedLoop.release(e0) // the final state is materialized; nothing reads e0
     if (!run.converged) throw new IllegalStateException(
       s"k-core peel did not converge within $maxRounds rounds — " +
         "raise maxRounds or check the graph for pathological structure")

@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   * Scale shape per round: one key-partitioned join of the label relation
   * against the fixed checkpointed adjacency, then a (node, label) count
   * and a min-struct argmax — two shuffles, both map-side combinable;
-  * `localCheckpoint` truncates lineage per round and previous-round
-  * blocks are freed once the new labeling materializes. */
+  * `localCheckpoint` truncates lineage per round, and every round's
+  * blocks are freed once the final labeling materializes. */
 object LabelPropagation {
 
   /** `edges(src, dst)`: undirected simple graph. Returns `(v, label)`
@@ -49,13 +49,13 @@ object LabelPropagation {
     // at all — each round's checkpoint still cuts the plan to constant
     // size, but the whole chain executes as stages of the ONE final
     // materializing job instead of one job per round. Intermediate
-    // blocks are unpersisted only after the final eager checkpoint
-    // (unpersisting a lazy checkpoint pre-materialization is unsound —
+    // blocks are released only after the final eager checkpoint
+    // (releasing a lazy checkpoint pre-materialization is unsound —
     // its blocks are what later rounds read)
     var lab = adj.select(col("v")).distinct()
       .withColumn("label", col("v")).localCheckpoint(false)
     var inter = Vector[DataFrame](lab)
-    for (r <- 1 to rounds) {
+    for (_ <- 1 to rounds) {
       val neigh = adj
         .join(lab.withColumnRenamed("v", "w"), Seq("w"))
         .groupBy(col("v"), col("label")).agg(count(lit(1)).as("cnt"))
@@ -68,18 +68,9 @@ object LabelPropagation {
         .localCheckpoint(false)
       inter :+= next
       lab = next
-      // bound block residency on LONG round budgets: a fully lazy chain
-      // holds every round's label set until the final job. Materializing
-      // every 8th round (one count job) lets all earlier rounds' blocks
-      // go — residency stays <= 8 label sets regardless of `rounds`
-      if (r % 8 == 0 && r < rounds) {
-        lab.count()
-        inter.dropRight(1).foreach(_.unpersist())
-        inter = Vector(lab)
-      }
     }
     val out = lab.localCheckpoint() // eager: materializes the whole chain
-    adj.unpersist(); inter.foreach(_.unpersist())
+    (adj +: inter).foreach(PinnedLoop.release(_))
     out
   }
 

@@ -17,10 +17,6 @@ import org.apache.spark.sql.functions._
   * user's events land in one task; AQE skew-join/partition splitting does
   * not apply to window functions, so cap per-user event counts upstream or
   * pre-split such users by day before sessionizing.
-  *
-  * Streaming path: [[StreamingSessionize]] uses Spark's native
-  * `session_window` with a watermark — same gap-merge semantics, incremental
-  * state management handled by the engine.
   */
 object Sessionize {
 
@@ -75,32 +71,4 @@ object Sessionize {
        |  (sum(CAST(round($valueCol * 100) AS BIGINT))::DOUBLE / 100) AS sum_value
        |FROM s GROUP BY $userCol, session_seq""".stripMargin
   }
-}
-
-/** Structured Streaming sessionization via the engine-native `session_window`
-  * (incremental gap-merge state, watermark-driven eviction). */
-object StreamingSessionize {
-
-  /** `events` may be a streaming DataFrame (`readStream`). Emits one row per
-    * closed session once the watermark passes its end. */
-  def sessions(
-      events: DataFrame,
-      userCol: String = "user_id",
-      tsCol: String = "ts",
-      valueCol: String = "value",
-      gap: String = "30 minutes",
-      watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap), col(userCol))
-      .agg(
-        count(lit(1)).as("n_events"),
-        // same exact-cents sum as the batch form (incremental long-add state)
-        (sum(round(col(valueCol) * 100).cast("long")).cast("double") / 100)
-          .as("sum_value"))
-      .select(
-        col(userCol),
-        unix_micros(col("session_window.start")).as("window_start_us"),
-        unix_micros(col("session_window.end")).as("window_end_us"),
-        col("n_events"), col("sum_value"))
 }

@@ -118,7 +118,7 @@ object Sssp {
         // seeds outside the graph still belong to the result (dist 0)
         .unionAll(dist.join(allNodes, Seq("v"), "left_anti"))
       val result = out.localCheckpoint() // materialize before freeing inputs
-      adj.unpersist(); allNodes.unpersist(); run.state.unpersist()
+      Seq(adj, allNodes, run.state).foreach(PinnedLoop.release(_))
       result
     }
   }

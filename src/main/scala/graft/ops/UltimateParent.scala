@@ -22,22 +22,17 @@ import graft.operators.PinnedLoop
   *     recursion depth, not a semantic contract, and fallback-to-self is
   *     deterministic across engines and cap settings.
   *
-  * Spark-first design — two interchangeable implementations:
-  *
-  *  1. `resolveDistributed`: pointer-jumping (path doubling). State is the
-  *     relation `(id, anc, dist, settled)`; each round substitutes
-  *     `anc := anc(anc)` and `dist := dist + dist(anc)` via a single self
-  *     equi-join, so the frontier depth DOUBLES per round:
-  *     O(log2 maxDepth) ≈ 8 shuffles total for the reference's cap of 200,
-  *     regardless of row count — this is the 100 TB scale path. The rounds
-  *     run on [[graft.operators.PinnedLoop.fixpoint]] (one job per round).
-  *     Cycle rows never settle and their `dist` doubles past `maxDepth`,
-  *     reproducing the depth-cap fallback exactly.
-  *
-  *  2. `resolveCollected`: collect the edge map to the driver and walk it —
-  *     byte-faithful to the reference's in-memory dict (it collected
-  *     everything into one pod's memory anyway). Appropriate below ~10^7
-  *     edges; used as a cross-check in tests.
+  * Spark-first design — `resolveDistributed` is pointer-jumping (path
+  * doubling). State is the relation `(id, anc, dist, settled)`; each round
+  * substitutes `anc := anc(anc)` and `dist := dist + dist(anc)` via a
+  * single self equi-join, so the frontier depth DOUBLES per round:
+  * O(log2 maxDepth) ≈ 8 shuffles total for the reference's cap of 200,
+  * regardless of row count — this is the 100 TB scale path. The rounds run
+  * on [[graft.operators.PinnedLoop.fixpoint]] (one job per round). Cycle
+  * rows never settle and their `dist` doubles past `maxDepth`, reproducing
+  * the depth-cap fallback exactly. The specs check it against a
+  * driver-collected walk of the reference's in-memory dict
+  * (`UltimateParentReference` under `src/test`).
   *
   * Output schema: `(id, ultimate_parent, capped)` — `capped = true` marks the
   * fallback-to-self rows (the reference's RecursionError/Slack-alert path).
@@ -101,35 +96,5 @@ object UltimateParent {
       col("id"),
       when(resolved, col("anc")).otherwise(col("id")).as("ultimate_parent"),
       (!resolved).as("capped"))
-  }
-
-  /** Driver-collected walk — mirrors the reference's dict-based recursion
-    * (get_ultimate_parent.py:13-52) with an explicit step cap instead of the
-    * Python recursion limit. Same output contract as [[resolveDistributed]].
-    */
-  def resolveCollected(edges: DataFrame, maxDepth: Int = 200): DataFrame = {
-    val spark = edges.sparkSession
-    val parentOf: Map[String, String] = edges
-      .select(col("id").cast("string"), col("parent").cast("string"))
-      .collect()
-      .map(r => r.getString(0) -> r.getString(1))
-      .toMap
-
-    def walk(start: String): (String, Boolean) = {
-      var cur   = start
-      var steps = 0
-      while (steps <= maxDepth) {
-        val p = parentOf.getOrElse(cur, cur)
-        if (p == cur) return (cur, false)
-        cur = p
-        steps += 1
-      }
-      (start, true) // depth cap or cycle → fallback to self (reference :39)
-    }
-
-    import spark.implicits._
-    parentOf.keys.toSeq
-      .map { id => val (up, capped) = walk(id); (id, up, capped) }
-      .toDF("id", "ultimate_parent", "capped")
   }
 }

@@ -652,7 +652,7 @@ object SnapshotTable {
     * remain time-travelable until vacuum, and readers pinned to them are
     * unaffected. Carried from the RESTORED version: schema, zone stats,
     * deletion vector, bucket/SPJ layout specs — its whole physical truth.
-    * Carried from the CURRENT version: stream/agg watermarks (exactly-once
+    * Carried from the CURRENT version: stream watermarks (exactly-once
     * bookkeeping must survive a rollback — resetting it would double-apply
     * already-acked batches) and CHECK constraints, which are RE-VALIDATED
     * against the restored rows (a constraint added after `version` may not
@@ -671,12 +671,10 @@ object SnapshotTable {
       validateChecks(readVersion(spark, tableDir, version), checks.toMap,
         s"restoring $tableDir to v$version")
     val dynamic = curSnap.meta.view.filterKeys(k =>
-      k.startsWith("stream:") || k.startsWith("aggsrc:") ||
-        k.startsWith("check:")).toMap
+      k.startsWith("stream:") || k.startsWith("check:")).toMap
     val carried = snap.meta.view.filterKeys(k =>
-      !(k.startsWith("stream:") || k.startsWith("aggsrc:") ||
-        k.startsWith("check:") || k == "version" || k == "op" ||
-        k == "restored_from")).toMap ++ dynamic
+      !(k.startsWith("stream:") || k.startsWith("check:") ||
+        k == "version" || k == "op" || k == "restored_from")).toMap ++ dynamic
     val v = nextSlotGuarded(tableDir, cur)
     val body = (Seq(s"version=$v", "op=restore", s"restored_from=$version")
       ++ carried.toSeq.sortBy(_._1).map { case (k, value) => s"$k=$value" }
@@ -1252,196 +1250,6 @@ object SnapshotTable {
     }
   }
 
-  /** Last source version applied to aggregate replica `aggId` — the
-    * exactly-once watermark of [[maintainAggregate]], carried forward in
-    * every destination manifest's meta (the stream-watermark pattern:
-    * O(1) from the latest snapshot, vacuum-proof). */
-  def lastAggSource(tableDir: String, aggId: String): Option[Long] =
-    latestVersion(tableDir)
-      .flatMap(v => snapshot(tableDir, v).meta.get(s"aggsrc:$aggId"))
-      .map(_.toLong)
-
-  /** INCREMENTAL MATERIALIZED-AGGREGATE maintenance — the view-maintenance
-    * primitive on top of [[pollChanges]]: keep a
-    * `(groupKeys…, cnt, sum_<c>…)` rollup of the source table current by
-    * applying each CDC window as a GROUP DELTA instead of recomputing the
-    * aggregate (inserts +1/+v, deletes −1/−v; an update is its
-    * delete+insert pair, so its delta is the value difference). Only
-    * AFFECTED groups are touched: the delta joins the current rollup on
-    * the group keys, dead groups (cnt → 0) drop, and the whole apply is
-    * ONE atomic [[applyChanges]] commit that also advances the
-    * `aggsrc:<aggId>` watermark — an already-applied source version
-    * no-ops, so at-least-once CDC delivery yields exactly-once aggregate
-    * effects ([[drainChanges]]-composable). Sum columns must be integral
-    * (exact deltas; float sums would drift from a recompute).
-    * Returns the committed destination version (None for no-op). */
-  def maintainAggregate(spark: SparkSession, destDir: String, batch: ChangeBatch,
-                        groupKeys: Seq[String], sumCols: Seq[String],
-                        aggId: String,
-                        txn: Option[SnapshotTxn.Handle] = None): Option[Long] = {
-    require(groupKeys.nonEmpty, "maintainAggregate needs at least one group key")
-    if (lastAggSource(destDir, aggId).exists(_ >= batch.toVersion)) return None
-    val ch = batch.df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (ch.isEmpty) return None
-      sumCols.foreach { c =>
-        val dt = ch.schema(c).dataType
-        require(dt == org.apache.spark.sql.types.LongType ||
-          dt == org.apache.spark.sql.types.IntegerType,
-          s"sum column $c must be integral for exact deltas, got $dt")
-      }
-      // NULL group keys never rejoin their own rollup row (non-null-safe
-      // equality here AND inside applyChanges' key joins) — out of the
-      // keyed-replication contract, refused loudly
-      val nullKey = ch.filter(groupKeys.map(col(_).isNull).reduce(_ || _))
-        .limit(1).collect()
-      require(nullKey.isEmpty,
-        s"maintainAggregate group keys must be non-null, got ${nullKey.headOption}")
-      val sign = when(col("_change") === "insert", lit(1L)).otherwise(lit(-1L))
-      // NULL measure values contribute 0 (sum() ignores NULLs in a full
-      // recompute; an un-coalesced sign*NULL would poison the running sum)
-      val deltaAggs = sum(sign).as("d_cnt") +:
-        sumCols.map(c =>
-          sum(sign * coalesce(col(c).cast("long"), lit(0L))).as(s"d_$c"))
-      val delta = ch.groupBy(groupKeys.map(col): _*)
-        .agg(deltaAggs.head, deltaAggs.tail: _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val hasDest = latestVersion(destDir).isDefined
-      // dest is deliberately NOT persisted even though two branches scan
-      // it: caching the bare table read makes the CacheManager substitute
-      // applyChanges' internal input_file_name() scan with the cached
-      // relation — where input_file_name() is EMPTY — so no file is ever
-      // "touched" and stale group rows silently survive (reproduced).
-      // Persisting `merged`/`delta` is safe: substitution replaces whole
-      // cached plans, not their subtrees.
-      val dest = if (hasDest) read(spark, destDir) else null
-      val merged = (
-        if (!hasDest)
-          delta.select(groupKeys.map(col) ++ (col("d_cnt").as("cnt") +:
-            sumCols.map(c => col(s"d_$c").as(s"sum_$c"))): _*)
-        else
-          delta.join(dest, groupKeys, "left")
-            .select(groupKeys.map(col) ++
-              ((coalesce(col("cnt"), lit(0L)) + col("d_cnt")).as("cnt") +:
-                sumCols.map(c => (coalesce(col(s"sum_$c"), lit(0L)) +
-                  col(s"d_$c")).as(s"sum_$c"))): _*)
-        ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val negative = merged.filter(col("cnt") < 0).limit(1).collect()
-        require(negative.isEmpty,
-          s"inconsistent change feed: group ${negative.headOption} would go negative " +
-            "(a delete without its insert — replay the source window)")
-        val inserts = merged.filter(col("cnt") > 0).withColumn("_change", lit("insert"))
-        val full =
-          if (!hasDest) inserts
-          else dest
-            .join(delta.select(groupKeys.map(col): _*), groupKeys, "left_semi")
-            .withColumn("_change", lit("delete"))
-            .unionByName(inserts)
-        applyChanges(spark, destDir, full, groupKeys,
-          extraMeta = Seq(s"aggsrc:$aggId=${batch.toVersion}"), txn = txn)
-      } finally {
-        merged.unpersist()
-        delta.unpersist()
-      }
-    } finally ch.unpersist()
-  }
-
-  /** Live MATERIALIZED-AGGREGATE maintenance: the change stream of
-    * `sourceDir` folded continuously into the `destDir` rollup — each
-    * committed source version lands as one atomic group-delta commit,
-    * exactly-once through crashes/restarts ([[maintainAggregate]]'s
-    * aggsrc watermark absorbs every redelivery). */
-  def startAggregateStream(
-      spark: SparkSession, sourceDir: String, destDir: String,
-      groupKeys: Seq[String], sumCols: Seq[String],
-      consumerId: String, checkpointDir: String,
-      intervalMs: Long = 500L, autoResync: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startChangeStream(spark, sourceDir, consumerId, checkpointDir, intervalMs, autoResync) {
-      b =>
-        maintainAggregate(spark, destDir, b, groupKeys, sumCols, consumerId)
-        ()
-    }
-
-  /** Live MATERIALIZED-JOIN maintenance — [[startAggregateStream]]'s
-    * sibling: `sourceDir`'s change stream folded continuously into the
-    * `destDir` join view against `otherDir`'s CURRENT rows (re-resolved
-    * per batch), exactly-once through the [[maintainJoin]] watermark.
-    * Two-sided views run one stream per side. */
-  def startJoinStream(
-      spark: SparkSession, sourceDir: String, destDir: String,
-      otherDir: String, joinKeys: Seq[String], rowKeys: Seq[String],
-      consumerId: String, checkpointDir: String,
-      intervalMs: Long = 500L, autoResync: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startChangeStream(spark, sourceDir, consumerId, checkpointDir, intervalMs, autoResync) {
-      b =>
-        maintainJoin(spark, destDir, b, read(spark, otherDir),
-          joinKeys, rowKeys, consumerId)
-        ()
-    }
-
-  /** INCREMENTAL MATERIALIZED-JOIN maintenance — the join-view sibling of
-    * [[maintainAggregate]]: keep `destDir` = source ⋈ other (inner
-    * equi-join on `joinKeys`) current by applying each CDC window of ONE
-    * side as a KEYED REPLACEMENT instead of re-running the join:
-    *
-    *  - insert rows of the window join `other`'s CURRENT rows — those are
-    *    the new view rows for the affected source keys;
-    *  - delete rows contribute only their `rowKeys` (they must NOT require
-    *    a join match: the matching other-side row may itself be gone, and
-    *    the stale view rows still have to leave);
-    *  - one [[applyChanges]] commit replaces every view row whose
-    *    `rowKeys` were touched — so an update is recomputed against the
-    *    other side's current state, and a source delete drops all its
-    *    join fan-out rows at once.
-    *
-    * TWO-SIDED views run one consumer per side, each keyed by ITS side's
-    * row keys (the view carries both); applies interleave in any order and
-    * the view equals the flat join of the two table HEADS whenever both
-    * consumers have drained (spec-proven under interleaving — keyed
-    * replacement recomputes against current state, so the ΔA⋈ΔB
-    * double-count of the additive 4-term identity never arises).
-    *
-    * CONTRACT: `rowKeys` must uniquely key the SOURCE side's rows within
-    * the view (the primary key that rode into the view) — replacement
-    * wipes every view row with an affected key, so a non-unique key would
-    * drop unchanged siblings. NULL row keys are refused by the underlying
-    * keyed machinery; NULL join keys never enter an inner join (and so
-    * never enter the view). Exactly-once through the same `aggsrc:`
-    * watermark as the aggregate maintainer — redelivered windows no-op.
-    * Cost per window: O(Δ ⋈ other) + the file-granular rewrite of touched
-    * view files, never a view recompute. */
-  def maintainJoin(spark: SparkSession, destDir: String, batch: ChangeBatch,
-                   other: DataFrame, joinKeys: Seq[String],
-                   rowKeys: Seq[String], joinId: String,
-                   txn: Option[SnapshotTxn.Handle] = None): Option[Long] = {
-    require(joinKeys.nonEmpty, "maintainJoin needs at least one join key")
-    require(rowKeys.nonEmpty, "maintainJoin needs at least one row key")
-    if (lastAggSource(destDir, joinId).exists(_ >= batch.toVersion)) return None
-    val ch = batch.df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (ch.isEmpty) return None
-      // NULL row keys never rejoin their own view rows (non-null-safe
-      // joins inside applyChanges) — a NULL-keyed insert could never be
-      // replaced and a NULL-keyed delete would strand stale view rows;
-      // refuse loudly (maintainAggregate's group-key rule)
-      val nullKey = ch.filter(rowKeys.map(col(_).isNull).reduce(_ || _))
-        .limit(1).collect()
-      require(nullKey.isEmpty,
-        s"maintainJoin row keys must be non-null, got ${nullKey.headOption}")
-      val ins = ch.filter(col("_change") === "insert").drop("_change")
-        .join(other, joinKeys)
-        .withColumn("_change", lit("insert"))
-      val del = ch.filter(col("_change") === "delete")
-        .select(rowKeys.map(col) :+ col("_change"): _*)
-      val delta = ins.unionByName(del, allowMissingColumns = true)
-      applyChanges(spark, destDir, delta, rowKeys,
-        extraMeta = Seq(s"aggsrc:$joinId=${batch.toVersion}"), txn = txn)
-    } finally ch.unpersist()
-  }
-
   /** Durable offset advance via the same hard-link CAS as commits: the
     * offset file `<id>-<seq>.offset` either links (we won) or already
     * exists (a worker sharing the consumer id acked this window first). */
@@ -1492,10 +1300,7 @@ object SnapshotTable {
   }
 
   /** Drain every pending change window of `consumerId` through `apply`,
-    * acking AFTER each applied window — the one-tick unit of
-    * [[startChangeStream]], public so crash/restart/resync semantics are
-    * directly testable without stream timing (the
-    * `LshIndex.processDedupBatch` pattern). Returns windows applied.
+    * acking AFTER each applied window. Returns windows applied.
     *
     * Delivery is at-least-once per window (a crash between apply and ack
     * redelivers); an idempotent consumer ([[scd2Apply]]'s version-marker
@@ -1531,45 +1336,6 @@ object SnapshotTable {
           if autoResync && e.getMessage != null && e.getMessage.contains("vacuumed") =>
         resetConsumer(tableDir, consumerId)
         pollChanges(spark, tableDir, consumerId)
-    }
-
-  /** CONTINUOUS CDC consumption — [[pollChanges]] wired into a live
-    * Structured Streaming query: a rate ticker triggers every
-    * `intervalMs`, and each micro-batch drains the pending change windows
-    * of `consumerId` through `apply`. The rate source's checkpoint is
-    * only a trigger clock — the REAL offsets are the table's own durable
-    * consumer offsets (the external-offset connector pattern), so killing
-    * the query and restarting, even with a fresh checkpoint dir, resumes
-    * exactly at the acked boundary with no replayed effects. */
-  def startChangeStream(
-      spark: SparkSession, tableDir: String, consumerId: String,
-      checkpointDir: String, intervalMs: Long = 500L, autoResync: Boolean = false)(
-      apply: ChangeBatch => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(intervalMs))
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        drainChanges(spark, tableDir, consumerId, autoResync)(apply)
-        ()
-      }
-      .start()
-
-  /** Live SCD2 maintenance: the change stream of `sourceDir` applied
-    * continuously to the `historyDir` dimension history — each committed
-    * source version becomes one atomic history commit, exactly-once
-    * through crashes and restarts ([[scd2Apply]]'s version marker absorbs
-    * every redelivery), and [[scd2AsOf]] reconstructs any polled source
-    * version while the stream runs. */
-  def startScd2Stream(
-      spark: SparkSession, sourceDir: String, historyDir: String, keys: Seq[String],
-      consumerId: String, checkpointDir: String,
-      intervalMs: Long = 500L, autoResync: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startChangeStream(spark, sourceDir, consumerId, checkpointDir, intervalMs, autoResync) {
-      b =>
-        scd2Apply(spark, historyDir, b.df, keys, b.toVersion)
-        ()
     }
 
   /** The latest snapshot as a DataFrame. */
@@ -1936,8 +1702,7 @@ object SnapshotTable {
         else bTip.meta.view.filterKeys(k =>
           k.startsWith("zone:") && branchAdded.contains(zoneFile(k))).toMap
       val mainCarried = mTip.meta.view.filterKeys(k =>
-          k.startsWith("stream:") || k.startsWith("aggsrc:") ||
-            k.startsWith("check:") ||
+          k.startsWith("stream:") || k.startsWith("check:") ||
             k == "zonecol" || k == "zonecols" ||
             (k.startsWith("zone:") && !branchDeleted(zoneFile(k))))
         .toMap
@@ -2165,8 +1930,7 @@ object SnapshotTable {
           s"a CHECK constraint landed on $tableDir during this commit — retry")
       }
       val carried = prevMeta.view.filterKeys(k =>
-          k.startsWith("stream:") || k.startsWith("aggsrc:") ||
-            k.startsWith("check:") ||
+          k.startsWith("stream:") || k.startsWith("check:") ||
             (!replace && dropFiles.isEmpty && k == "dv") ||
             (!replace && !zoneColChanged &&
               (k.startsWith("zone:") || k == "zonecol" || k == "zonecols")))

@@ -4,10 +4,21 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Job censuses for specs that bound how many Spark jobs a call submits. */
+/** Job and block censuses for specs that bound how many Spark jobs a call
+  * submits and what it leaves persisted. */
 object TestJobs {
+
+  /** RDDs `body` leaves persisted once the frames it returns are released:
+    * an operator frees every checkpoint it made on the way, so only its
+    * result's remain, and the caller drops those. */
+  def leftPersisted(spark: SparkSession)(body: => Seq[DataFrame]): Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    body.foreach(graft.operators.PinnedLoop.release(_))
+    sc.getPersistentRDDs.keySet.toSet -- before
+  }
 
   /** Jobs `body` submits. They are tagged with a job group; a marker job in
     * the same group, submitted after `body`, tells when the listener has

@@ -134,4 +134,13 @@ class BfsSpec extends AnyFunSuite {
     assert(out((1L, 3L)) == (-1L, 0L) && out((1L, 4L)) == (-1L, 0L))
     assert(out((4L, 3L)) == (1L, 1L) && out((4L, 1L)) == (-1L, 0L))
   }
+
+  test("distances and pathCounts release every checkpoint they made but their result's") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 5L), (6L, 7L)).toDF("src", "dst")
+    val seeds = Seq(1L).toDF("id")
+    val left = graft.TestJobs.leftPersisted(spark)(Seq(
+      Bfs.distances(edges, "src", "dst", seeds, "id", maxDepth = 5),
+      Bfs.pathCounts(edges, "src", "dst", seeds, "id", maxDepth = 5)))
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
+  }
 }

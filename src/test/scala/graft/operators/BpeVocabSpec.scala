@@ -154,4 +154,13 @@ class BpeVocabSpec extends AnyFunSuite {
     val want = tricky.map(t => merges.foldLeft(refInit(t))((s, m) => refMerge(s, m.a, m.b)).toSeq)
     assert(got === want)
   }
+
+  test("learning releases every checkpoint it made, mid-run re-checkpoints too") {
+    // checkpointEvery = 2 re-checkpoints (and releases the last one) mid-run
+    val left = graft.TestJobs.leftPersisted(spark) {
+      BpeVocab.learnMerges(corpus.toDF("text"), "text", numMerges = 6, checkpointEvery = 2)
+      Seq.empty
+    }
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
+  }
 }

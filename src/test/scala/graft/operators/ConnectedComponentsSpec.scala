@@ -115,4 +115,10 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(got == Map(1L -> 1L, 2L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L, 7L -> 5L))
     spark.catalog.clearCache()
   }
+
+  test("minLabel releases every checkpoint it made but its result's") {
+    val left = graft.TestJobs.leftPersisted(spark)(Seq(ConnectedComponents.minLabel(
+      Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 8L)).toDF("a", "b"))))
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
+  }
 }

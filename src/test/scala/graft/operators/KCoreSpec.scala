@@ -70,4 +70,11 @@ class KCoreSpec extends AnyFunSuite {
     val (core3, drops3) = sparkPeel(g, 3)
     assert(core3.isEmpty && drops3.map(_._2).sum == 4L)
   }
+
+  test("a peel releases every checkpoint it made but its result's") {
+    val left = graft.TestJobs.leftPersisted(spark)(Seq(KCore.decompose(
+      Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L)).toDF("src", "dst"),
+      "src", "dst", k = 2).core))
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
+  }
 }

@@ -50,4 +50,11 @@ class LabelPropagationSpec extends AnyFunSuite {
     assert(lab.filterKeys(_ >= 11L).values.toSet.size == 1)
     assert(lab(1L) != lab(14L), "bridge must not merge the cliques")
   }
+
+  test("a run releases every round's checkpoint but its result's") {
+    val left = graft.TestJobs.leftPersisted(spark)(Seq(LabelPropagation.labels(
+      Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (5L, 6L)).toDF("src", "dst"),
+      "src", "dst", rounds = 10)))
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
+  }
 }

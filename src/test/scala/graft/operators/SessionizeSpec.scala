@@ -2,8 +2,6 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -29,27 +27,5 @@ class SessionizeSpec extends AnyFunSuite {
       (1L, 1L, 2L, 3.0),   // session 1: events at 0,10 → sum 3.0
       (1L, 2L, 2L, 7.0),   // session 2: events at 50,60 → sum 7.0
       (2L, 1L, 1L, 10.0)))
-  }
-
-  test("streaming session_window matches batch session boundaries") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, Double)]
-    val stream = mem.toDF().toDF("user_id", "ts", "value")
-    val q = StreamingSessionize.sessions(stream, gap = "30 minutes", watermark = "10 minutes")
-      .writeStream.outputMode("append").format("memory").queryName("sess_out").start()
-    try {
-      mem.addData(fixture.collect().map(r =>
-        (r.getLong(0), r.getTimestamp(1), r.getDouble(2))).toSeq: _*)
-      q.processAllAvailable()
-      // advance watermark far past all sessions to flush them
-      mem.addData((99L, ts(10000), 0.0))
-      q.processAllAvailable()
-      val out = spark.table("sess_out")
-        .filter(col("user_id") =!= 99)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(3), r.getDouble(4)))
-        .toSet
-      assert(out == Set((1L, 2L, 3.0), (1L, 2L, 7.0), (2L, 1L, 10.0)))
-    } finally q.stop()
   }
 }

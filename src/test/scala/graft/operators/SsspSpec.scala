@@ -69,4 +69,11 @@ class SsspSpec extends AnyFunSuite {
     assert(sparkSssp(edges, Set(1L, 99L), 12) ==
       Map(1L -> 0L, 2L -> 2L, 3L -> -1L, 4L -> -1L, 99L -> 0L))
   }
+
+  test("a run releases every checkpoint it made but its result's") {
+    val left = graft.TestJobs.leftPersisted(spark)(Seq(Sssp.distances(
+      Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 4L, 1L), (5L, 6L, 1L)).toDF("src", "dst", "w"),
+      "src", "dst", "w", Seq(1L).toDF("id"), "id", maxRounds = 5)))
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
+  }
 }

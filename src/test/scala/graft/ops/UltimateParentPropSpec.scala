@@ -26,7 +26,7 @@ class UltimateParentPropSpec extends AnyFunSuite {
     val df = edges.toDF("id", "parent")
     val d = UltimateParent.resolveDistributed(df, maxDepth).collect()
       .map(r => r.getString(0) -> (r.getString(1), r.getBoolean(2))).toMap
-    val c = UltimateParent.resolveCollected(df, maxDepth).collect()
+    val c = UltimateParentReference.resolveCollected(df, maxDepth).collect()
       .map(r => r.getString(0) -> (r.getString(1), r.getBoolean(2))).toMap
     (d, c)
   }

@@ -22,7 +22,7 @@ class UltimateParentSpec extends AnyFunSuite {
   private def bothImpls(e: DataFrame, maxDepth: Int = 200): Seq[Map[String, (String, Boolean)]] =
     Seq(
       resultMap(UltimateParent.resolveDistributed(e, maxDepth)),
-      resultMap(UltimateParent.resolveCollected(e, maxDepth)))
+      resultMap(UltimateParentReference.resolveCollected(e, maxDepth)))
 
   test("chain + self-root + isolated (reference test_roll_up)") {
     val e = edges("A" -> "B", "B" -> "C", "C" -> "D", "D" -> "D", "E" -> "E")

@@ -1,74 +1,68 @@
 package graft.pipeline
 
 import java.nio.file.Files
-import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.operators.StreamingDebounce
-import graft.operators.StreamingDebounce.{Burst, Ev}
+import graft.operators.StreamingDedup
 import graft.sources.SnapshotTable
 
-/** End-to-end streaming composition: raw events → watermark-sound burst
-  * debounce → exactly-once micro-batch commits into a SnapshotTable →
-  * incremental CDC consumption into a downstream replica.
+/** One delivered record; an at-least-once source redelivers it whole. */
+final case class Delivered(id: Long, userId: Long, tsUs: Long, value: Long)
+
+/** End-to-end streaming composition: raw events with redeliveries →
+  * first-seen dedup across micro-batches → exactly-once micro-batch
+  * commits into a SnapshotTable → incremental CDC consumption into a
+  * downstream replica.
   *
   * Each stage's guarantee is proven in its own spec; this one proves they
   * COMPOSE: the replica a consumer builds purely from change batches is
-  * exactly the burst set the batch computation produces, with every
+  * exactly the record set the batch computation produces, with every
   * intermediate a committed, time-travelable version.
   */
 class StreamingE2ESpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def ev(u: Long, typ: String, id: Long, t: Long) =
-    Ev(u, typ, id, t, new Timestamp(t / 1000L))
-
-  test("stream -> debounce -> snapshot commits -> CDC replica equals the batch answer") {
+  test("stream -> dedup -> snapshot commits -> CDC replica equals the batch answer") {
     implicit val sqlCtx = spark.sqlContext
     val src = Files.createTempDirectory("graft_e2e_src").toString
     val dst = Files.createTempDirectory("graft_e2e_dst").toString
     val ckpt = Files.createTempDirectory("graft_e2e_ckpt").toString
-    val gapUs = 5000000L // 5 s bursts
 
     val rnd = new scala.util.Random(31)
-    var t = 0L
-    val events = (1 to 50).map { i =>
-      t += rnd.nextInt(4000000).toLong
-      ev(rnd.nextInt(2).toLong, "beacon", i.toLong, math.max(0L, t - rnd.nextInt(1000000)))
+    val unique = (1 to 50).map { i =>
+      Delivered(i.toLong, rnd.nextInt(3).toLong, i * 1000000L + rnd.nextInt(1000000),
+        rnd.nextInt(100).toLong)
     }
+    // every record once, some two or three times: the shuffle puts
+    // redeliveries both inside one micro-batch and in later ones
+    val delivered = rnd.shuffle(
+      unique ++ unique.filter(_.id % 3 == 0) ++ unique.filter(_.id % 7 == 0))
 
-    val mem = MemoryStream[Ev]
-    val bursts = StreamingDebounce.bursts(mem.toDS(), gapUs, watermark = "2 seconds")
-    val q = SnapshotTable.startStream(bursts.toDF(), src, ckpt, "e2e_bursts")
+    val mem = MemoryStream[Delivered]
+    val firsts = StreamingDedup.firstSeen(mem.toDS())(_.id)
+    val q = SnapshotTable.startStream(firsts.toDF(), src, ckpt, "e2e_firsts")
     try {
       def syncReplica(): Unit =
         SnapshotTable.pollChanges(spark, src, "replica").foreach { b =>
-          SnapshotTable.applyChanges(spark, dst, b.df,
-            Seq("userId", "eventType", "startUs"))
+          SnapshotTable.applyChanges(spark, dst, b.df, Seq("id"))
           assert(b.ack())
         }
-      events.grouped(12).foreach { chunk =>
+      delivered.grouped(12).foreach { chunk =>
         mem.addData(chunk: _*); q.processAllAvailable(); syncReplica()
-      }
-      // flush: two tick rounds close every real burst (watermark advances
-      // at batch end; a key re-enters the operator only with data)
-      val maxReal = events.map(_.tsUs).max
-      for ((tickTs, idBase) <- Seq((maxReal + 1000000000L, 9000L),
-                                   (maxReal + 2000000000L, 9100L))) {
-        mem.addData((0 until 2).map(u => ev(u.toLong, "beacon", idBase + u, tickTs)): _*)
-        q.processAllAvailable(); syncReplica()
       }
 
       // the replica, built ONLY from change batches, equals the batch answer
-      val replicaReal = SnapshotTable.read(spark, dst).as[Burst].collect()
-        .filter(_.startUs <= maxReal).toSet
-      val batch = StreamingDebounce
-        .bursts(spark.createDataset(events), gapUs).collect().toSet
-      assert(replicaReal == batch)
+      val replica = SnapshotTable.read(spark, dst).as[Delivered].collect().toSet
+      val batch = StreamingDedup.firstSeen(spark.createDataset(delivered))(_.id)
+        .collect().toSet
+      assert(batch == unique.toSet)
+      assert(replica == batch)
+      // no redelivery reached a commit (the keyed replica would hide one)
+      assert(SnapshotTable.read(spark, src).count() == unique.size)
 
       // every micro-batch was ONE committed version; replaying the CDF
       // from scratch (a second consumer) reconstructs the same replica
@@ -76,12 +70,10 @@ class StreamingE2ESpec extends AnyFunSuite {
       var more = true
       while (more) SnapshotTable.pollChanges(spark, src, "replica2") match {
         case Some(b) =>
-          SnapshotTable.applyChanges(spark, dst2, b.df,
-            Seq("userId", "eventType", "startUs")); assert(b.ack())
+          SnapshotTable.applyChanges(spark, dst2, b.df, Seq("id")); assert(b.ack())
         case None => more = false
       }
-      val replica2 = SnapshotTable.read(spark, dst2).as[Burst].collect()
-        .filter(_.startUs <= maxReal).toSet
+      val replica2 = SnapshotTable.read(spark, dst2).as[Delivered].collect().toSet
       assert(replica2 == batch)
     } finally q.stop()
   }

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -216,36 +215,5 @@ class SnapshotTxnSpec extends AnyFunSuite {
     assert(!Files.exists(SnapshotTable.txnOkPath(a, 2L)),
       ".txnok sidecars must not leak past their vacuumed versions")
     assert(ints(a) == Seq(1, 2, 3, 4))
-  }
-
-  test("maintainJoin destinations ride a transaction (fact + view all-or-nothing)") {
-    val fact = tmp(); val viewA = tmp(); val viewB = tmp(); val txd = tmp()
-    val dim = Seq((1L, "gold"), (2L, "silver")).toDF("k", "tier")
-    SnapshotTable.commitAppend(Seq((1L, 100L, 5L)).toDF("k", "row_id", "v"), fact)
-    // bootstrap both views from the first CDC window NON-transactionally
-    val b0 = SnapshotTable.pollChanges(spark, fact, "c1").get
-    SnapshotTable.maintainJoin(spark, viewA, b0, dim, Seq("k"), Seq("row_id"), "jA")
-    SnapshotTable.maintainAggregate(spark, viewB, b0, Seq("k"), Seq("v"), "gB")
-    assert(b0.ack())
-
-    // a new fact commit, then BOTH views updated in ONE transaction
-    SnapshotTable.commitAppend(Seq((2L, 101L, 7L)).toDF("k", "row_id", "v"), fact)
-    val b1 = SnapshotTable.pollChanges(spark, fact, "c1").get
-    val h = SnapshotTxn.begin(txd, Seq(viewA, viewB))
-    SnapshotTable.maintainJoin(spark, viewA, b1, dim, Seq("k"), Seq("row_id"), "jA",
-      txn = Some(h))
-    // CRASH POINT: viewA staged, viewB not — readers see the OLD state of both
-    assert(SnapshotTable.read(spark, viewA).count() == 1)
-    assert(SnapshotTable.read(spark, viewB).count() == 1)
-    SnapshotTable.maintainAggregate(spark, viewB, b1, Seq("k"), Seq("v"), "gB",
-      txn = Some(h))
-    assert(SnapshotTable.read(spark, viewB).count() == 1)
-    SnapshotTxn.commit(h)
-    assert(b1.ack())
-    // after the decision both views flip together
-    assert(SnapshotTable.read(spark, viewA).count() == 2)
-    val agg = SnapshotTable.read(spark, viewB)
-      .orderBy(col("k")).collect().map(r => (r.getLong(0), r.getLong(2)))
-    assert(agg.toSeq == Seq((1L, 5L), (2L, 7L)))
   }
 }
