@@ -40,4 +40,29 @@ class TopKAggregateSpec extends AnyFunSuite {
     assert(out(1L) == Seq((9.0, 3L), (5.0, 7L))) // tie at 5.0 -> lower payload
     assert(out(2L) == Seq((4.0, 2L)))
   }
+
+  test("a group spread over many partitions equals the pure-Scala top-k") {
+    val rnd = new scala.util.Random(44)
+    val rows = (1 to 3000).map(i => (rnd.nextInt(6).toLong, rnd.nextInt(400) / 4.0, i.toLong))
+    val out = rows.toDF("g", "score", "p").repartition(13)
+      .groupBy(col("g")).agg(TopKAggregate.topK(col("score"), col("p"), 5).as("top"))
+      .collect().map(r => r.getLong(0) ->
+        r.getSeq[org.apache.spark.sql.Row](1).map(x => (x.getDouble(0), x.getLong(1))))
+      .toMap
+    val want = rows.groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3))
+      .sortBy { case (s, p) => (-s, p) }.take(5)).toMap
+    assert(out == want)
+  }
+
+  test("rows with a null score or payload are skipped") {
+    val df = Seq[(Long, Option[Double], Option[Long])](
+      (1L, Some(2.0), Some(1L)), (1L, None, Some(2L)), (1L, Some(9.0), None),
+      (2L, None, Some(5L))
+    ).toDF("g", "score", "p")
+    val out = df.groupBy(col("g")).agg(TopKAggregate.topK(col("score"), col("p"), 3).as("top"))
+      .collect().map(r => r.getLong(0) ->
+        r.getSeq[org.apache.spark.sql.Row](1).map(x => (x.getDouble(0), x.getLong(1))))
+      .toMap
+    assert(out == Map(1L -> Seq((2.0, 1L)), 2L -> Seq.empty))
+  }
 }

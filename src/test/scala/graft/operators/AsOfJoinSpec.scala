@@ -98,4 +98,46 @@ class AsOfJoinSpec extends AnyFunSuite {
     assert(out(Some(1.0)) == 200L)  // t in 100..299
     assert(out(Some(3.0)) == 201L)  // t in 300..500
   }
+
+  /** Brute force: per left row, the right row of its key with the largest
+    * ts <= the left ts, or None. */
+  private def bruteAsOf(left: Seq[(Long, Long, String)], right: Seq[(Long, Long, Double)])
+      : Set[(String, Option[Long], Option[Double])] =
+    left.map { case (k, t, tag) =>
+      val prior = right.filter(r => r._1 == k && r._2 <= t)
+      if (prior.isEmpty) (tag, None, None)
+      else { val r = prior.maxBy(_._2); (tag, Some(r._2), Some(r._3)) }
+    }.toSet
+
+  private def randomSides(seed: Long) = {
+    val rnd = new scala.util.Random(seed)
+    val left = (1 to 150).map(i => (rnd.nextInt(5).toLong, rnd.nextInt(40).toLong, s"l$i"))
+    val right = (1 to 80).map(_ => (rnd.nextInt(6).toLong, rnd.nextInt(40).toLong))
+      .distinct.map { case (k, t) => (k, t, rnd.nextInt(1000) / 10.0) }
+    (left, right)
+  }
+
+  private def asofRows(df: org.apache.spark.sql.DataFrame) =
+    df.select("tag", "asof_ts", "asof_v").collect().map { r =>
+      (r.getString(0), Option(r.get(1)).map(_.asInstanceOf[Long]),
+        Option(r.get(2)).map(_.asInstanceOf[Double]))
+    }.toSet
+
+  test("latestPrior equals a brute-force latest-prior scan (inclusive ties)") {
+    for (seed <- Seq(1L, 2L, 3L)) {
+      val (left, right) = randomSides(seed)
+      val got = asofRows(AsOfJoin.latestPrior(
+        left.toDF("k", "t", "tag"), right.toDF("k", "t", "v"), "k", "t", "v"))
+      assert(got == bruteAsOf(left, right), s"seed $seed")
+    }
+  }
+
+  test("latestPriorMerge equals the brute-force scan and keeps every left column") {
+    val (left, right) = randomSides(4L)
+    val out = AsOfJoin.latestPriorMerge(
+      left.toDF("k", "t", "tag"), right.toDF("k", "t", "v"), "k", "t", "v")
+    assert(out.columns.toSeq == Seq("k", "t", "tag", "asof_ts", "asof_v"))
+    assert(out.count() == left.size.toLong)
+    assert(asofRows(out) == bruteAsOf(left, right))
+  }
 }

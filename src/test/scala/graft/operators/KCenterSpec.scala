@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.functions.max
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -61,5 +62,46 @@ class KCenterSpec extends AnyFunSuite {
     val got = KCenter.fit(df, "vec_id", "embedding", k = 2, seedId = 0L)
     assert(got(1)._2 === 3L)
     assert(got(1)._3 === 1000000L * 1000000L)
+  }
+
+  private def blobPoints(seed: Int): Seq[(Long, Array[Double])] = {
+    val rnd = new scala.util.Random(seed)
+    for (b <- 0 until 5; i <- 0 until 8) yield {
+      val v = Array.tabulate(3)(d => (if (d == b % 3) b.toDouble else 0.0) + rnd.nextDouble() * 0.3)
+      ((b * 8 + i).toLong, v)
+    }
+  }
+
+  test("assign picks each point's nearest center (ties to the earlier round)") {
+    val pts = blobPoints(11)
+    val df = pts.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
+    val (picks, centers) = KCenter.fitWithVectors(df, "vec_id", "embedding", k = 5, seedId = 3L)
+    def micro(x: Double): Long = KMeansIVF.roundHalfAway(x * 1e6)
+    def d2(a: Array[Long], b: Array[Long]) = a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
+    val got = KCenter.assign(df, "vec_id", "embedding", centers).collect()
+      .map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2), r.getLong(3))).toMap
+    for ((id, v) <- pts) {
+      val ds = centers.map(c => d2(v.map(micro), c)).zipWithIndex.sortBy { case (d, r) => (d, r) }
+      assert(got(id) == ((ds(0)._2, ds(0)._1, ds(1)._1)), s"point $id")
+    }
+    for ((r, id, _) <- picks) assert(got(id)._2 == 0L, s"pick $id of round $r is its own center")
+  }
+
+  test("each round's cover_d2 is the covering radius of the picks before it") {
+    val pts = blobPoints(12)
+    val df = pts.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
+    val (picks, centers) = KCenter.fitWithVectors(df, "vec_id", "embedding", k = 6, seedId = 0L)
+    for (r <- 1 until picks.size) {
+      val radius = KCenter.assign(df, "vec_id", "embedding", centers.take(r))
+        .agg(max("d2")).head().getLong(0)
+      assert(picks(r)._3 == radius, s"round $r")
+    }
+  }
+
+  test("k = 1 returns only the seed; k outside [1, 64] is rejected") {
+    val df = blobPoints(13).map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
+    assert(KCenter.fit(df, "vec_id", "embedding", k = 1, seedId = 9L) == Seq((0, 9L, 0L)))
+    intercept[IllegalArgumentException](KCenter.fit(df, "vec_id", "embedding", k = 0, seedId = 9L))
+    intercept[IllegalArgumentException](KCenter.fit(df, "vec_id", "embedding", k = 65, seedId = 9L))
   }
 }

@@ -71,4 +71,34 @@ class KTrussSpec extends AnyFunSuite {
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert(surv.forall { case (a, b) => (adj(a) & adj(b)).size >= 2 })
   }
+
+  /** Brute-force peel: per round, keep the edges with >= k-2 common
+    * neighbors in the current graph. Returns (round, before, after). */
+  private def refCurve(edges: Seq[(Long, Long)], k: Int, rounds: Int): Seq[(Int, Long, Long)] = {
+    var cur = edges.toSet
+    (1 to rounds).map { r =>
+      val nb = cur.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+      val next = cur.filter { case (a, b) => (nb(a) intersect nb(b)).size >= k - 2 }
+      val row = (r, cur.size.toLong, next.size.toLong)
+      cur = next
+      row
+    }
+  }
+
+  test("random graphs: every round of the attrition curve equals a brute-force peel") {
+    val rnd = new scala.util.Random(71)
+    for (k <- Seq(3, 4)) {
+      val edges = (1 to 160).map(_ => (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
+        .collect { case (x, y) if x != y => (math.min(x, y), math.max(x, y)) }.distinct
+      val curve = KTruss.attritionCurve(edges.toDF("a", "b"), k, rounds = 4)
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+      assert(curve == refCurve(edges, k, 4), s"k=$k")
+    }
+  }
+
+  test("k below 3 or a non-positive round count is rejected") {
+    intercept[IllegalArgumentException](KTruss.attritionCurve(edges, k = 2, rounds = 1))
+    intercept[IllegalArgumentException](KTruss.attritionCurve(edges, k = 4, rounds = 0))
+  }
 }

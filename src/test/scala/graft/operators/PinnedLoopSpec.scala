@@ -117,4 +117,31 @@ class PinnedLoopSpec extends AnyFunSuite {
     assert(capped.pending == Seq(8L, 7L, 6L) && !capped.converged)
     assert(!countdown(0).converged, "no round run is not convergence")
   }
+
+  test("release frees a local checkpoint's blocks; Dataset.unpersist leaves them") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val ck = path(200).toDF("a", "b").localCheckpoint()
+    val made = sc.getPersistentRDDs.keySet -- before
+    assert(made.nonEmpty, "an eager local checkpoint persists its RDD")
+    ck.unpersist(blocking = true)
+    assert(made.subsetOf(sc.getPersistentRDDs.keySet), "unpersist does not reach checkpoint blocks")
+    PinnedLoop.release(ck, blocking = true)
+    assert((sc.getPersistentRDDs.keySet intersect made).isEmpty)
+  }
+
+  test("release finds a checkpoint under a projection and leaves cached frames alone") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val ck = path(100).toDF("a", "b").localCheckpoint()
+    val made = sc.getPersistentRDDs.keySet -- before
+    val cached = path(50).toDF("a", "b").filter(col("a") > 3).cache()
+    try {
+      assert(cached.count() == 46L)
+      PinnedLoop.release(ck.select((col("a") + 1).as("a1")).filter(col("a1") > 10), blocking = true)
+      assert((sc.getPersistentRDDs.keySet intersect made).isEmpty)
+      assert(cached.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      assert(cached.count() == 46L)
+    } finally cached.unpersist(blocking = true)
+  }
 }

@@ -30,4 +30,51 @@ class PrefixSumSpec extends AnyFunSuite {
     assert(out.map(_.getAs[Long]("running")).toSeq == Seq(10L, 30L, 60L))
     assert(out.map(_.getAs[String]("tag")).toSeq == Seq("a", "b", "c"))
   }
+
+  private def upTo(f: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
+    f(col("v")).over(Window.orderBy(col("k")).rowsBetween(Window.unboundedPreceding, 0))
+
+  test("running min and max scans equal the single-partition window folds") {
+    val rnd = new scala.util.Random(5)
+    val df = (1 to 3000).map(i => (i.toLong, rnd.nextInt(2001).toLong - 1000))
+      .toDF("k", "v").repartition(9)
+    val got = PrefixSum.runningScans(df, "k",
+        Seq(("v", "lo", "min"), ("v", "hi", "max")), numParts = 6)
+      .select("k", "lo", "hi").collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val want = df.select(col("k"), upTo(min(_)).as("lo"), upTo(max(_)).as("hi"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(got == want)
+  }
+
+  test("runningMulti: two sums over one shuffle equal two separate windows") {
+    val rnd = new scala.util.Random(6)
+    val df = (1 to 2000).map(i => (i.toLong * 2, rnd.nextInt(50).toLong, rnd.nextInt(9).toLong - 4))
+      .toDF("k", "v", "w").repartition(5)
+    val got = PrefixSum.runningMulti(df, "k", Seq("v" -> "cv", "w" -> "cw"), numParts = 7)
+      .select("k", "cv", "cw").collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val w = Window.orderBy(col("k")).rowsBetween(Window.unboundedPreceding, 0)
+    val want = df.select(col("k"), sum(col("v")).over(w), sum(col("w")).over(w))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(got == want)
+  }
+
+  test("more partitions than rows: empty ranges contribute the identity") {
+    val df = Seq((5L, 3L), (1L, 4L), (9L, -2L)).toDF("k", "v")
+    val out = PrefixSum.runningScans(df, "k",
+        Seq(("v", "s", "sum"), ("v", "lo", "min"), ("v", "hi", "max")), numParts = 40)
+      .orderBy("k").select("s", "lo", "hi").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(out == Seq((4L, 4L, 4L), (7L, 3L, 4L), (5L, -2L, 4L)))
+  }
+
+  test("duplicate output names and unknown scan kinds are rejected") {
+    val df = Seq((1L, 1L)).toDF("k", "v")
+    intercept[IllegalArgumentException] {
+      PrefixSum.runningScans(df, "k", Seq(("v", "c", "sum"), ("v", "c", "max")))
+    }
+    intercept[IllegalArgumentException] {
+      PrefixSum.runningScans(df, "k", Seq(("v", "c", "avg")))
+    }
+    intercept[IllegalArgumentException](PrefixSum.runningScans(df, "k", Nil))
+  }
 }

@@ -62,4 +62,46 @@ class RangeJoinSpec extends AnyFunSuite {
     assert(got.distinct.length === got.length)
     assert(got.toSet === Set(("L1", "R1"), ("L2", "R1"), ("L3", "R3")))
   }
+
+  test("intervalsOverlap == naive join on random intervals, each pair once") {
+    val rnd = new scala.util.Random(12)
+    def side(prefix: String, n: Int) = (1 to n).map { i =>
+      val s = rnd.nextInt(1000).toLong; (s"$prefix$i", s, s + rnd.nextInt(120).toLong)
+    }
+    val left = side("L", 120).toDF("lid", "ls", "le")
+    val right = side("R", 90).toDF("rid", "rs", "re")
+    for (width <- Seq(7L, 50L, 400L)) {
+      val got = RangeJoin.intervalsOverlap(left, right, "ls", "le", "rs", "re", width)
+        .select("lid", "rid").as[(String, String)].collect().toSeq
+      val naive = left.join(right, col("ls") <= col("re") && col("rs") <= col("le"))
+        .select("lid", "rid").as[(String, String)].collect().toSeq
+      assert(got.sorted == naive.sorted, s"width $width")
+    }
+  }
+
+  test("pointsInIntervals == naive containment join over a year of random data") {
+    val rnd = new scala.util.Random(13)
+    val base = ts("2024-01-01 00:00:00").getTime
+    val day = 86400000L
+    val points = (1 to 200).map(_ => Tuple1(new Timestamp(base + rnd.nextInt(365) * day + rnd.nextInt(86400) * 1000L)))
+      .toDF("pt")
+    val intervals = (1 to 40).map { i =>
+      val s = base + rnd.nextInt(365) * day
+      (new Timestamp(s), new Timestamp(s + (1 + rnd.nextInt(70)) * day), s"I$i")
+    }.toDF("s", "e", "label")
+    val got = RangeJoin.pointsInIntervals(points, intervals, "pt", "s", "e")
+      .select("pt", "label").collect().map(r => (r.getTimestamp(0), r.getString(1))).toSeq
+    val naive = points.join(intervals, col("pt") >= col("s") && col("pt") < col("e"))
+      .select("pt", "label").collect().map(r => (r.getTimestamp(0), r.getString(1))).toSeq
+    assert(got.sortBy(x => (x._1.getTime, x._2)) == naive.sortBy(x => (x._1.getTime, x._2)))
+    assert(naive.nonEmpty)
+  }
+
+  test("intervalsOverlap rejects a non-positive bucket width") {
+    val df = Seq(("a", 0L, 1L)).toDF("id", "s", "e")
+    val other = Seq(("b", 0L, 1L)).toDF("id2", "s2", "e2")
+    intercept[IllegalArgumentException] {
+      RangeJoin.intervalsOverlap(df, other, "s", "e", "s2", "e2", 0L)
+    }
+  }
 }

@@ -50,4 +50,28 @@ class SkylineSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"skyline must not fall back to an all-pairs join:\n$plan")
   }
+
+  test("the bucket width changes the plan, never the frontier") {
+    val rnd = new scala.util.Random(61)
+    val pts = (1 to 400).map(_ => (rnd.nextInt(300).toLong - 150, rnd.nextInt(300).toLong - 150))
+    val want = brute(pts)
+    for (width <- Seq(1L, 7L, 64L, 100000L)) assert(run(pts, width) == want, s"width $width")
+  }
+
+  test("maximizing a dimension by negating it gives the (min x, max y) frontier") {
+    val rnd = new scala.util.Random(62)
+    val pts = (1 to 200).map(_ => (rnd.nextInt(100).toLong, rnd.nextInt(100).toLong))
+    val got = run(pts.map { case (x, y) => (x, -y) }, 10L).map { case ((x, y), n) => (x, -y) -> n }
+    val want = pts.groupBy(identity).map { case (p, g) => p -> g.size.toLong }
+      .filter { case ((qx, qy), _) =>
+        !pts.exists { case (px, py) => px <= qx && py >= qy && (px < qx || py > qy) }
+      }
+    assert(got == want)
+  }
+
+  test("a non-positive bucket width is rejected") {
+    intercept[IllegalArgumentException] {
+      Skyline.frontier2Min(Seq((1L, 1L)).toDF("x", "y"), "x", "y", 0L)
+    }
+  }
 }

@@ -121,4 +121,74 @@ class StreamingAggregatesSpec extends AnyFunSuite {
       }
     } finally q.stop()
   }
+
+  test("tumbling batch form equals a per-(hour, key) count and exact-cents sum") {
+    val rnd = new scala.util.Random(3)
+    val events = (0 until 300).map { _ =>
+      (ts(rnd.nextInt(600)), Seq("click", "view", "buy")(rnd.nextInt(3)),
+        rnd.nextInt(100000) / 100.0)
+    }
+    val got = StreamingAggregates
+      .tumbling(events.toDF("ts", "event_type", "value"), watermark = None)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
+    val hourUs = 3600L * 1000000L
+    val want = events.groupBy { case (t, k, _) => (t.getTime * 1000L / hourUs * hourUs, k) }
+      .map { case ((h, k), es) =>
+        (h, k, es.size.toLong, es.map(e => math.round(e._3 * 100)).sum.toDouble / 100)
+      }.toSet
+    assert(got == want)
+  }
+
+  test("tumbling without a watermark: complete-mode stream under random slicing == batch") {
+    implicit val sqlCtx = spark.sqlContext
+    val rnd = new scala.util.Random(29)
+    val events = (0 until 250).map { _ =>
+      (ts(rnd.nextInt(300)), Seq("a", "b")(rnd.nextInt(2)), rnd.nextInt(5000) / 100.0)
+    }
+    val mem = MemoryStream[(Timestamp, String, Double)]
+    val q = StreamingAggregates
+      .tumbling(mem.toDF().toDF("ts", "event_type", "value"), watermark = None)
+      .writeStream.outputMode("complete").format("memory").queryName("tumb_complete").start()
+    try {
+      var rest = events
+      while (rest.nonEmpty) {
+        val n = 1 + rnd.nextInt(60)
+        mem.addData(rest.take(n): _*)
+        q.processAllAvailable()
+        rest = rest.drop(n)
+      }
+      val streamed = spark.table("tumb_complete").collect().map(_.toSeq).toSet
+      val batch = StreamingAggregates
+        .tumbling(events.toDF("ts", "event_type", "value"), watermark = None)
+        .collect().map(_.toSeq).toSet
+      assert(streamed == batch)
+    } finally q.stop()
+  }
+
+  test("OHLC bars skip null values and break equal-timestamp opens and closes by id") {
+    val events = Seq[(Timestamp, Long, Option[Double])](
+      (ts(0), 0L, None),        // earliest row, but no value: not the open
+      (ts(10), 5L, Some(1.0)),
+      (ts(10), 2L, Some(3.0)),  // same instant as id 5, smaller id: the open
+      (ts(50), 1L, Some(2.0)),
+      (ts(50), 9L, Some(4.0)))  // same instant as id 1, larger id: the close
+    val rows = StreamingAggregates
+      .ohlcBars(events.toDF("ts", "event_id", "value"), watermark = None)
+      .collect().map(_.toSeq)
+    assert(rows.toSeq == Seq(Seq(0L, 300L, 400L, 100L, 400L, 4L, 1000L)))
+  }
+
+  test("binned histogram clamps past the last bin and counts every non-null row once") {
+    val events = Seq[(Timestamp, Option[Double])](
+      (ts(1), Some(1.0)), (ts(2), Some(7.5)), (ts(3), Some(100.0)), (ts(4), Some(19.99)),
+      (ts(5), None))
+    val bins = StreamingAggregates.binnedHistogram(events.toDF("ts", "value"),
+      binWidthCents = 500L, nBins = 4, watermark = None)
+    assert(bins.collect().map(r => (r.getLong(1), r.getLong(2))).toSet ==
+      Set((0L, 1L), (1L, 1L), (3L, 2L)))
+    val p = StreamingAggregates.percentileFromBins(bins, Seq(50, 100), binWidthCents = 500L)
+      .collect().map(_.toSeq)
+    // n = 4: p50 is rank 2 (bin 1), p100 is rank 4 (the clamped bin 3)
+    assert(p.toSeq == Seq(Seq(0L, 4L, 1L, 500L, 3L, 1500L)))
+  }
 }

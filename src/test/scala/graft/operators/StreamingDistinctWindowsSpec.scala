@@ -113,4 +113,28 @@ class StreamingDistinctWindowsSpec extends AnyFunSuite {
         s"window $ws: est $est vs truth $truth")
     }
   }
+
+  test("bad window or sketch parameters are rejected before any plan is built") {
+    val df = events.toDF("ts", "user_id")
+    def call(slide: Long, n: Int, k: Int) =
+      StreamingDistinctWindows.sketchPerWindow(df, "ts", "user_id", slide, n, k)
+    intercept[IllegalArgumentException](call(0L, 4, 32))
+    intercept[IllegalArgumentException](call(slideUs, 0, 32))
+    intercept[IllegalArgumentException](call(slideUs, 4, 1))
+    // (k - 1) * M must fit in a long: M = 2^53, so k = 1025 overflows
+    val e = intercept[IllegalArgumentException](call(slideUs, 4, 1025))
+    assert(e.getMessage.contains("overflows"), e.getMessage)
+    assert(call(slideUs, 4, 1024).columns.toSeq ==
+      Seq("ws_us", "n_sketch", "kth_min", "est_distinct"))
+  }
+
+  test("nSlides = 1 is a tumbling window: exact per-slot distinct counts below capacity") {
+    val out = StreamingDistinctWindows
+      .sketchPerWindow(events.toDF("ts", "user_id"), "ts", "user_id", slideUs, 1, 256)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(3))).toMap
+    val want = events.groupBy { case (t, _) => t.getTime * 1000L / slideUs * slideUs }
+      .map { case (ws, es) => ws -> es.map(_._2).distinct.size.toLong }
+    assert(out.keySet == want.keySet)
+    for ((ws, n) <- want) assert(out(ws) == ((n, n)), s"slot $ws")
+  }
 }

@@ -80,4 +80,47 @@ class StreamingTopKSpec extends AnyFunSuite {
       assert(e.est == exact(e.item))
     assert(a.view.mapValues(_.entries.toSet).toMap == b.view.mapValues(_.entries.toSet).toMap)
   }
+
+  test("withBucket routes every item to one shard in [0, buckets), whatever the partitioning") {
+    val items = (0 until 500).map(i => s"w$i")
+    def route(df: org.apache.spark.sql.DataFrame) =
+      StreamingTopK.withBucket(df, "item", 7).as[(Int, String)].collect()
+        .map { case (b, i) => i -> b }.toMap
+    val one = route(items.toDF("item").repartition(1))
+    val many = route(items.toDF("item").repartition(9))
+    assert(one == many)
+    assert(one.size == items.size)
+    assert(one.values.forall(b => b >= 0 && b < 7))
+    assert(one.values.toSet.size == 7, "500 items should touch every shard")
+  }
+
+  test("batch summaries skip null items and still meet the per-shard bound") {
+    val rng = new Random(77)
+    val stream = (1 to 600).map { _ =>
+      if (rng.nextInt(10) == 0) null else s"i${(math.abs(rng.nextGaussian()) * 8).toInt}"
+    }
+    val k = 4; val buckets = 3
+    val latest = StreamingTopK.summaries(stream.toDF("item"), "item", k, buckets)
+      .collect().toSeq
+    val kept = stream.filter(_ != null)
+    assert(latest.map(_.nSeen).sum == kept.size.toLong, "nulls must not be counted")
+    assert(latest.map(_.bucket).distinct.size == latest.size, "one summary per shard")
+    val exact = kept.groupBy(identity).view.mapValues(_.size.toLong).toMap
+    for (s <- latest; e <- s.entries) {
+      assert(e.item != null)
+      assert(e.est <= exact(e.item))
+      assert((exact(e.item) - e.est) * (k + 1) <= s.nSeen)
+    }
+  }
+
+  test("merged lists each item once, ordered by estimate then item") {
+    val latest = Seq(
+      StreamingTopK.ShardSummary(0, 10L,
+        Seq(StreamingTopK.Entry("b", 4L), StreamingTopK.Entry("a", 4L))),
+      StreamingTopK.ShardSummary(1, 9L,
+        Seq(StreamingTopK.Entry("z", 7L), StreamingTopK.Entry("c", 1L))))
+    assert(StreamingTopK.merged(latest).map(e => (e.item, e.est)) ==
+      Seq(("z", 7L), ("a", 4L), ("b", 4L), ("c", 1L)))
+    assert(StreamingTopK.merged(Nil).isEmpty)
+  }
 }

@@ -54,4 +54,30 @@ class TriangleCensusSpec extends AnyFunSuite {
     val edges = (1L to 50L).map(i => (0L, i)) :+ (1L, 2L)
     assert(census(edges) == Set((0L, 1L, 2L)))
   }
+
+  test("duplicate, reversed and self-loop edges do not change the census") {
+    val rnd = new Random(17)
+    val base = (1 to 80).map(_ => (rnd.nextInt(20).toLong, rnd.nextInt(20).toLong))
+    val noisy = base ++ base.map(_.swap) ++ base.take(20) ++ (0L until 20L).map(v => (v, v))
+    assert(census(rnd.shuffle(noisy)) == census(base))
+    assert(census(base) == brute(base))
+  }
+
+  test("each triangle's vertices come ordered by (degree, id)") {
+    val rnd = new Random(18)
+    val edges = (1 to 120).map(_ => (rnd.nextInt(25).toLong, rnd.nextInt(25).toLong))
+    val und = edges.map { case (x, y) => (math.min(x, y), math.max(x, y)) }
+      .filter(p => p._1 != p._2).distinct
+    val deg = und.flatMap(p => Seq(p._1, p._2)).groupBy(identity).view.mapValues(_.size).toMap
+    val rows = TriangleCensus.triangles(edges.toDF("src", "dst"), "src", "dst")
+      .select("ta", "tb", "tc")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(rows.nonEmpty)
+    assert(rows.size == rows.distinct.size, "each triangle once")
+    def rank(v: Long) = (deg(v), v)
+    for ((a, b, c) <- rows) {
+      assert(Ordering[(Int, Long)].lt(rank(a), rank(b)) &&
+        Ordering[(Int, Long)].lt(rank(b), rank(c)), s"($a, $b, $c)")
+    }
+  }
 }

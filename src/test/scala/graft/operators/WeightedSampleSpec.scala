@@ -74,4 +74,31 @@ class WeightedSampleSpec extends AnyFunSuite {
     assert(one == many)
     for ((id, w) <- items) assert(one(id) == refKey(id.toString, w))
   }
+
+  test("k at least the item count returns every item once with ranks 1..n") {
+    val items = (0L until 10L).map(i => (i, 1L + i % 3))
+    val got = WeightedSample.sampleK(items.toDF("doc_id", "weight"), "doc_id", "weight", 50)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    assert(got.map(_._3).sorted.toSeq == (1 to 10))
+    assert(got.map(r => (r._1, r._2)).toSet == items.toSet)
+  }
+
+  test("the sample does not depend on input order or partitioning") {
+    val items = (0L until 400L).map(i => (i, 1L + i % 5))
+    def draw(df: org.apache.spark.sql.DataFrame) =
+      WeightedSample.sampleK(df, "doc_id", "weight", 20)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val base = draw(items.toDF("doc_id", "weight").repartition(1))
+    assert(draw(items.reverse.toDF("doc_id", "weight").repartition(11)) == base)
+    assert(draw(new scala.util.Random(8).shuffle(items).toDF("doc_id", "weight")) == base)
+  }
+
+  test("a smaller sample is the rank prefix of a larger one") {
+    val df = (0L until 300L).map(i => (i, 1L + (i * 7) % 9)).toDF("doc_id", "weight")
+    def ranked(k: Int) = WeightedSample.sampleK(df, "doc_id", "weight", k)
+      .collect().map(r => (r.getInt(2), r.getLong(0))).sorted.toSeq
+    val big = ranked(30)
+    assert(big.map(_._1) == (1 to 30))
+    assert(ranked(7) == big.take(7))
+  }
 }
