@@ -13,10 +13,8 @@ import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The Misra–Gries update/merge core, shared by the batch aggregate below
-  * and the streaming per-bucket state operator
-  * ([[graft.operators.StreamingTopK]]). Pure map mutations — the proofs
-  * live on [[MisraGriesAgg]]. */
+/** The Misra–Gries update/merge core of the aggregate below. Pure map
+  * mutations — the proofs live on [[MisraGriesAgg]]. */
 object MisraGries {
   /** One stream item: hit increments; a miss inserts while there is room,
     * else decrements every counter (dropping zeros) — each decrement step

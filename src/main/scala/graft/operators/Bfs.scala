@@ -24,7 +24,10 @@ import org.apache.spark.sql.functions._
   * (lazy checkpoint + one count, see its scaladoc), but Bfs runs its own
   * loop: the last two levels feed each round and the result unions EVERY
   * level, so no level's checkpoint may be released before the end — the
-  * opposite of fixpoint's free-the-previous-round rule.
+  * opposite of fixpoint's free-the-previous-round rule. On
+  * [[PinnedLoop.rounds]], which runs every budgeted level and bans
+  * broadcast joins, q122 ran 8.9-9.9 s against 3.0-3.3 s here (sf0.1,
+  * 4 cores).
   */
 object Bfs {
 
@@ -34,65 +37,16 @@ object Bfs {
     * never expand). Returns `(v, dist)` for every node of the graph (and
     * every seed), dist = -1 where no path of length <= maxDepth exists. */
   def distances(edges: DataFrame, src: String, dst: String,
-                sources: DataFrame, idCol: String, maxDepth: Int): DataFrame = {
-    val e0 = edges
-      .select(least(col(src), col(dst)).as("a"), greatest(col(src), col(dst)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    // adjacency in both orientations: frontier joins on one key column
-    val adj = e0.select(col("a").as("v"), col("b").as("w"))
-      .unionAll(e0.select(col("b").as("v"), col("a").as("w")))
-      .localCheckpoint()
-    // PinnedLoop scope (see its scaladoc): one driver round-trip per
-    // frontier round; partitions derived from the checkpointed adjacency
-    PinnedLoop.scoped(adj.sparkSession, adj.count()) {
-      distancesLoop(adj, sources, idCol, maxDepth)
+                sources: DataFrame, idCol: String, maxDepth: Int): DataFrame =
+    search(edges, src, dst, maxDepth, Seq("v"),
+        sources.select(col(idCol).as("v")).distinct()) { (adj, frontier) =>
+      adj.join(frontier, Seq("v"), "left_semi").select(col("w").as("v")).distinct()
+    } { (allNodes, settled) =>
+      allNodes.join(settled, Seq("v"), "left")
+        .select(col("v"), coalesce(col("dist"), lit(-1L)).as("dist"))
+        // seeds outside the graph still belong to the result (dist 0)
+        .unionAll(settled.join(allNodes, Seq("v"), "left_anti"))
     }
-  }
-
-  private def distancesLoop(adj: DataFrame, sources: DataFrame,
-                            idCol: String, maxDepth: Int): DataFrame = {
-    val allNodes = adj.select(col("v")).distinct().localCheckpoint()
-
-    // lazy checkpoint + count = one action per round (see PinnedLoop)
-    val seed = sources.select(col(idCol).as("v")).distinct()
-      .localCheckpoint(false)
-    var frontierN = seed.count()
-    // the settled set is the UNION of per-round checkpointed frontiers —
-    // never re-materialized as a whole: checkpointing the union each round
-    // would write O(V) per round = O(V·depth) total, while the frontiers
-    // sum to O(V) exactly once (each node settles in one round)
-    var levels = Vector[(Long, DataFrame)](0L -> seed)
-    var frontier = seed
-    var round = 0
-    while (round < maxDepth && frontierN > 0) {
-      round += 1
-      // TWO-FRONTIER settled check: a neighbor w of a node at distance
-      // r-1 satisfies |dist(w) - (r-1)| <= 1 (the edge runs both ways),
-      // so dist(w) ∈ {r-2, r-1, r} and "already settled" ≡ membership in
-      // the LAST TWO levels — the anti-join shrinks from O(settled) =
-      // O(V) rows per round (O(V·depth) total traffic) to O(two
-      // frontiers), which sums to O(V) over the whole run
-      val settledV = levels.takeRight(2).map(_._2).reduce(_ unionAll _)
-      val next = adj.join(frontier, Seq("v"), "left_semi")
-        .select(col("w").as("v")).distinct()
-        .join(settledV, Seq("v"), "left_anti")
-        .localCheckpoint(false)
-      frontierN = next.count()
-      levels :+= (round.toLong -> next)
-      frontier = next
-    }
-    val settled = levels
-      .map { case (dd, df) => df.withColumn("dist", lit(dd)) }
-      .reduce(_ unionAll _)
-    val out = allNodes.join(settled, Seq("v"), "left")
-      .select(col("v"), coalesce(col("dist"), lit(-1L)).as("dist"))
-      // seeds outside the graph still belong to the result (dist 0)
-      .unionAll(settled.join(allNodes, Seq("v"), "left_anti"))
-    val result = out.localCheckpoint() // materialize before freeing inputs
-    (adj +: allNodes +: levels.map(_._2)).foreach(PinnedLoop.release(_))
-    result
-  }
 
   /** Shortest-path COUNTING (the forward phase of Brandes' betweenness):
     * per (source, node), the hop distance AND the number σ of distinct
@@ -110,62 +64,70 @@ object Bfs {
     * silently. Returns (source, v, dist, sigma); unreached nodes report
     * (-1, 0). */
   def pathCounts(edges: DataFrame, src: String, dst: String,
-                 sources: DataFrame, idCol: String, maxDepth: Int): DataFrame = {
+                 sources: DataFrame, idCol: String, maxDepth: Int): DataFrame =
+    search(edges, src, dst, maxDepth, Seq("s", "v"),
+        sources.select(col(idCol).as("s")).distinct()
+          .select(col("s"), col("s").as("v"), lit(1L).as("sigma"))) { (adj, frontier) =>
+      adj.join(frontier, Seq("v"))
+        .groupBy(col("s"), col("w").as("v"))
+        .agg(sum(col("sigma")).as("sigma"))
+    } { (allNodes, settled) =>
+      val spine = settled.filter(col("dist") === 0L).select(col("s")).crossJoin(allNodes)
+      spine.join(settled, Seq("s", "v"), "left")
+        .select(col("s").as("source"), col("v"),
+          coalesce(col("dist"), lit(-1L)).as("dist"),
+          coalesce(col("sigma"), lit(0L)).as("sigma"))
+        // seeds outside the graph still belong to the result
+        .unionAll(settled.join(allNodes, Seq("v"), "left_anti")
+          .select(col("s").as("source"), col("v"), col("dist"), col("sigma")))
+    }
+
+  /** The level loop both searches share. `seed` is level 0, with the
+    * `keys` a node settles under; `expand(adj, frontier)` gives the next
+    * level's candidates before the settled check; `output(allNodes,
+    * settled)` shapes the result from every level's rows tagged `dist`. */
+  private def search(edges: DataFrame, src: String, dst: String, maxDepth: Int,
+                     keys: Seq[String], seed: DataFrame)(
+      expand: (DataFrame, DataFrame) => DataFrame)(
+      output: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val e0 = edges
       .select(least(col(src), col(dst)).as("a"), greatest(col(src), col(dst)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
+    // adjacency in both orientations: frontier joins on one key column
     val adj = e0.select(col("a").as("v"), col("b").as("w"))
       .unionAll(e0.select(col("b").as("v"), col("a").as("w")))
       .localCheckpoint()
-    // PinnedLoop scope — same rationale as [[distances]]
+    // PinnedLoop scope (see its scaladoc): one job per
+    // frontier round; partitions derived from the checkpointed adjacency
     PinnedLoop.scoped(adj.sparkSession, adj.count()) {
-      pathCountsLoop(adj, sources, idCol, maxDepth)
+      val allNodes = adj.select(col("v")).distinct().localCheckpoint()
+      // lazy checkpoint + count = one action per round (see PinnedLoop).
+      // The settled set is the UNION of per-round checkpointed levels —
+      // never re-materialized as a whole: checkpointing the union each
+      // round would write O(V) per round = O(V·depth) total, while the
+      // levels sum to O(V) exactly once (each node settles in one round)
+      var levels = Vector(seed.localCheckpoint(false))
+      var frontierN = levels.last.count()
+      while (levels.size <= maxDepth && frontierN > 0) {
+        // TWO-FRONTIER settled check: a neighbor w of a node at distance
+        // r-1 satisfies |dist(w) - (r-1)| <= 1 (the edge runs both ways),
+        // so dist(w) ∈ {r-2, r-1, r} and "already settled" ≡ membership in
+        // the LAST TWO levels (per source too) — the anti-join shrinks
+        // from O(settled) = O(V) rows per round (O(V·depth) total traffic)
+        // to O(two frontiers), which sums to O(V) over the whole run
+        val settled = levels.takeRight(2).map(_.select(keys.map(col): _*)).reduce(_ unionAll _)
+        levels :+= expand(adj, levels.last).join(settled, keys, "left_anti")
+          .localCheckpoint(false)
+        frontierN = levels.last.count()
+      }
+      val result = output(allNodes, levels.zipWithIndex
+        .map { case (level, d) => level.withColumn("dist", lit(d.toLong)) }
+        .reduce(_ unionAll _))
+        .localCheckpoint() // materialize before freeing inputs
+      (adj +: allNodes +: levels).foreach(PinnedLoop.release(_))
+      result
     }
-  }
-
-  private def pathCountsLoop(adj: DataFrame, sources: DataFrame,
-                             idCol: String, maxDepth: Int): DataFrame = {
-    val allNodes = adj.select(col("v")).distinct().localCheckpoint()
-    // lazy checkpoint + count = one action per round (see PinnedLoop)
-    val seed = sources.select(col(idCol).as("s"))
-      .distinct()
-      .select(col("s"), col("s").as("v"), lit(1L).as("sigma"))
-      .localCheckpoint(false)
-    var frontierN = seed.count()
-    var levels = Vector[(Long, DataFrame)](0L -> seed)
-    var frontier = seed
-    var round = 0
-    while (round < maxDepth && frontierN > 0) {
-      round += 1
-      // two-frontier settled check, per source: dist_s(w) of a neighbor
-      // of a dist_s = r-1 node lies in {r-2, r-1, r} (see [[distances]]),
-      // so the anti-join needs only the last two (s, v) levels
-      val settledSV = levels.takeRight(2)
-        .map(_._2.select(col("s"), col("v"))).reduce(_ unionAll _)
-      val next = adj.join(frontier, Seq("v"))
-        .groupBy(col("s"), col("w").as("v"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .join(settledSV, Seq("s", "v"), "left_anti")
-        .localCheckpoint(false)
-      frontierN = next.count()
-      levels :+= (round.toLong -> next)
-      frontier = next
-    }
-    val settled = levels
-      .map { case (dd, df) => df.withColumn("dist", lit(dd)) }
-      .reduce(_ unionAll _)
-    val spine = seed.select(col("s")).crossJoin(allNodes)
-    val out = spine.join(settled, Seq("s", "v"), "left")
-      .select(col("s").as("source"), col("v"),
-        coalesce(col("dist"), lit(-1L)).as("dist"),
-        coalesce(col("sigma"), lit(0L)).as("sigma"))
-      // seeds outside the graph still belong to the result
-      .unionAll(settled.join(allNodes, Seq("v"), "left_anti")
-        .select(col("s").as("source"), col("v"), col("dist"), col("sigma")))
-    val result = out.localCheckpoint()
-    (adj +: allNodes +: levels.map(_._2)).foreach(PinnedLoop.release(_))
-    result
   }
 
   /** DuckDB replay of [[pathCounts]] over a caller-supplied `edges(a, b)`

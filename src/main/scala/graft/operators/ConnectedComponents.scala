@@ -39,7 +39,8 @@ object ConnectedComponents {
     // is just min(id, min(neighbor)) — one groupBy instead of an identity
     // checkpoint plus a full join round (2 fewer jobs on the common
     // tiny-diameter dedup graphs); the loop runs the other maxIter - 1
-    val run = PinnedLoop.fixpoint(edges.sparkSession, sym.count(), col("chg"), maxIter - 1) {
+    val run = PinnedLoop.fixpoint(edges.sparkSession, sym.count(), col("chg"), maxIter - 1,
+        invariants = Seq(sym)) {
       sym.groupBy(col("a"))
         .agg(min(col("b")).as("nb"))
         .select(col("a").as("id"), least(col("a"), col("nb")).as("label"))
@@ -55,9 +56,8 @@ object ConnectedComponents {
           least(col("l.label"), coalesce(col("nlabel"), col("l.label"))).as("label"),
           (col("nlabel") < col("l.label")).as("chg"))
     }
-    PinnedLoop.release(sym) // before the require: don't leak it on failure
     // a silent non-converged return would hand every caller (q52's oracle
-    // comparison, CorpusPipeline's keep-set) subtly wrong clusters — fail
+    // comparison) subtly wrong clusters — fail
     // loudly instead; components deeper than maxIter need [[contractive]]
     require(run.converged,
       s"min-label propagation did not converge in $maxIter rounds (labels " +

@@ -84,7 +84,8 @@ object Expectations {
     * the running conditional sums as aggregation state, so the monitor
     * costs |rules| counters, not retained rows). Uniqueness rules need
     * per-key state and are rejected here — police duplicates upstream
-    * with [[StreamingDedup]] and feed this monitor its output. */
+    * (e.g. `dropDuplicatesWithinWatermark`) and feed this monitor its
+    * output. */
   def monitor(stream: DataFrame, rules: Seq[Rule]): DataFrame = {
     val rowRules = rules.collect { case r: RowRule => r }
     require(rowRules.length == rules.length,

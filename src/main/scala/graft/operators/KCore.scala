@@ -38,7 +38,8 @@ object KCore {
       .localCheckpoint()
     // state: the round's node set, each node flagged with whether it drops
     // this round — so the pending count IS the round's attrition
-    val run = PinnedLoop.fixpoint(e0.sparkSession, e0.count(), col("drop"), maxRounds) {
+    val run = PinnedLoop.fixpoint(e0.sparkSession, e0.count(), col("drop"), maxRounds,
+        invariants = Seq(e0)) {
       e0.select(explode(array(col("a"), col("b"))).as("v")).distinct()
         .withColumn("drop", lit(false))
     } { nodes =>
@@ -57,7 +58,6 @@ object KCore {
       alive.join(deg, Seq("v"), "left")
         .select(col("v"), (coalesce(col("deg"), lit(0L)) < k).as("drop"))
     }
-    PinnedLoop.release(e0) // the final state is materialized; nothing reads e0
     if (!run.converged) throw new IllegalStateException(
       s"k-core peel did not converge within $maxRounds rounds — " +
         "raise maxRounds or check the graph for pathological structure")

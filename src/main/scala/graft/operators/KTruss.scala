@@ -19,13 +19,14 @@ import graft.functions.VectorExpressions
   * per-triangle rows. Adjacency arrays are bounded by the data model here
   * (co-purchase degree ≤ basket capacity × part order-frequency, measured
   * ≤ 37 and scale-stable); for genuinely unbounded-degree graphs compose
-  * with the q148 hub cap and accept approximate supports.
-  * `localCheckpoint` truncates lineage per round (the q81/q122 fixpoint
-  * discipline) — without it round r's plan embeds all prior joins.
+  * with the q148 hub cap and accept approximate supports. The rounds run
+  * on [[PinnedLoop.fixpoint]], whose one count per round is the round's
+  * `edges_after`.
   *
-  * A FIXED round count keeps Spark's loop hash-identical to the oracle's
+  * A FIXED round count keeps Spark's curve hash-identical to the oracle's
   * unrolled CTEs; converged rounds just repeat their counts (cheap — the
-  * edge set only shrinks).
+  * edge set only shrinks), and a graph peeled empty pads the curve with
+  * zero-edge rounds.
   */
 object KTruss {
 
@@ -36,28 +37,26 @@ object KTruss {
     require(k >= 3, "k-truss needs k >= 3 (support threshold k-2 >= 1)")
     require(rounds >= 1)
     val spark = edges.sparkSession
-    var cur = edges.select(col("a"), col("b")).localCheckpoint()
-    val counts = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
-    for (r <- 1 to rounds) {
-      val before = cur.count()
+    val e = edges.select(col("a"), col("b")).localCheckpoint(false)
+    val n0 = e.count()
+    val run = PinnedLoop.fixpoint(spark, n0, lit(true), rounds, invariants = Seq(e))(e) { cur =>
       val und = cur.select(col("a").as("n"), col("b").as("m"))
         .unionAll(cur.select(col("b").as("n"), col("a").as("m")))
       val adj = und.groupBy(col("n"))
         .agg(sort_array(collect_list(col("m"))).as("nb"))
-      val next = cur
+      cur
         .join(adj.select(col("n").as("a"), col("nb").as("na")), "a")
         .join(adj.select(col("n").as("b"), col("nb").as("nbb")), "b")
         .withColumn("sup",
           VectorExpressions.sortedIntersectCount(col("na"), col("nbb")))
         .filter(col("sup") >= k - 2)
         .select(col("a"), col("b"))
-        .localCheckpoint() // truncate lineage; materializes the round
-      val after = next.count()
-      counts += ((r, before, after))
-      cur = next
     }
+    PinnedLoop.release(run.state) // the curve is all that is returned
+    val after = run.pending.padTo(rounds, 0L)
     import spark.implicits._
-    counts.toSeq.toDF("round", "edges_before", "edges_after")
+    after.indices.map(i => (i + 1, (n0 +: after)(i), after(i)))
+      .toDF("round", "edges_before", "edges_after")
   }
 
   /** DuckDB replay: `rounds` unrolled adjacency/support/filter rounds over

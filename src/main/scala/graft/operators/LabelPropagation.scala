@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape per round: one key-partitioned join of the label relation
   * against the fixed checkpointed adjacency, then a (node, label) count
-  * and a min-struct argmax — two shuffles, both map-side combinable;
-  * `localCheckpoint` truncates lineage per round, and every round's
-  * blocks are freed once the final labeling materializes. */
+  * and a min-struct argmax — two shuffles, both map-side combinable. The
+  * rounds run on [[PinnedLoop.rounds]]. */
 object LabelPropagation {
 
   /** `edges(src, dst)`: undirected simple graph. Returns `(v, label)`
@@ -34,44 +33,18 @@ object LabelPropagation {
       .distinct()
     val adj = e0.select(col("a").as("v"), col("b").as("w"))
       .unionAll(e0.select(col("b").as("v"), col("a").as("w")))
-      .localCheckpoint()
-    // PinnedLoop scope (see its scaladoc): the fixed-budget chain is one
-    // action — static planning runs it as ONE job where AQE pays a
-    // driver round-trip per shuffle stage of every round
-    PinnedLoop.scoped(adj.sparkSession, adj.count()) {
-      labelsLoop(adj, rounds)
-    }
-  }
-
-  private def labelsLoop(adj: DataFrame, rounds: Int): DataFrame = {
-    // LAZY checkpoints end to end: the round budget is FIXED (no
-    // convergence check reads a count), so no per-round action is needed
-    // at all — each round's checkpoint still cuts the plan to constant
-    // size, but the whole chain executes as stages of the ONE final
-    // materializing job instead of one job per round. Intermediate
-    // blocks are released only after the final eager checkpoint
-    // (releasing a lazy checkpoint pre-materialization is unsound —
-    // its blocks are what later rounds read)
-    var lab = adj.select(col("v")).distinct()
-      .withColumn("label", col("v")).localCheckpoint(false)
-    var inter = Vector[DataFrame](lab)
-    for (_ <- 1 to rounds) {
-      val neigh = adj
-        .join(lab.withColumnRenamed("v", "w"), Seq("w"))
+      .localCheckpoint(false)
+    PinnedLoop.rounds(adj.sparkSession, adj.count(), rounds, invariants = Seq(adj)) {
+      adj.select(col("v")).distinct().withColumn("label", col("v"))
+    } { lab =>
+      adj.join(lab.withColumnRenamed("v", "w"), Seq("w"))
         .groupBy(col("v"), col("label")).agg(count(lit(1)).as("cnt"))
-      val next = neigh
         .groupBy(col("v"))
         // argmax (cnt DESC, label ASC) as one map-side-combinable
         // min-struct — no per-node window sort
         .agg(min(struct((-col("cnt")).as("nc"), col("label"))).as("m"))
         .select(col("v"), col("m.label").as("label"))
-        .localCheckpoint(false)
-      inter :+= next
-      lab = next
     }
-    val out = lab.localCheckpoint() // eager: materializes the whole chain
-    (adj +: inter).foreach(PinnedLoop.release(_))
-    out
   }
 
   /** DuckDB replay over a caller-supplied `edges(a, b)` CTE: the same

@@ -25,14 +25,13 @@ import org.apache.spark.sql.functions._
   * a hash-aggregate on `dst` with map-side combine (the sum of longs is
   * associative). Nothing is ever collected to the driver and no iteration
   * holds more than (|V| + |E|) rows. The loop-invariant relations (node
-  * set, degree-annotated edges) are persisted: ReusedExchange does NOT
+  * set, degree-annotated edges) are checkpointed: ReusedExchange does NOT
   * dedup them across iterations (self-union attribute rewrites give every
   * iteration's subtree fresh expr ids — verified in the physical plan), so
-  * without the persist a 3-iteration run scans and dedups the edge input
-  * four times. At cluster scale the same relations would be bucketed by
-  * `src` once. Persisted data lives until `spark.catalog.clearCache()`
-  * (which Verify/Bench issue per query) — the same library-use contract as
-  * the other persisting operators (MinHashDedup, PrefixSum).
+  * without the checkpoint a 3-iteration run scans and dedups the edge
+  * input four times. At cluster scale the same relations would be bucketed
+  * by `src` once. The iterations run on [[PinnedLoop.rounds]], which
+  * releases the invariants with the rounds.
   *
   * Dangling nodes (no out-edges) simply leak their damped mass — the
   * standard "remove dangling redistribution" simplification; documented
@@ -54,33 +53,9 @@ object PageRank {
       dstCol: String,
       iters: Int = 3,
       dampNum: Long = 85,
-      dampDen: Long = 100): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val base = (Micro * (dampDen - dampNum)) / dampDen
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    // loop invariants, materialized once (see scaladoc); callers that keep
-    // the session hot can release them with spark.catalog.clearCache()
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = e.join(deg, "src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    var r = nodes.select(col("id"), lit(Micro).as("r"))
-    for (_ <- 1 to iters) {
-      val contrib = edgesDeg
-        .join(r, edgesDeg("src") === r("id"))
-        .select(col("dst"), expr(s"(r * $dampNum) div ($dampDen * outdeg)").as("c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c")).as("c"))
-      r = nodes
-        .join(contrib, nodes("id") === contrib("dst"), "left")
-        .select(col("id"), (lit(base) + coalesce(col("c"), lit(0L))).as("r"))
-    }
-    r.select(col("id"), col("r").as("rank_micro"))
-  }
+      dampDen: Long = 100): DataFrame =
+    // every node a seed: unit start mass and the uniform restart
+    ranks(edges, srcCol, dstCol, None, iters, dampNum, dampDen).drop("is_seed")
 
   /** Personalized PageRank: restart mass teleports to the `seeds` node set
     * instead of uniformly — the random-walk-with-restart relevance measure
@@ -91,7 +66,7 @@ object PageRank {
     * in the edge set contribute nothing (they have no incident walk).
     *
     * Scale shape is identical to ranksMicro — the seed flag rides the
-    * persisted node relation (one extra left-join at build time); the
+    * checkpointed node relation (one extra left-join at build time); the
     * per-iteration work is unchanged.
     */
   def personalizedMicro(
@@ -101,36 +76,45 @@ object PageRank {
       seeds: DataFrame,
       iters: Int = 3,
       dampNum: Long = 85,
-      dampDen: Long = 100): DataFrame = {
+      dampDen: Long = 100): DataFrame =
+    ranks(edges, srcCol, dstCol, Some(seeds), iters, dampNum, dampDen)
+
+  /** (id, is_seed, rank_micro); no `seeds` makes every node a seed. */
+  private def ranks(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      seeds: Option[DataFrame],
+      iters: Int,
+      dampNum: Long,
+      dampDen: Long): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val base = (Micro * (dampDen - dampNum)) / dampDen
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val sd = seeds.select(seeds.columns.head).toDF("sid").distinct()
-    val nodes = e.select(col("src").as("id"))
+    val ids = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id")))
       .distinct()
-      .join(sd, col("id") === col("sid"), "left")
-      .select(col("id"), col("sid").isNotNull.as("is_seed"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nodes = seeds.fold(ids.withColumn("is_seed", lit(true))) { sd =>
+      ids.join(sd.select(sd.columns.head).toDF("sid").distinct(), col("id") === col("sid"), "left")
+        .select(col("id"), col("sid").isNotNull.as("is_seed"))
+    }.localCheckpoint(false)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = e.join(deg, "src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edgesDeg = e.join(deg, "src").localCheckpoint(false)
 
-    var r = nodes.select(col("id"),
-      when(col("is_seed"), lit(Micro)).otherwise(lit(0L)).as("r"))
-    for (_ <- 1 to iters) {
+    PinnedLoop.rounds(e.sparkSession, edgesDeg.count(), iters,
+        invariants = Seq(nodes, edgesDeg)) {
+      nodes.select(col("id"), col("is_seed"),
+        when(col("is_seed"), lit(Micro)).otherwise(lit(0L)).as("r"))
+    } { r =>
       val contrib = edgesDeg
-        .join(r, edgesDeg("src") === r("id"))
-        .select(col("dst"), expr(s"(r * $dampNum) div ($dampDen * outdeg)").as("c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c")).as("c"))
-      r = nodes
-        .join(contrib, nodes("id") === contrib("dst"), "left")
+        .join(r.select(col("id").as("src"), col("r")), "src")
+        .groupBy(col("dst").as("id"))
+        .agg(sum(expr(s"(r * $dampNum) div ($dampDen * outdeg)")).as("c"))
+      nodes.join(contrib, Seq("id"), "left")
         .select(col("id"), col("is_seed"),
           (when(col("is_seed"), lit(base)).otherwise(lit(0L))
             + coalesce(col("c"), lit(0L))).as("r"))
-    }
-    r.select(col("id"), col("is_seed"), col("r").as("rank_micro"))
+    }.withColumnRenamed("r", "rank_micro")
   }
 
   /** DuckDB replay of [[personalizedMicro]]. `seedsSql` must select a

@@ -31,8 +31,14 @@ import org.apache.spark.sql.execution.LogicalRDD
   * consumer under the restored session conf, reading the scope's
   * checkpoints as leaves. Nesting is safe (save/restore is per-scope).
   *
-  * [[fixpoint]] is the convergence loop every count-driven operator runs
-  * inside that scope. Each round's state is a LAZY `localCheckpoint`, and
+  * Two loop forms run inside that scope. Both release every checkpoint
+  * they make but the one they return, plus every invariant the caller
+  * hands over:
+  *
+  * [[fixpoint]] is the convergence loop, for operators that read a count
+  * every round: ConnectedComponents, Sssp, KCore, KTruss, the
+  * ultimate-parent rollup (`ops/UltimateParent`) and q139's ancestor
+  * closure. Each round's state is a LAZY `localCheckpoint`, and
   * the round's only action is a count of the rows matching the caller's
   * `pending` predicate: the count computes every checkpoint partition (so
   * the round is materialized) AND answers the convergence question — one
@@ -44,18 +50,35 @@ import org.apache.spark.sql.execution.LogicalRDD
   * plan grows every round and round r re-executes every earlier round
   * (measured 3.0 → 8.6 s at only 4 KCore rounds).
   *
-  * A fixpoint also plans no broadcast join of its own accord: a broadcast
+  * A fixpoint plans no broadcast join of its own accord: a broadcast
   * collects its build side to the driver in a job of its own, every round
   * — for a side that never changes (CC's edge list) or a small one (KCore's
   * node set) that is an extra driver round-trip per round, where a
   * shuffled join runs inside the round's one job. Explicit join hints
   * still win (Sssp's).
+  *
+  * [[rounds]] is the round-budget loop, for operators that run a FIXED
+  * number of rounds so a SQL unroll replays them exactly: LabelPropagation
+  * and PageRank (both entries). A round reads no count, so it needs no
+  * action: each round's state is still a lazy `localCheckpoint` (the plan
+  * stays constant-size), but the whole chain executes as stages of ONE
+  * final job, the eager checkpoint of the last state. Only then is any
+  * state released — releasing a lazy checkpoint before it materializes is
+  * unsound, since its blocks are what later rounds read. It bans
+  * broadcast joins as a fixpoint does.
+  *
+  * Hits and Bfs keep loops of their own, which ran faster than on
+  * `rounds` (see their scaladocs): Hits checkpoints every half-step
+  * eagerly, Bfs counts each level and unions every level at the end.
   */
 object PinnedLoop {
 
   private val RowsPerPartition = 250000L
 
-  private def nParts(spark: SparkSession, rows: Long): Int = {
+  /** The scope's partition count for a loop whose largest per-round
+    * relation has `rows` rows; RandomWalks clusters its step adjacency by
+    * the same rule. */
+  private[operators] def nParts(spark: SparkSession, rows: Long): Int = {
     val confParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     math.max(1, math.min(confParts, (rows / RowsPerPartition).toInt))
   }
@@ -68,6 +91,9 @@ object PinnedLoop {
   private def scopePins(spark: SparkSession, rows: Long): Seq[(String, String)] = Seq(
     "spark.sql.adaptive.enabled" -> "false",
     "spark.sql.shuffle.partitions" -> nParts(spark, rows).toString)
+
+  private def loopPins(spark: SparkSession, rows: Long): Seq[(String, String)] =
+    scopePins(spark, rows) :+ ("spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   private def pinned[T](spark: SparkSession, pins: Seq[(String, String)])(body: => T): T = {
     val saved = spark.conf.getAll
@@ -97,10 +123,13 @@ object PinnedLoop {
     * already settled state must be a no-op. What reaching the cap means is
     * the caller's call ([[Fixpoint.converged]]). `init` is evaluated inside
     * the scope, so its shuffles are planned at the pinned partition count
-    * too; `rows` sizes the scope as in [[scoped]]. */
-  def fixpoint(spark: SparkSession, rows: Long, pending: Column, maxRounds: Int)(
+    * too; `rows` sizes the scope as in [[scoped]]. `invariants` (frames
+    * only the rounds read) are released once the loop ends; the returned
+    * state is the caller's to release. */
+  def fixpoint(spark: SparkSession, rows: Long, pending: Column, maxRounds: Int,
+      invariants: Seq[DataFrame] = Nil)(
       init: => DataFrame)(step: DataFrame => DataFrame): Fixpoint =
-    pinned(spark, scopePins(spark, rows) :+ ("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
+    pinned(spark, loopPins(spark, rows)) {
       var state = init.localCheckpoint(false)
       var counts = Vector.empty[Long]
       while (counts.size < maxRounds && !counts.lastOption.contains(0L)) {
@@ -109,7 +138,23 @@ object PinnedLoop {
         release(state)
         state = next
       }
+      invariants.foreach(release(_))
       Fixpoint(state, counts)
+    }
+
+  /** Run exactly `n` rounds of `step` from `init` and return the last
+    * state as an eager checkpoint: the one action of the whole run. Every
+    * state and every frame in `invariants` is released once it is written.
+    * `rows` sizes the scope as in [[scoped]]; `init` and `step` are
+    * planned inside it. */
+  def rounds(spark: SparkSession, rows: Long, n: Int, invariants: Seq[DataFrame] = Nil)(
+      init: => DataFrame)(step: DataFrame => DataFrame): DataFrame =
+    pinned(spark, loopPins(spark, rows)) {
+      var states = Vector(init.localCheckpoint(false))
+      for (_ <- 1 to n) states :+= step(states.last).localCheckpoint(false)
+      val out = states.last.localCheckpoint()
+      (invariants ++ states).foreach(release(_))
+      out
     }
 
   /** Drop the blocks of every checkpoint `frame` reads (the frame itself

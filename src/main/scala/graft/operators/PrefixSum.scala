@@ -80,13 +80,6 @@ object PrefixSum {
     def winFn(kind: String, c: Column): Column = kind match {
       case "sum" => sum(c); case "min" => min(c); case _ => max(c)
     }
-    // identity of each combine — what an empty/all-NULL partition
-    // contributes and what partition 0's offset is
-    def ident(kind: String): Long = kind match {
-      case "sum" => 0L
-      case "min" => Long.MaxValue
-      case _     => Long.MinValue
-    }
     def combine(kind: String, a: Long, b: Long): Long = kind match {
       case "sum" => a + b; case "min" => math.min(a, b); case _ => math.max(a, b)
     }
@@ -98,21 +91,24 @@ object PrefixSum {
     // For sum: sum(value), NOT max(cum_local) — identical for non-negative
     // values, but only sum stays correct when values can be negative.
     // Aggregates skip NULL values (so do the window folds above — the two
-    // stay consistent); an all-NULL partition contributes the identity.
+    // stay consistent). An offset is NULL while no earlier partition holds
+    // a non-NULL value, as the single-partition window's fold is.
     val aggs = cols.zipWithIndex.map { case ((v, _, k), i) =>
       winFn(k, col(v)).as(s"__t$i") }
     val totals = local.groupBy(col("__pid"))
       .agg(aggs.head, aggs.tail: _*)
       .collect().map { r =>
         r.getInt(0) -> cols.indices.map(i =>
-          if (r.isNullAt(i + 1)) ident(cols(i)._3) else r.getLong(i + 1))
+          Option.when(!r.isNullAt(i + 1))(r.getLong(i + 1)))
       }
       .sortBy(_._1)
     val offsets = {
-      val acc = cols.map(c => ident(c._3)).toArray
+      val acc = Array.fill[Option[Long]](cols.size)(None)
       totals.map { case (pid, tots) =>
         val off = acc.toSeq
-        cols.indices.foreach(i => acc(i) = combine(cols(i)._3, acc(i), tots(i)))
+        cols.indices.foreach { i =>
+          acc(i) = (acc(i) ++ tots(i)).reduceOption(combine(cols(i)._3, _, _))
+        }
         (pid, off)
       }
     }
@@ -120,7 +116,7 @@ object PrefixSum {
     val spark = df.sparkSession
     val offDf = spark.createDataFrame(
       spark.sparkContext.parallelize(offsets.toSeq.map { case (pid, offs) =>
-        org.apache.spark.sql.Row.fromSeq(pid +: offs) }, 1),
+        org.apache.spark.sql.Row.fromSeq(pid +: offs.map(_.getOrElse(null))) }, 1),
       org.apache.spark.sql.types.StructType(
         org.apache.spark.sql.types.StructField("__pid",
           org.apache.spark.sql.types.IntegerType) +:
@@ -128,10 +124,13 @@ object PrefixSum {
           org.apache.spark.sql.types.LongType))))
     val joined = local.join(broadcast(offDf), "__pid")
     val withCums = cols.zipWithIndex.foldLeft(joined) { case (acc, ((_, c, k), i)) =>
+      // a NULL side is "nothing folded yet": least/greatest skip NULLs,
+      // the sum falls back to whichever side is set
+      val (cl, off) = (col(s"__cl$i"), col(s"__off$i"))
       val merged = k match {
-        case "sum" => col(s"__cl$i") + col(s"__off$i")
-        case "min" => least(col(s"__cl$i"), col(s"__off$i"))
-        case _     => greatest(col(s"__cl$i"), col(s"__off$i"))
+        case "sum" => coalesce(cl + off, cl, off)
+        case "min" => least(cl, off)
+        case _     => greatest(cl, off)
       }
       acc.withColumn(c, merged)
     }

@@ -69,9 +69,7 @@ object RandomWalks {
     // O(E) adjacency. (The window's own exchange is hash(v) already, but
     // making the clustering explicit keeps it independent of window
     // internals.)
-    val confParts =
-      e.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val nParts = math.max(1, math.min(confParts, (e.count() / 250000L).toInt))
+    val nParts = PinnedLoop.nParts(e.sparkSession, e.count())
     // localCheckpoint, not persist: a checkpointed LogicalRDD leaf carries
     // the partitioning/ordering STATICALLY (AssumeHashClusteredSpec's
     // proven mechanism), where a cached relation under AQE reports unknown
@@ -79,9 +77,9 @@ object RandomWalks {
     // anyway (measured: the q228 step-chain job kept its 4x O(E)
     // exchange+sort until this swap). The leaf's pinned count is
     // COUNT-DERIVED (a checkpoint leaf is exempt from AQE coalescing, and
-    // every step exchange must match it): ~250k adjacency rows per
-    // partition, capped by the configured parallelism — partitions below
-    // that are pure scheduling overhead at any scale.
+    // every step exchange must match it) by PinnedLoop's rule: ~250k
+    // adjacency rows per partition, capped by the configured parallelism —
+    // partitions below that are pure scheduling overhead at any scale.
     val adj = e.select(col("v"), col("w"),
         (row_number().over(wdw.orderBy(col("w"))) - 1).cast("long").as("r"),
         count(lit(1)).over(wdw).as("deg"))

@@ -64,5 +64,6 @@ object TriangleCensus {
       // oriented tb→tc; one probe direction closes the wedge
       .join(o.select(col("osrc").as("tb"), col("odst").as("tc")),
         Seq("tb", "tc"), "leftsemi")
+      .select("ta", "tb", "tc") // the USING join put its keys first
   }
 }

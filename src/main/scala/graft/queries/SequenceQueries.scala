@@ -97,7 +97,7 @@ object SequenceQueries {
     // contract, mirrored by the oracle's ORDER BY cnt DESC, user_id.
     // Streaming note: exact ranked top-k per window needs final counts
     // (two stacked stateful aggs — illegal in append mode); the
-    // streaming dashboard dual is q245/StreamingTopK's MG summary.
+    // approximate dual is q245's MG summary.
     "q247_window_top_users" -> ((s, d) => {
       val S = 21600000000L
       val k = 5

@@ -135,6 +135,18 @@ class BfsSpec extends AnyFunSuite {
     assert(out((4L, 3L)) == (1L, 1L) && out((4L, 1L)) == (-1L, 0L))
   }
 
+  test("pathCounts' distances per source equal distances seeded at that source alone") {
+    val rnd = new Random(23)
+    val edges = (1 to 50).map(_ => (rnd.nextInt(18).toLong, rnd.nextInt(18).toLong))
+      .filter(p => p._1 != p._2)
+    val seeds = Set(0L, 7L, 40L)
+    val sigma = sparkSigma(edges, seeds, 3)
+    for (s0 <- seeds) {
+      val mine = sigma.collect { case ((s, v), (d, _)) if s == s0 => v -> d }
+      assert(mine == sparkBfs(edges, Set(s0), 3), s"source $s0")
+    }
+  }
+
   test("distances and pathCounts release every checkpoint they made but their result's") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 5L), (6L, 7L)).toDF("src", "dst")
     val seeds = Seq(1L).toDF("id")

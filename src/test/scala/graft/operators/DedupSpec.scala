@@ -19,20 +19,6 @@ class DedupSpec extends AnyFunSuite {
     (5L, "short doc")
   ).toDF("doc_id", "text")
 
-  test("exact dedup keepFirst keeps lowest id per key") {
-    val out = ExactDedup.keepFirst(docs, Seq("text"), "doc_id")
-      .select("doc_id").as[Long].collect().toSet
-    assert(out == Set(1L, 2L, 3L, 5L))
-  }
-
-  test("exact dedup groups reports copies") {
-    val g = ExactDedup.groups(docs, Seq("text"), "doc_id")
-      .filter(col("n_copies") > 1).collect()
-    assert(g.length == 1)
-    assert(g.head.getAs[Long]("keep_id") == 1L)
-    assert(g.head.getAs[Long]("n_copies") == 2L)
-  }
-
   test("minhash LSH finds near-dup and exact-dup pairs, not distinct docs") {
     val pairs = MinHashDedup.pairs(docs, "doc_id",
         graft.functions.VectorExpressions.wordShingleHashes(col("text"), 3, TextHash.P),
@@ -42,6 +28,33 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs.contains((1L, 4L)), "exact dup pair")
     assert(pairs.contains((1L, 2L)), "near dup pair")
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L), "distinct doc has no pair")
+  }
+
+  /** Near-dup clusters the way the dedup queries form them: verified MinHash
+    * pairs, then min-label components; a doc survives unless a lower id
+    * shares its component. */
+  private def fuzzySurvivors(texts: Seq[(Long, String)], cfg: MinHashDedup.Config): Set[Long] = {
+    val df = texts.toDF("doc_id", "text")
+    val pairs = MinHashDedup.pairs(df, "doc_id",
+      graft.functions.VectorExpressions.wordShingleHashes(col("text"), 3, TextHash.P), cfg)
+    val comp = ConnectedComponents.minLabel(pairs.select(col("id_a"), col("id_b")))
+    val dropped = comp.filter(col("root") =!= col("id")).select(col("id").as("doc_id"))
+    df.join(dropped, Seq("doc_id"), "left_anti").select("doc_id").as[Long].collect().toSet
+  }
+
+  test("a chain of near-dups collapses to its lowest id through the components") {
+    val core = base + " ok"
+    val kept = fuzzySurvivors(Seq((10L, core), (11L, core + " one"), (12L, core + " one two"),
+      (13L, "completely different words about spark engines and shuffles here")),
+      MinHashDedup.Config(16, 8, 0.5))
+    assert(kept == Set(10L, 13L))
+  }
+
+  test("a star of near-dups keeps only its hub, whether or not the spokes pair") {
+    val core = base + " ok"
+    val kept = fuzzySurvivors(Seq((20L, core), (21L, core + " alpha beta gamma"),
+      (22L, core + " delta epsilon zeta")), MinHashDedup.Config(16, 8, 0.4))
+    assert(kept == Set(20L))
   }
 
   test("signature-estimate prune keeps every true pair and shrinks the verify set") {

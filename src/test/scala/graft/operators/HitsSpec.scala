@@ -74,4 +74,11 @@ class HitsSpec extends AnyFunSuite {
       assert(got(n)._2 === aa2.getOrElse(n, 0L), s"auth($n)")
     }
   }
+
+  test("a run releases its edge checkpoint and every round's but its result's") {
+    val left = graft.TestJobs.leftPersisted(spark)(Seq(Hits.hitsMicro(
+      Seq("a" -> "b", "a" -> "c", "b" -> "c", "c" -> "a", "d" -> "c").toDF("src", "dst"),
+      "src", "dst", iters = 3)))
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
+  }
 }

@@ -101,4 +101,12 @@ class KTrussSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](KTruss.attritionCurve(edges, k = 2, rounds = 1))
     intercept[IllegalArgumentException](KTruss.attritionCurve(edges, k = 4, rounds = 0))
   }
+
+  test("a run leaves no checkpoint behind") {
+    val left = graft.TestJobs.leftPersisted(spark) {
+      KTruss.attritionCurve(edges, k = 4, rounds = 3).collect()
+      Nil
+    }
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
+  }
 }

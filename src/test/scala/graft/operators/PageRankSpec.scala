@@ -84,4 +84,12 @@ class PageRankSpec extends AnyFunSuite {
     val uniform = ranks(edges, iters = 3)
     assert(withGhost.map { case (k, (_, r)) => k -> r } === uniform)
   }
+
+  test("both entries release their invariants and every round but their result's") {
+    val edges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "d").toDF("src", "dst")
+    val left = graft.TestJobs.leftPersisted(spark)(Seq(
+      PageRank.ranksMicro(edges, "src", "dst", iters = 3),
+      PageRank.personalizedMicro(edges, "src", "dst", Seq("a").toDF("sid"), iters = 3)))
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
+  }
 }

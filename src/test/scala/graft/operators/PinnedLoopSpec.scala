@@ -7,11 +7,11 @@ import graft.{TestJobs, TestSpark}
 import graft.ops.UltimateParent
 import graft.queries.RefSurface
 
-/** Every count-driven loop runs on [[PinnedLoop.fixpoint]]: on small graphs
-  * with a known round count, each ported operator (a) leaves the session
-  * conf exactly as it found it — also when it raises at its round cap — and
-  * (b) submits at most one job per round plus a small fixed set-up/consume
-  * cost, whatever the number of shuffle stages in a round. */
+/** The loops on [[PinnedLoop.fixpoint]] and [[PinnedLoop.rounds]]: on
+  * small graphs with a known round count, each ported operator (a) leaves
+  * the session conf exactly as it found it — also when it raises at its
+  * round cap — and (b) submits at most one job per round plus a small fixed
+  * set-up/consume cost, whatever the number of shuffle stages in a round. */
 class PinnedLoopSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -72,6 +72,30 @@ class PinnedLoopSpec extends AnyFunSuite {
       val closure = RefSurface.queries("q139_ancestor_closure")(spark, hierarchyDir).count()
       assert(closure == 4 + 2 * 20, "one ancestor per nation, two per customer")
     }),
+    // every edge of a path has triangle support 0: round 1 peels the whole
+    // graph and the curve is padded without running rounds 2 and 3
+    ("KTruss.attritionCurve, 4-node path", 1, () => {
+      val curve = KTruss.attritionCurve(path(3).toDF("a", "b"), k = 3, rounds = 3)
+        .as[(Int, Long, Long)].collect().toSeq
+      assert(curve == Seq((1, 3L, 0L), (2, 0L, 0L), (3, 0L, 0L)))
+    }),
+    // round-budget operators: the budget, not the data, sets the rounds
+    ("LabelPropagation.labels, 6-node path, 3 rounds", 3, () => {
+      assert(LabelPropagation.labels(path(5).toDF("a", "b"), "a", "b", rounds = 3)
+        .collect().length == 6)
+    }),
+    // node 1 holds node 0's damped base after round 2
+    ("PageRank.ranksMicro, 5-node path, 2 rounds", 2, () => {
+      val r = PageRank.ranksMicro(path(4).toDF("a", "b"), "a", "b", iters = 2)
+        .as[(Long, Long)].collect().toMap
+      assert(r(0L) == 150000L && r(1L) == 277500L && r(4L) == 1000000L)
+    }),
+    ("PageRank.personalizedMicro, 5-node path seeded at 0, 2 rounds", 2, () => {
+      val r = PageRank.personalizedMicro(path(4).toDF("a", "b"), "a", "b",
+          Seq(0L).toDF("sid"), iters = 2)
+        .as[(Long, Boolean, Long)].collect().map(t => t._1 -> t._3).toMap
+      assert(r == Map(0L -> 150000L, 1L -> 127500L, 2L -> 722500L, 3L -> 0L, 4L -> 0L))
+    }),
   )
 
   for ((name, rounds, run) <- cases) {
@@ -116,6 +140,76 @@ class PinnedLoopSpec extends AnyFunSuite {
     val capped = countdown(3)
     assert(capped.pending == Seq(8L, 7L, 6L) && !capped.converged)
     assert(!countdown(0).converged, "no round run is not convergence")
+  }
+
+  test("rounds: n steps in one job, every state and invariant released but the result's") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val inv = spark.range(10).select(col("id").as("k"), (col("id") * 10).as("add"))
+      .localCheckpoint()
+    var out: org.apache.spark.sql.DataFrame = null
+    val jobs = TestJobs.count(spark) {
+      out = PinnedLoop.rounds(spark, 10L, n = 4, invariants = Seq(inv)) {
+        spark.range(10).select(col("id").as("k"), lit(0L).as("v"))
+      } { s => s.join(inv, Seq("k")).select(col("k"), (col("v") + col("add") + 1).as("v")) }
+    }
+    assert(jobs == 1, "one eager checkpoint runs every round")
+    assert((sc.getPersistentRDDs.keySet -- before).size == 1, "only the result stays persisted")
+    assert(out.as[(Long, Long)].collect().toMap == (0L until 10L).map(k => k -> 4 * (10 * k + 1)).toMap)
+    PinnedLoop.release(out, blocking = true)
+  }
+
+  test("rounds with no round returns its init, checkpointed") {
+    var ids = Seq.empty[Long]
+    val left = TestJobs.leftPersisted(spark) {
+      val out = PinnedLoop.rounds(spark, 5L, n = 0)(spark.range(5).toDF("id")) { _ =>
+        fail("no step may run")
+      }
+      ids = out.as[Long].collect().sorted.toSeq
+      Seq(out)
+    }
+    assert(ids == (0L until 5L))
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
+  }
+
+  test("both loop forms plan inside the pins and put the conf back") {
+    val before = spark.conf.getAll
+    val confParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val rows = 3 * 250000L
+    var seen = Seq.empty[Map[String, String]]
+    def pins() = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
+      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> spark.conf.get(k)).toMap
+    PinnedLoop.release(PinnedLoop.rounds(spark, rows, n = 1)(spark.range(3).toDF("n")) { s =>
+      seen :+= pins(); s })
+    PinnedLoop.release(PinnedLoop.fixpoint(spark, rows, col("n") < 0, maxRounds = 1)(
+      spark.range(3).toDF("n")) { s => seen :+= pins(); s }.state)
+    val want = Map("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> math.min(confParts, 3).toString,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    assert(seen == Seq(want, want))
+    assert(spark.conf.getAll == before)
+  }
+
+  test("nParts: one partition per 250k rows, at least one, capped by the conf") {
+    val confParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(PinnedLoop.nParts(spark, 0L) == 1 && PinnedLoop.nParts(spark, 249999L) == 1)
+    assert(PinnedLoop.nParts(spark, 500000L) == math.min(confParts, 2))
+    assert(PinnedLoop.nParts(spark, 250000L * 100000L) == confParts)
+  }
+
+  test("fixpoint releases the invariants it is handed once its loop ends") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val inv = spark.range(4).toDF("n").localCheckpoint()
+    val made = sc.getPersistentRDDs.keySet -- before
+    val run = PinnedLoop.fixpoint(spark, 4L, col("n") > 0, maxRounds = 10, invariants = Seq(inv)) {
+      spark.range(4).toDF("n")
+    } { s => s.join(inv, Seq("n")).select(greatest(col("n") - 1, lit(0L)).as("n")) }
+    assert(run.converged)
+    assert(run.state.as[Long].collect().forall(_ == 0L))
+    PinnedLoop.release(run.state)
+    assert(made.nonEmpty && (sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "the invariant's or a round's blocks stay")
   }
 
   test("release frees a local checkpoint's blocks; Dataset.unpersist leaves them") {

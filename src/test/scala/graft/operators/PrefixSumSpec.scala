@@ -77,4 +77,20 @@ class PrefixSumSpec extends AnyFunSuite {
     }
     intercept[IllegalArgumentException](PrefixSum.runningScans(df, "k", Nil))
   }
+
+  test("NULL values ahead of a range partition's first non-NULL carry the offset, as the window does") {
+    // v = k, NULL in the first 10 of every 50 keys: several of the 8 range
+    // partitions open with NULLs
+    val df = (0L until 400L).map(k => (k, Option.when(k % 50 >= 10)(k)))
+      .toDF("k", "v").repartition(5)
+    def byKey(out: org.apache.spark.sql.DataFrame) = out.select("k", "s", "lo", "hi").collect()
+      .map(r => r.getLong(0) -> (Option(r.get(1)), Option(r.get(2)), Option(r.get(3)))).toMap
+    val got = byKey(PrefixSum.runningScans(df, "k",
+      Seq(("v", "s", "sum"), ("v", "lo", "min"), ("v", "hi", "max")), numParts = 8))
+    val want = byKey(df.select(col("k"), upTo(sum(_)).as("s"), upTo(min(_)).as("lo"),
+      upTo(max(_)).as("hi")))
+    assert(want(51L) == ((Some(1180L), Some(10L), Some(49L))))
+    assert(want(5L) == ((None, None, None)))
+    assert(got == want)
+  }
 }

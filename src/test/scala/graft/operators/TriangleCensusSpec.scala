@@ -80,4 +80,13 @@ class TriangleCensusSpec extends AnyFunSuite {
         Ordering[(Int, Long)].lt(rank(b), rank(c)), s"($a, $b, $c)")
     }
   }
+
+  test("columns come out as (ta, tb, tc), so a positional read agrees") {
+    // hub 0 (degree 50) closes one triangle with 1 and 2 (degree 2 each)
+    val edges = ((1L to 50L).map(i => (0L, i)) :+ (1L, 2L)).toDF("src", "dst")
+    val tri = TriangleCensus.triangles(edges, "src", "dst")
+    assert(tri.columns.toSeq == Seq("ta", "tb", "tc"))
+    assert(tri.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      == Seq((1L, 2L, 0L)))
+  }
 }

@@ -8,9 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** The engine-native bounded-state streaming dedup
-  * (`dropDuplicatesWithinWatermark`) next to our custom
-  * [[StreamingDedup.firstSeen]]: state is evicted with the watermark, so
-  * the dedup horizon — not the stream length — bounds memory. */
+  * (`dropDuplicatesWithinWatermark`): state is evicted with the watermark,
+  * so the dedup horizon — not the stream length — bounds memory. */
 class WatermarkDedupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._

@@ -67,14 +67,4 @@ class EdgeCasesSpec extends AnyFunSuite {
       graft.sources.CatalogSelect.newestFile(catalog.limit(0))
     }
   }
-
-  test("exact dedup on composite keys") {
-    val df = Seq(
-      (1L, "en", "src0", "t"), (2L, "en", "src0", "t"),
-      (3L, "en", "src1", "t"), (4L, "fr", "src0", "t")
-    ).toDF("id", "lang", "source", "t")
-    val kept = graft.operators.ExactDedup.keepFirst(df, Seq("lang", "source"), "id")
-      .select("id").as[Long].collect().toSet
-    assert(kept == Set(1L, 3L, 4L))
-  }
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.operators.StreamingDedup
 import graft.sources.SnapshotTable
 
 /** One delivered record; an at-least-once source redelivers it whole. */
@@ -43,7 +42,9 @@ class StreamingE2ESpec extends AnyFunSuite {
       unique ++ unique.filter(_.id % 3 == 0) ++ unique.filter(_.id % 7 == 0))
 
     val mem = MemoryStream[Delivered]
-    val firsts = StreamingDedup.firstSeen(mem.toDS())(_.id)
+    // a redelivery is the same record whole, so Spark's own keyed
+    // dropDuplicates (state across micro-batches) is the first-seen dedup
+    val firsts = mem.toDS().dropDuplicates("id")
     val q = SnapshotTable.startStream(firsts.toDF(), src, ckpt, "e2e_firsts")
     try {
       def syncReplica(): Unit =
@@ -57,8 +58,7 @@ class StreamingE2ESpec extends AnyFunSuite {
 
       // the replica, built ONLY from change batches, equals the batch answer
       val replica = SnapshotTable.read(spark, dst).as[Delivered].collect().toSet
-      val batch = StreamingDedup.firstSeen(spark.createDataset(delivered))(_.id)
-        .collect().toSet
+      val batch = spark.createDataset(delivered).dropDuplicates("id").collect().toSet
       assert(batch == unique.toSet)
       assert(replica == batch)
       // no redelivery reached a commit (the keyed replica would hide one)
