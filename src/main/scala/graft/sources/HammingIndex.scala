@@ -24,8 +24,7 @@ import graft.functions.TextHash
   *     the chunk rows — no second corpus read at all.
   *
   * The geometry (bits, nParts) rides `meta.json` and probes must match it
-  * (the BloomFileIndex lesson: a mismatched probe is silent false
-  * negatives). The directory protocol — rebuild scope, `append.lock`,
+  * (a mismatched probe is silent false negatives). The directory protocol — rebuild scope, `append.lock`,
   * `_ready` gate — is [[IndexDir]]'s; incremental ingest is [[append]]
   * (in place, id-gated) or [[startDedupStream]].
   */

@@ -26,23 +26,21 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * resolves the manifest for that version and serves EXACTLY its file
   * list, so SQL readers get the same snapshot isolation as the
   * programmatic API. The scan plans one input partition per data file and
-  * reuses the SPJ family's low-level parquet reader, which means pushed
-  * comparison filters skip whole ROW GROUPS on footer stats before any
+  * reads it with a low-level parquet reader ([[RowGroups]]), which means
+  * pushed comparison filters skip whole ROW GROUPS on footer stats before any
   * page I/O, and column projection reaches the file reader — a 100 TB
   * time-travel query reads only the surviving groups of the pinned
   * version's files.
   *
   * SQL DML is supported on the UNPINNED relation: `INSERT INTO` appends
-  * (a normal snapshot commit — CHECK constraints enforce on the staged
-  * files exactly as programmatic commits), `INSERT OVERWRITE` replaces,
+  * (a normal snapshot commit), `INSERT OVERWRITE` replaces,
   * and `DELETE FROM … WHERE …` runs the copy-on-write
   * [[SnapshotTable.deleteWhere]] (not the merge-on-read variant, so the
   * table stays SQL-readable afterwards). `MERGE INTO` and `UPDATE` (and
   * DELETEs whose condition can't translate to source filters) ride the
   * DSv2 row-level-operations surface ([[GraftRowLevelOperation]]):
   * group-based copy-on-write, FILE-GRANULAR via `_file` runtime group
-  * filtering, constraints enforced on the staged rewrite, and optimistic
-  * conflict abort against the resolved snapshot version. DML against a
+  * filtering, and optimistic conflict abort against the resolved snapshot version. DML against a
   * `VERSION AS OF` relation is refused at analysis — it would silently
   * target the latest version instead of the pinned one.
   *
@@ -166,11 +164,11 @@ class GraftSnapshotCatalog extends TableCatalog
     * place (one POSIX rename — fails if a rival CTAS won the race; a
     * failed query aborts by deleting the staging root, leaving no
     * half-created table behind). Partition transforms are refused — the
-    * layout surface is `CALL optimize` / programmatic bucketing. */
+    * layout surface is `CALL optimize`. */
   override def stageCreate(ident: Identifier, info: TableInfo): StagedTable = {
     require(info.partitions().isEmpty,
       "CTAS with PARTITIONED BY is not supported — lay out with " +
-        "CALL optimize (curve compaction) or programmatic bucketing")
+        "CALL optimize (curve compaction)")
     val dest = dirFor(ident)
     if (Files.isDirectory(dest.resolve("_snapshots")))
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
@@ -187,14 +185,13 @@ class GraftSnapshotCatalog extends TableCatalog
 
   /** REPLACE TABLE … AS SELECT — the query result lands as ONE
     * `commitReplace` on the existing table (a new snapshot version:
-    * history, time travel and constraints all survive, unlike a
-    * drop-and-recreate). The commit happens inside the write itself, so
+    * history and time travel survive, unlike a drop-and-recreate). The commit happens inside the write itself, so
     * a failed query leaves the table untouched; commit/abort staging
     * hooks are no-ops. */
   override def stageReplace(ident: Identifier, info: TableInfo): StagedTable = {
     require(info.partitions().isEmpty,
       "RTAS with PARTITIONED BY is not supported — lay out with " +
-        "CALL optimize (curve compaction) or programmatic bucketing")
+        "CALL optimize (curve compaction)")
     val dest = dirFor(ident)
     if (!Files.isDirectory(dest.resolve("_snapshots")))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
@@ -391,7 +388,7 @@ private[sources] object GraftProcedures {
         case "vacuum" =>
           SnapshotTable.vacuum(dir, input.getInt(1))
         case "restore" =>
-          SnapshotTable.restoreVersion(spark, dir, input.getInt(1).toLong)
+          SnapshotTable.restoreVersion(dir, input.getInt(1).toLong)
         case "clone" =>
           val dest = Paths.get(warehouse,
             input.getUTF8String(2).toString.split("\\."): _*).toString
@@ -452,18 +449,16 @@ class GraftSnapshotVersionTable(dir: String, version: Long,
 
   override def name(): String = s"$dir@v$version"
   override def schema(): StructType = tableSchema
-  /** SHOW TBLPROPERTIES surface: version, op, and the CHECK contracts. */
+  /** SHOW TBLPROPERTIES surface: version, op, and a restore's source. */
   override def properties(): java.util.Map[String, String] =
-    (snap.meta.view.filterKeys(k =>
-      k.startsWith("check:") || k == "op" || k == "restored_from").toMap +
+    (snap.meta.view.filterKeys(k => k == "op" || k == "restored_from").toMap +
       ("version" -> version.toString)).asJava
   override def capabilities(): JSet[TableCapability] =
     java.util.Set.of(TableCapability.BATCH_READ,
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val files = snap.files.map(f => Paths.get(dir, f).toString).toArray
-    // per-file zone stats by column (legacy single zonecol + multi-zone
-    // keys), fed to the scan's RUNTIME file pruning
+    // per-file zone stats by column, fed to the scan's RUNTIME file pruning
     // a malformed zone entry must degrade to "no stats for that file"
     // (advisory posture — pruning is an optimization, never a gate on
     // reading an intact table), not brick every SELECT
@@ -471,20 +466,12 @@ class GraftSnapshotVersionTable(dir: String, version: Long,
       scala.util.Try {
         val Array(mn, mx) = v.split(","); (mn.toDouble, mx.toDouble)
       }.toOption
-    val zoneStats: Map[String, Map[String, (Double, Double)]] = {
-      val single = snap.meta.get("zonecol").map { zc =>
-        zc -> snap.files.flatMap(f =>
-          snap.meta.get(s"zone:$f").flatMap(parse).map(f -> _)).toMap
-      }
-      val multi = snap.meta.get("zonecols").toSeq.flatMap(_.split(","))
+    val zoneStats: Map[String, Map[String, (Double, Double)]] =
+      snap.meta.get("zonecols").toSeq.flatMap(_.split(","))
         .filter(_.nonEmpty).map { c =>
           c -> snap.files.flatMap(f =>
             snap.meta.get(s"zone:$c:$f").flatMap(parse).map(f -> _)).toMap
-        }
-      // merge (a column can be both the legacy zonecol and a multi col)
-      (single.toSeq ++ multi).groupBy(_._1)
-        .map { case (c, ms) => c -> ms.map(_._2).reduce(_ ++ _) }
-    }
+        }.toMap
     new GraftSnapshotScanBuilder(name(), files, snap.files.toArray, dvDir,
       tableSchema, zoneStats)
   }
@@ -496,8 +483,8 @@ class GraftSnapshotVersionTable(dir: String, version: Long,
 
   /** INSERT INTO / INSERT OVERWRITE via the V1 write fallback: the whole
     * incoming DataFrame lands as ONE snapshot commit (append or replace),
-    * so SQL writers get the identical atomicity, CHECK-constraint
-    * enforcement and schema-merge policy as programmatic commits. */
+    * so SQL writers get the identical atomicity and schema-merge policy
+    * as programmatic commits. */
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
     : org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -535,8 +522,8 @@ class GraftSnapshotVersionTable(dir: String, version: Long,
     * group-based copy-on-write through [[GraftRowLevelOperation]]: Spark
     * rewrites the statement to a ReplaceData over this operation's scan,
     * runtime group filtering narrows the rewrite to the files containing
-    * matches, and the commit drops exactly those files with constraint
-    * enforcement + optimistic conflict abort (`expectedVersion` = the
+    * matches, and the commit drops exactly those files with optimistic
+    * conflict abort (`expectedVersion` = the
     * version this statement resolved). */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
@@ -629,7 +616,7 @@ class GraftSnapshotScanBuilder(label: String, files: Array[String],
   private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-  // advisory pruning (the SpjTable contract): every filter returns as
+  // advisory pruning: every filter returns as
   // residual, the reader uses the comparison-shaped subset for row-group
   // skipping on footer stats
   override def pushFilters(
@@ -832,9 +819,9 @@ class GraftSnapshotScan(label: String, files0: Array[String],
     * key VALUES here before the scan executes, and any file whose zone
     * stats exclude every value is dropped WITHOUT a task — at 100 TB a
     * selective dim join reads only the files that can match. Only
-    * zone-stat'd columns are offered ([[SnapshotTable]] `zonecol`/
-    * `zonecols` meta — optimize/compaction layouts write them); files
-    * without stats always survive (advisory pruning, the SPJ contract).
+    * zone-stat'd columns are offered ([[SnapshotTable]] `zonecols` meta —
+    * `CALL optimize` layouts write them); files without stats always
+    * survive (advisory pruning).
     * Stored bounds are doubles written by the commit's min/max cast —
     * widened 1 ulp on each side so nearest-rounding of extreme int64
     * values can never prune a file that truly contains a probe value. */
@@ -905,8 +892,18 @@ class GraftSnapshotScan(label: String, files0: Array[String],
     * footer reads per PLANNING round, and size alone drives the join
     * strategy. */
   override def estimateStatistics()
-    : org.apache.spark.sql.connector.read.Statistics =
-    GraftScanStats.fromFiles(files)
+    : org.apache.spark.sql.connector.read.Statistics = {
+    val bytes = files.iterator.map { f =>
+      val p = Paths.get(f)
+      if (Files.exists(p)) Files.size(p) else 0L
+    }.sum
+    new org.apache.spark.sql.connector.read.Statistics {
+      override def sizeInBytes(): java.util.OptionalLong =
+        java.util.OptionalLong.of(bytes)
+      override def numRows(): java.util.OptionalLong =
+        java.util.OptionalLong.empty()
+    }
+  }
   override def description(): String =
     s"GraftSnapshotScan($label, files=${files.length}, " +
       s"rowGroupFilters=[${filters.mkString(", ")}]" +
@@ -967,8 +964,9 @@ class GraftSnapshotReaderFactory extends PartitionReaderFactory {
   * added null-fill it — `readVersion`'s resolve-by-name rule), and when a
   * file contains NONE of them, emits its surviving row counts as all-null
   * rows straight from footer metadata without touching a page. Row-group
-  * skipping on pushed filters as in the SPJ reader (a filter on a column
-  * the file lacks has no stats → the group survives — always safe).
+  * skipping on pushed filters ([[RowGroups.blockSurvives]]; a filter on
+  * a column the file lacks has no stats → the group survives — always
+  * safe).
   *
   * MERGE-ON-READ deletes: when `dvFiles` is nonempty (the scan attaches
   * the DV sidecar only to files the vector actually touches), the reader
@@ -1033,7 +1031,7 @@ class GraftSnapshotFileReader(
   private val present = presentNames.toSet
   private val projection: Option[org.apache.parquet.schema.MessageType] =
     if (presentNames.isEmpty) None
-    else Some(SpjTable.projectionOf(fileSchema, presentNames))
+    else Some(RowGroups.projectionOf(fileSchema, presentNames))
   projection.foreach(fileReader.setRequestedSchema)
   private val columnIO = projection.map(p =>
     new org.apache.parquet.io.ColumnIOFactory().getColumnIO(p))
@@ -1046,7 +1044,7 @@ class GraftSnapshotFileReader(
   private def nextRowGroup(): Boolean = {
     while (blocks.hasNext) {
       val block = blocks.next()
-      if (SpjTable.blockSurvives(block, filters.toSeq)) {
+      if (RowGroups.blockSurvives(block, filters.toSeq)) {
         projection match {
           case Some(p) =>
             val store = fileReader.readNextRowGroup()
@@ -1060,11 +1058,11 @@ class GraftSnapshotFileReader(
             recordReader = null
             remainingInGroup = block.getRowCount
         }
-        SpjTable.rowGroupsRead.incrementAndGet()
+        RowGroups.read.incrementAndGet()
         if (remainingInGroup > 0) return true
       } else {
         fileReader.skipNextRowGroup()
-        SpjTable.rowGroupsSkipped.incrementAndGet()
+        RowGroups.skipped.incrementAndGet()
         // a skipped group's rows still occupy row-index space — the DV
         // records parquet row indexes, so the cursor must advance past them
         rowPos += block.getRowCount
@@ -1214,26 +1212,6 @@ class GraftStagedCtasTable(
   private def cleanupStaging(): Unit =
     if (stagingRoot != null && Files.exists(stagingRoot))
       SnapshotTable.deleteRecursively(stagingRoot)
-}
-
-/** The one Statistics builder every graft DSv2 scan shares: summed
-  * on-disk bytes of a file list (driver stat calls, no data I/O), rows
-  * left empty. One definition so caveat fixes (caching, deleted files,
-  * row counts) can't drift between the snapshot and SPJ scans. */
-private[sources] object GraftScanStats {
-  def fromFiles(fs: Iterable[String])
-    : org.apache.spark.sql.connector.read.Statistics = {
-    val bytes = fs.map { f =>
-      val p = Paths.get(f)
-      if (Files.exists(p)) Files.size(p) else 0L
-    }.sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(bytes)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.empty()
-    }
-  }
 }
 
 /** Read-only metadata tables (`t$history`, `t$files`) and the row builders

@@ -33,8 +33,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     the operation degrades to a correct full-table rewrite;
   *   - the write's `commit` publishes ONE snapshot commit that drops the
   *     files the scan actually served and adds the staged replacements —
-  *     CHECK constraints enforce on the staged parquet exactly as
-  *     programmatic commits, and `expectedVersion` pins the snapshot the
+  *     `expectedVersion` pins the snapshot the
   *     rewrite was derived from: a concurrent commit in between aborts
   *     with [[SnapshotTable.ConcurrentCommitException]] (optimistic
   *     conflict detection — never a blind lost-update).
@@ -166,8 +165,8 @@ object GraftRowLevelScan {
   * under a fresh `data-<uuid>/` dir inside the table (the snapshot
   * staging convention — invisible until a manifest references it);
   * driver-side `commit` publishes one snapshot commit dropping the
-  * scanned files, with CHECK-constraint enforcement on the staged files
-  * and optimistic conflict detection against the pinned version. */
+  * scanned files, with optimistic conflict detection against the pinned
+  * version. */
 class GraftReplaceDataWrite(
     dir: String, version: Long, op: GraftRowLevelOperation,
     writeSchema: StructType) extends Write {
@@ -198,7 +197,6 @@ class GraftReplaceDataWrite(
       finally st.close()
       // dummy zero-row frame carrying the manifest's own recorded schema:
       // commit() uses it only for the schema-merge step (identity here)
-      // and to reach a SparkSession for constraint validation
       val spark = org.apache.spark.sql.SparkSession.active
       val snap = SnapshotTable.snapshot(dir, version)
       val schema = snap.meta.get("schema")

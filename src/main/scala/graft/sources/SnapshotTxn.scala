@@ -20,9 +20,8 @@ import org.apache.spark.sql.DataFrame
   *    refused (inside their CAS retry loop), which is what lets the
   *    visibility rule below assume only TRAILING versions can be pending.
   *  2. Staging: each table gets at most ONE pending commit
-  *    ([[stageAppend]]/[[stageReplace]]/`applyChanges(txn = …)`). The
-  *    pending commit is a perfectly normal manifest claiming a normal
-  *    version slot — except
+  *    ([[stageAppend]]/[[stageReplace]]). The pending commit is a
+  *    perfectly normal manifest claiming a normal version slot — except
   *    its meta carries `txn=<txid>` + `txnd=<txnDir>`, which makes it
   *    INVISIBLE to every reader ([[SnapshotTable.versions]]) until the
   *    transaction's DECISION says `commit`.

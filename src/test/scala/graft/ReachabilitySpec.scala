@@ -6,23 +6,38 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Dead-code guard: every top-level `object` in `operators`, `ops` and
-  * `pipeline` must be reached from the rest of `src/main` — the queries,
-  * sources, functions, plans and mains — directly or through another
-  * reached object of those packages. An object only its own specs call is
-  * code the oracle never checks; delete it, or allowlist it here with the
-  * reason it is an entry point.
+/** Dead-code guard: every top-level `object` in `operators`, `ops`,
+  * `pipeline` and `sources` must be reached from the rest of `src/main` —
+  * the queries, functions, plans and mains — directly or through another
+  * reached declaration of those packages. An object only its own specs
+  * call is code the oracle never checks; delete it, or allowlist it here
+  * with the reason it is an entry point.
   *
-  * Reach is a whole-word mention of the object's name in the code of
-  * another reached file: comments, doc-comment links included, do not
-  * count. */
+  * Reach is a whole-word mention of the object's name in the code of a
+  * reached declaration other than its own: comments, doc-comment links
+  * included, do not count. A declaration is a top-level object, class or
+  * trait; a class and its companion object are one declaration, so a
+  * companion object is reached when its class is. Everything outside the
+  * guarded packages is reached.
+  *
+  * The second guard holds `SnapshotTable` to the same rule one level
+  * down: each of its public methods needs a caller in another `src/main`
+  * file. */
 class ReachabilitySpec extends AnyFunSuite {
 
   private val allowlist = Map(
     "RorPipeline" -> "the entry point of the rorbench harness",
-    "StreamingIngest" -> "a library entry point: the paper's incremental variant")
+    "StreamingIngest" -> "a library entry point: the paper's incremental variant",
+    "CatalogSelect" -> ("a library entry point: the reference's S1 dump selection " +
+      "(fetch.py's newest-record query); the local harness is handed its dump path"))
 
-  private val guardedDirs = Set("operators", "ops", "pipeline")
+  private val snapshotTableAllowlist = Map(
+    "resetConsumer" -> ("the only recovery path the vacuumed-offset error of " +
+      "pollChanges names; no main needs it until an offset is vacuumed away"))
+
+  private val guardedDirs = Set("operators", "ops", "pipeline", "sources")
+
+  private val root = Paths.get("src/main/scala/graft")
 
   /** `src` with its comments blanked. String and character literals are
     * copied as they are (SQL text may name an object) and skipped over, so
@@ -60,37 +75,78 @@ class ReachabilitySpec extends AnyFunSuite {
     out.toString
   }
 
-  test("every object in operators, ops and pipeline is reached from the rest of src/main") {
-    val root = Paths.get("src/main/scala/graft")
+  /** Every `src/main` file with its comments blanked. */
+  private lazy val files: Map[Path, String] = {
     assert(Files.isDirectory(root), s"run from the repository root (no $root)")
-    val files: Map[Path, String] = Files.walk(root).iterator.asScala
+    Files.walk(root).iterator.asScala
       .filter(_.toString.endsWith(".scala"))
       .map(p => p -> code(new String(Files.readAllBytes(p), "UTF-8"))).toMap
+  }
+
+  private def words(src: String): Set[String] = raw"\w+".r.findAllIn(src).toSet
+
+  test("every object in operators, ops, pipeline and sources is reached from the rest of src/main") {
     def guardedFile(p: Path): Boolean =
       guardedDirs(root.relativize(p).getName(0).toString)
-    val objectDecl = raw"(?m)^(?:private\S* )?(?:case )?object (\w+)".r
-    val objects: Map[String, Path] = files.toSeq.filter(f => guardedFile(f._1))
-      .flatMap { case (p, src) => objectDecl.findAllMatchIn(src).map(_.group(1) -> p) }
-      .toMap
-    assert(objects.contains("UltimateParent") && objects.contains("PinnedLoop"))
-    assert(allowlist.keySet.subsetOf(objects.keySet),
-      s"allowlisted objects that no longer exist: ${allowlist.keySet -- objects.keySet}")
+    // a top-level declaration runs from its header to the next one
+    val declHead =
+      raw"(?m)^(?:(?:private|protected)\S* |final |sealed |abstract |case )*(object|class|trait) (\w+)".r
+    // identity equality: a declaration is one value, compared by reference
+    final class Decl(val file: Path, val name: String, val isObject: Boolean,
+                     val words: Set[String])
+    val decls: Seq[Decl] = files.toSeq.filter(f => guardedFile(f._1)).flatMap { case (p, src) =>
+      val heads = declHead.findAllMatchIn(src).toSeq
+      val spans = heads.zip(heads.drop(1).map(_.start) :+ src.length).map {
+        case (m, end) => (m.group(2), m.group(1) == "object", src.substring(m.start, end)) }
+      spans.groupBy(_._1).toSeq.map { case (name, ss) =>
+        new Decl(p, name, ss.exists(_._2), ss.map(s => words(s._3)).reduce(_ ++ _)) }
+    }
+    val objects = decls.filter(_.isObject)
+    val names = objects.map(_.name).toSet
+    assert(Seq("UltimateParent", "PinnedLoop", "SnapshotTable", "IndexDir").forall(names))
+    assert(allowlist.keySet.subsetOf(names),
+      s"allowlisted objects that no longer exist: ${allowlist.keySet -- names}")
 
-    var reached = allowlist.keySet
-    var reachedFiles = files.keySet.filterNot(guardedFile) ++ reached.map(objects)
+    var reached: Set[Decl] = decls.filter(d => allowlist.contains(d.name)).toSet
+    var reachedWords: Seq[Set[String]] =
+      files.toSeq.filterNot(f => guardedFile(f._1)).map(f => words(f._2)) ++ reached.map(_.words)
     var grew = true
     while (grew) {
-      val found = objects.collect {
-        case (o, own) if !reached(o) && reachedFiles.exists(f =>
-            f != own && raw"\b$o\b".r.findFirstIn(files(f)).isDefined) => o
-      }
+      // a declaration's own words join reachedWords only once it is reached,
+      // so it never reaches itself
+      val found = decls.filter(d => !reached(d) && reachedWords.exists(_.contains(d.name)))
       reached ++= found
-      reachedFiles ++= found.map(objects)
+      reachedWords ++= found.map(_.words)
       grew = found.nonEmpty
     }
-    val unreached = (objects.keySet -- reached).toSeq.sorted
+    val unreached = objects.filterNot(reached)
+      .map(d => s"${d.name} (${root.relativize(d.file)})").sorted
     assert(unreached.isEmpty,
-      s"${unreached.size} objects no query, source, plan or main reaches: " +
-        unreached.map(o => s"$o (${root.relativize(objects(o))})").mkString(", "))
+      s"${unreached.size} objects no query, function, plan or main reaches: " +
+        unreached.mkString(", "))
+  }
+
+  test("every public method of SnapshotTable has a caller in another src/main file") {
+    val own = root.resolve("sources/SnapshotTable.scala")
+    val src = files(own)
+    // members of the object sit at two spaces; private ones carry a modifier
+    val defs = raw"(?m)^  def (\w+)".r
+      .findAllMatchIn(src.substring(src.indexOf("object SnapshotTable")))
+      .map(_.group(1)).toSet
+    assert(defs("read") && defs("upsert"))
+    assert(snapshotTableAllowlist.keySet.subsetOf(defs),
+      s"allowlisted methods that no longer exist: ${snapshotTableAllowlist.keySet -- defs}")
+    // a caller names the method through the object or through a value
+    // bound to it (`val st = graft.sources.SnapshotTable`)
+    val alias = raw"\bval (\w+) = (?:[\w.]+\.)?SnapshotTable\b".r
+    val called: Set[String] = (files - own).values.flatMap { c =>
+      val qualifiers = ("SnapshotTable" +: alias.findAllMatchIn(c).map(_.group(1)).toSeq)
+        .mkString("|")
+      raw"\b(?:$qualifiers)\s*\.\s*(\w+)".r.findAllMatchIn(c).map(_.group(1))
+    }.toSet
+    val uncalled = (defs -- called -- snapshotTableAllowlist.keySet).toSeq.sorted
+    assert(uncalled.isEmpty,
+      s"${uncalled.size} public SnapshotTable methods no other src/main file calls: " +
+        uncalled.mkString(", "))
   }
 }

@@ -19,7 +19,7 @@ class AssumeHashClusteredSpec extends AnyFunSuite {
 
   // Exchange censuses need the plain executedPlan tree: sparkPlan predates
   // EnsureRequirements (no exchanges exist yet) and the AQE wrapper hides
-  // them from collect() — the SpjTableSpec pattern.
+  // them from collect().
   private def withPlainPlans[T](body: => T): T = {
     val conf = spark.conf
     val prevAqe = conf.getOption("spark.sql.adaptive.enabled")

@@ -8,9 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** Merge-on-read deletes (`deleteWhereMor`): position deletion vectors —
-  * metadata-only delete commits, DV-applied reads (incl. time travel, zone
-  * ranges, CDC), materialization back to copy-on-write, the CoW-op refusal
-  * rule, vacuum/clone lifecycle. */
+  * metadata-only delete commits, DV-applied reads (incl. time travel,
+  * zone-pruned catalog scans, CDC, restore), materialization back to
+  * copy-on-write, the CoW-op refusal rule, vacuum/clone lifecycle. */
 class DeletionVectorSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -103,8 +103,6 @@ class DeletionVectorSpec extends AnyFunSuite {
     }
     refused(SnapshotTable.upsert(spark, t, Seq((2L, "X")).toDF("k", "v"), Seq("k")))
     refused(SnapshotTable.deleteWhere(spark, t, col("k") === 2L))
-    refused(SnapshotTable.applyChanges(spark, t,
-      Seq((2L, "X", "insert")).toDF("k", "v", "_change"), Seq("k")))
   }
 
   test("appends carry the vector; replace and compaction consume it") {
@@ -114,30 +112,28 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(rows(t).map(_._1) == Set(11L, 12L, 99L),
       "append must keep the delete in force")
     // compaction reads through the DV and materializes implicitly
-    SnapshotTable.compact(spark, t, numFiles = 1)
+    SnapshotTable.compactZOrder(spark, t, "k", "k", numFiles = 1)
     val cSnap = SnapshotTable.snapshot(t, SnapshotTable.latestVersion(t).get)
     assert(!cSnap.meta.contains("dv"))
     assert(rows(t).map(_._1) == Set(11L, 12L, 99L))
   }
 
   test("CDC sees MOR deletes as delete rows; materialization is CDC-silent") {
-    val morT = tmpTable(); val cowT = tmpTable(); val morH = tmpTable(); val cowH = tmpTable()
+    val morT = tmpTable(); val cowT = tmpTable()
     seed(morT, n = 6, parts = 2); seed(cowT, n = 6, parts = 2)
-    def drain(src: String, hist: String): Unit = {
-      SnapshotTable.drainChanges(spark, src, "c") { w =>
-        SnapshotTable.scd2Apply(spark, hist, w.df, Seq("k"), w.toVersion); ()
-      }
-      ()
-    }
-    drain(morT, morH); drain(cowT, cowH)
+    def poll(src: String): Set[(Long, String, String)] =
+      SnapshotTable.pollChanges(spark, src, "c").toSeq.flatMap { b =>
+        val got = b.df.collect().map(r =>
+          (r.getAs[Long]("k"), r.getAs[String]("v"), r.getAs[String]("_change"))).toSet
+        assert(b.ack())
+        got
+      }.toSet
+    assert(poll(morT) == poll(cowT)) // bootstrap: both tables as inserts
     SnapshotTable.deleteWhereMor(spark, morT, col("k") % 2 === 0)
     SnapshotTable.deleteWhere(spark, cowT, col("k") % 2 === 0)
-    drain(morT, morH); drain(cowT, cowH)
-    def open(h: String): Set[(Long, String)] =
-      SnapshotTable.read(spark, h).filter(col("valid_to") === -1L)
-        .select("k", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(open(morH) == open(cowH), "SCD2 via MOR == via CoW")
-    assert(open(morH).map(_._1) == Set(1L, 3L, 5L))
+    val morWindow = poll(morT)
+    assert(morWindow == poll(cowT), "the MOR window == the CoW window")
+    assert(morWindow == Set(2L, 4L, 6L).map(k => (k, s"v$k", "delete")))
     // materialization: the logical table is unchanged, so CDC sees nothing
     SnapshotTable.materializeDeletes(spark, morT)
     val w = SnapshotTable.pollChanges(spark, morT, "c")
@@ -176,26 +172,37 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(rows(dst).map(_._1) == (4L to 12L).toSet, "clone unaffected by source vacuum")
   }
 
-  test("nested (SPJ) layouts refuse merge-on-read: two-segment keys cannot address them") {
-    val t = tmpTable()
-    SnapshotTable.commitReplaceSpj(
-      (1 to 50).map(i => (i.toLong, s"v$i")).toDF("k", "v"), t, "k", nBuckets = 4)
-    val e = intercept[IllegalArgumentException] {
-      SnapshotTable.deleteWhereMor(spark, t, col("k") === 1L)
-    }
-    assert(e.getMessage.contains("nested data paths"), e.getMessage)
-  }
-
-  test("zone-range reads apply the vector") {
+  test("restoreVersion keeps the restored version's MOR deletes in force") {
     val t = tmpTable()
     SnapshotTable.commitAppend(
-      (1 to 100).map(i => (i.toLong, i.toLong * 10)).toDF("k", "m")
-        .repartitionByRange(4, col("m")).sortWithinPartitions("m"),
-      t, zoneCol = Some("m"))
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").coalesce(1), t) // v1
+    SnapshotTable.deleteWhereMor(spark, t, col("k") === 2L)              // v2 dv
+    SnapshotTable.commitReplace(Seq((4L, "d")).toDF("k", "v").coalesce(1), t) // v3
+    SnapshotTable.restoreVersion(t, 2L)                                  // v4
+    assert(rows(t).map(_._1) == Set(1L, 3L),
+      "the restored version's deletion vector applies")
+  }
+
+  test("zone-pruned catalog scans apply the vector") {
+    val wh = Files.createTempDirectory("graft_dv_wh").toString
+    spark.conf.set("spark.sql.catalog.graft_dv", classOf[GraftSnapshotCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft_dv.warehouse", wh)
+    val t = s"$wh/zm"
+    SnapshotTable.commitAppend(
+      (1 to 100).map(i => (i.toLong, i.toLong * 10)).toDF("k", "m").repartition(4), t)
+    // lays the table out in 4 m-clustered files with zone stats on m and k
+    SnapshotTable.compactZOrder(spark, t, "m", "k", numFiles = 4)
     SnapshotTable.deleteWhereMor(spark, t, col("k") === 10L)
-    val got = SnapshotTable.readRange(spark, t, 50.0, 150.0)
-      .select("k").as[Long].collect().sorted
-    assert(got.toSeq == (5L to 15L).filterNot(_ == 10L),
-      "pruned range read must still honor the vector")
+    SnapshotTable.commitAppend(
+      Seq((50L, "hit"), (100L, "hit"), (150L, "hit"), (900L, "miss")).toDF("m", "tag")
+        .coalesce(1), s"$wh/zmdim")
+    val before = GraftSnapshotScan.filesPrunedRuntime.get()
+    val got = spark.sql(
+      """SELECT b.k FROM graft_dv.zm b
+        |JOIN graft_dv.zmdim d ON b.m = d.m WHERE d.tag = 'hit'""".stripMargin)
+      .as[Long].collect().sorted
+    assert(got.toSeq == Seq(5L, 15L), "a pruned scan must still honor the vector")
+    assert(GraftSnapshotScan.filesPrunedRuntime.get() - before >= 3,
+      "m in {50, 100, 150} lives in one of four m-clustered files")
   }
 }

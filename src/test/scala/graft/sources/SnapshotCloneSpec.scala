@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -33,7 +32,9 @@ class SnapshotCloneSpec extends AnyFunSuite {
       Seq(1, 2, 3, 4, 5))
 
     // schema carried: the clone knows its columns without opening footers
-    assert(SnapshotTable.schemaOf(dst, 1L).exists(_.fieldNames.contains("x")))
+    assert(SnapshotTable.snapshot(dst, 1L).meta.get("schema").exists(j =>
+      org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.contains("x")))
   }
 
   test("vacuuming the source cannot break the clone (hard links pin inodes)") {
@@ -56,156 +57,19 @@ class SnapshotCloneSpec extends AnyFunSuite {
     assert(SnapshotTable.read(spark, src).as[Int].collect().toSeq == Seq(9))
   }
 
-  test("zone stats carry; stream watermarks do not; non-empty target rejected") {
+  test("zone stats carry; non-empty target rejected") {
     val src = tmpTable(); val dst = tmpTable() + "/t"
-    SnapshotTable.commitAppend(
-      Seq((1, 10.0), (2, 20.0)).toDF("x", "z"), src, zoneCol = Some("z"))
-    // a stream watermark lands in the source's meta
-    SnapshotTable.commitStreamBatch(Seq((3, 30.0)).toDF("x", "z"), src, "s1", 7L)
+    SnapshotTable.commitAppend(Seq((1, 10.0), (2, 20.0)).toDF("x", "z"), src)
+    SnapshotTable.compactZOrder(spark, src, "x", "z", numFiles = 1)
 
     SnapshotTable.cloneAt(src, 2L, dst)
     val meta = SnapshotTable.snapshot(dst, 1L).meta
-    assert(meta.get("zonecol").contains("z"))
-    assert(meta.keys.exists(_.startsWith("zone:")), "zone stats should carry")
-    assert(!meta.keys.exists(_.startsWith("stream:")),
-      "stream dedupe history must NOT carry into a different table")
+    assert(meta.get("zonecols").contains("x,z"))
+    assert(meta.keys.exists(_.startsWith("zone:z:")), "zone stats should carry")
     assert(meta("op") == "clone")
-    assert(SnapshotTable.lastStreamBatch(dst, "s1").isEmpty)
 
     intercept[IllegalArgumentException] {
       SnapshotTable.cloneAt(src, 1L, dst) // dst already a table
-    }
-  }
-
-  test("bucket and SPJ layout specs carry into a clone (same files, same layout)") {
-    // bucketed source: the clone's files ARE the bucketed files, so the
-    // layout spec stays valid and readBucketed must work without a re-replace
-    val src = tmpTable(); val dst = tmpTable() + "/t"
-    SnapshotTable.commitReplaceBucketed(
-      Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v"), src, "k", 4)
-    SnapshotTable.cloneAt(src, 1L, dst)
-    assert(SnapshotTable.readBucketed(spark, dst).collect().toSet ===
-      SnapshotTable.read(spark, src).collect().toSet)
-
-    // SPJ source: same property for the SPJ layout spec
-    val src2 = tmpTable(); val dst2 = tmpTable() + "/t"
-    SnapshotTable.commitReplaceSpj(
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), src2, "k", 4)
-    SnapshotTable.cloneAt(src2, 1L, dst2)
-    assert(SnapshotTable.readSpj(spark, dst2).collect().toSet ===
-      SnapshotTable.read(spark, src2).collect().toSet)
-
-    // a post-clone append invalidates the layout on the CLONE only
-    SnapshotTable.commitAppend(Seq((9, "z")).toDF("k", "v"), dst)
-    intercept[IllegalStateException] { SnapshotTable.readBucketed(spark, dst) }
-    SnapshotTable.readBucketed(spark, src).count() // source untouched
-  }
-
-  test("branch merge: branch appends + main appends land together; deletes apply") {
-    val main = tmpTable(); val br = tmpTable() + "/b"
-    SnapshotTable.commitAppend(Seq(1, 2).toDF("x"), main)
-    SnapshotTable.commitAppend(Seq(3, 4).toDF("x"), main) // base v2
-    SnapshotTable.cloneAt(main, 2L, br)
-    // diverge: branch deletes the v1 file's rows + appends; main appends
-    SnapshotTable.deleteWhere(spark, br, col("x") <= 2)
-    SnapshotTable.commitAppend(Seq(100).toDF("x"), br)
-    SnapshotTable.commitAppend(Seq(5).toDF("x"), main)
-    val v = SnapshotTable.mergeBranch(main, br)
-    assert(SnapshotTable.read(spark, main).as[Int].collect().sorted.toSeq ==
-      Seq(3, 4, 5, 100), "merge = main tip − branch deletions + branch additions")
-    // time travel on main is intact; the merge is one new version
-    assert(SnapshotTable.readVersion(spark, main, 3).as[Int].collect().sorted.toSeq ==
-      Seq(1, 2, 3, 4, 5))
-    assert(SnapshotTable.snapshot(main, v).op == "merge")
-    // branch unaffected
-    assert(SnapshotTable.read(spark, br).as[Int].collect().sorted.toSeq ==
-      Seq(3, 4, 100))
-  }
-
-  test("branch merge conflict: the same base file rewritten on both sides aborts") {
-    val main = tmpTable(); val br = tmpTable() + "/b"
-    // ONE base file: both deletes must rewrite the SAME file to conflict
-    // (a multi-file base where each side touches a different file merges
-    // cleanly — the previous test's shape)
-    SnapshotTable.commitAppend(Seq(1, 2).toDF("x").coalesce(1), main)
-    SnapshotTable.cloneAt(main, 1L, br)
-    SnapshotTable.deleteWhere(spark, br, col("x") === 1)
-    SnapshotTable.deleteWhere(spark, main, col("x") === 2)
-    val ex = intercept[SnapshotTable.MergeConflictException] {
-      SnapshotTable.mergeBranch(main, br)
-    }
-    assert(ex.getMessage.contains("BOTH sides"))
-    // main is untouched by the failed merge
-    assert(SnapshotTable.read(spark, main).as[Int].collect().toSeq == Seq(1))
-    // and the abort left NO orphan links: every parquet file under main is
-    // referenced by some manifest (the conflict was detected after the
-    // branch deleteWhere, whose rewrite files would otherwise leak in)
-    import scala.jdk.CollectionConverters._
-    val mainPath = java.nio.file.Paths.get(main)
-    val onDisk = {
-      val s = java.nio.file.Files.walk(mainPath)
-      try s.iterator().asScala
-        .filter(p => p.toString.endsWith(".parquet") &&
-          !p.toString.contains("_snapshots"))
-        .map(p => mainPath.relativize(p).toString).toSet
-      finally s.close()
-    }
-    val referenced = SnapshotTable.versions(main)
-      .flatMap(v => SnapshotTable.snapshot(main, v).files).toSet
-    assert(onDisk == referenced,
-      s"orphans after aborted merge: ${(onDisk -- referenced).toSeq.sorted}")
-  }
-
-  test("branch merge: main-side replace conflicts with branch rewrites, accepts pure appends") {
-    val main = tmpTable(); val br = tmpTable() + "/b"
-    SnapshotTable.commitAppend(Seq(1).toDF("x"), main)
-    SnapshotTable.cloneAt(main, 1L, br)
-    SnapshotTable.commitAppend(Seq(50).toDF("x"), br) // pure append branch
-    SnapshotTable.commitReplace(Seq(9).toDF("x"), main)
-    val v = SnapshotTable.mergeBranch(main, br)
-    assert(SnapshotTable.read(spark, main).as[Int].collect().sorted.toSeq ==
-      Seq(9, 50), "append-only branch lands on top of a replaced main")
-    // but a branch that REWROTE base rows must conflict with the replace
-    val main2 = tmpTable(); val br2 = tmpTable() + "/b"
-    SnapshotTable.commitAppend(Seq(1, 2).toDF("x"), main2)
-    SnapshotTable.cloneAt(main2, 1L, br2)
-    SnapshotTable.deleteWhere(spark, br2, col("x") === 1)
-    SnapshotTable.commitReplace(Seq(9).toDF("x"), main2)
-    intercept[SnapshotTable.MergeConflictException] {
-      SnapshotTable.mergeBranch(main2, br2)
-    }
-    assert(v == 3L)
-  }
-
-  test("branch merge: deleting the merged branch cannot break main (links pin inodes)") {
-    val main = tmpTable(); val br = tmpTable() + "/b"
-    SnapshotTable.commitAppend(Seq(1).toDF("x"), main)
-    SnapshotTable.cloneAt(main, 1L, br)
-    SnapshotTable.commitAppend(Seq(2, 3).toDF("x"), br)
-    SnapshotTable.mergeBranch(main, br)
-    // blow away the whole branch directory
-    import scala.jdk.CollectionConverters._
-    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(br))
-    try s.sorted(java.util.Comparator.reverseOrder()).iterator().asScala
-      .foreach(java.nio.file.Files.deleteIfExists(_))
-    finally s.close()
-    assert(SnapshotTable.read(spark, main).as[Int].collect().sorted.toSeq ==
-      Seq(1, 2, 3))
-  }
-
-  test("branch merge: main stream watermarks survive; branch watermarks are not imported") {
-    val main = tmpTable(); val br = tmpTable() + "/b"
-    SnapshotTable.commitStreamBatch(Seq(1).toDF("x"), main, "s_main", 7L)
-    SnapshotTable.cloneAt(main, 1L, br)
-    SnapshotTable.commitStreamBatch(Seq(2).toDF("x"), br, "s_branch", 3L)
-    SnapshotTable.mergeBranch(main, br)
-    assert(SnapshotTable.lastStreamBatch(main, "s_main") == Some(7L),
-      "main's exactly-once watermark must survive the merge commit")
-    assert(SnapshotTable.lastStreamBatch(main, "s_branch").isEmpty,
-      "importing the branch's dedupe history would skip main-side batches")
-    // a non-branch table (no clone manifest) is rejected
-    intercept[IllegalArgumentException] {
-      SnapshotTable.mergeBranch(main, main)
     }
   }
 }

@@ -13,6 +13,24 @@ class SnapshotTableSpec extends AnyFunSuite {
   private def tmpTable(): String =
     Files.createTempDirectory("graft_snap").toString
 
+  /** The schema the manifest of version `v` records. */
+  private def schemaOf(t: String, v: Long): Option[org.apache.spark.sql.types.StructType] =
+    SnapshotTable.snapshot(t, v).meta.get("schema").map(j =>
+      org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+
+  /** Files of the latest snapshot whose recorded zone stats can hold a row
+    * inside every `(column, lo, hi)` box bound — the per-file test the
+    * catalog scan's runtime pruning applies. A file without stats for a
+    * bounded column always stays. */
+  private def zoneCandidates(t: String, bounds: (String, Double, Double)*): Seq[String] = {
+    val snap = SnapshotTable.snapshot(t, SnapshotTable.latestVersion(t).get)
+    snap.files.filter(f => bounds.forall { case (c, lo, hi) =>
+      snap.meta.get(s"zone:$c:$f").forall { v =>
+        val Array(mn, mx) = v.split(",").map(_.toDouble); mx >= lo && mn <= hi }
+    })
+  }
+
   test("append commits accumulate; read sees the union") {
     val t = tmpTable()
     val v1 = SnapshotTable.commitAppend(Seq(1, 2).toDF("x"), t)
@@ -83,14 +101,15 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("compaction preserves rows, reduces files, keeps old versions readable") {
     val t = tmpTable()
-    (1 to 4).foreach(i => SnapshotTable.commitAppend(Seq(i).toDF("x"), t))
+    (1 to 4).foreach(i => SnapshotTable.commitAppend(Seq((i, -i)).toDF("x", "y"), t))
     val before = SnapshotTable.snapshot(t, 4).files.length
-    val v = SnapshotTable.compact(spark, t, numFiles = 1)
+    val v = SnapshotTable.compactZOrder(spark, t, "x", "y", numFiles = 1)
     assert(SnapshotTable.snapshot(t, v).files.length === 1)
     assert(before > 1)
-    assert(SnapshotTable.read(spark, t).as[Int].collect().sorted === Array(1, 2, 3, 4))
+    assert(SnapshotTable.read(spark, t).select("x").as[Int].collect().sorted === Array(1, 2, 3, 4))
     // snapshot isolation: the pre-compaction version still reads (no deletes)
-    assert(SnapshotTable.readVersion(spark, t, 4).as[Int].collect().sorted === Array(1, 2, 3, 4))
+    assert(SnapshotTable.readVersion(spark, t, 4).select("x").as[Int].collect().sorted ===
+      Array(1, 2, 3, 4))
   }
 
   test("vacuum drops old versions + their unreferenced files, keeps live data") {
@@ -120,95 +139,50 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(SnapshotTable.read(spark, t).as[Int].collect().sorted === Array(1, 2))
   }
 
-  test("streaming sink: each micro-batch is one snapshot; replays are skipped") {
-    import org.apache.spark.sql.functions
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val t = tmpTable()
-    val ckpt = Files.createTempDirectory("graft_snap_ckpt").toString
-    val mem = MemoryStream[Int]
-    val q = SnapshotTable.startStream(mem.toDF().toDF("x"), t, ckpt, streamId = "s1")
-    try {
-      mem.addData(1, 2); q.processAllAvailable()
-      mem.addData(3); q.processAllAvailable()
-      assert(SnapshotTable.read(spark, t).as[Int].collect().sorted === Array(1, 2, 3))
-      assert(SnapshotTable.lastStreamBatch(t, "s1").exists(_ >= 1L))
-      val versionsBefore = SnapshotTable.versions(t)
-      // checkpoint replay of an already-committed batch: skipped, no dup rows
-      assert(SnapshotTable.commitStreamBatch(
-        Seq(1, 2).toDF("x"), t, "s1", batchId = 0L).isEmpty)
-      assert(SnapshotTable.versions(t) === versionsBefore)
-      assert(SnapshotTable.read(spark, t).as[Int].collect().sorted === Array(1, 2, 3))
-      // a DIFFERENT stream's batch 0 is independent (per-stream watermarks)
-      assert(SnapshotTable.commitStreamBatch(
-        Seq(9).toDF("x"), t, "s2", batchId = 0L).isDefined)
-      assert(SnapshotTable.read(spark, t).as[Int].collect().sorted === Array(1, 2, 3, 9))
-    } finally q.stop()
-  }
-
-  test("stream watermark survives other writers' commits AND vacuum (no double-append)") {
-    val t = tmpTable()
-    assert(SnapshotTable.commitStreamBatch(Seq(1).toDF("x"), t, "s1", 0L).isDefined)
-    // other writers commit, then vacuum drops the watermark's own manifest
-    SnapshotTable.commitAppend(Seq(2).toDF("x"), t)
-    SnapshotTable.commitReplace(Seq(3).toDF("x"), t)
-    SnapshotTable.vacuum(t, keepVersions = 1)
-    assert(SnapshotTable.lastStreamBatch(t, "s1") === Some(0L))
-    // checkpoint replay of batch 0 must STILL be a no-op
-    assert(SnapshotTable.commitStreamBatch(Seq(1).toDF("x"), t, "s1", 0L).isEmpty)
-    assert(SnapshotTable.read(spark, t).as[Int].collect().toSeq === Seq(3))
-  }
-
-  test("zone stats in manifests: range reads prune files from metadata alone") {
-    val t = tmpTable()
-    // two range-clustered appends: [0,99] in 2 files, [100,199] in 2 files
-    def clustered(lo: Int): org.apache.spark.sql.DataFrame =
-      (lo until lo + 100).map(i => (i.toLong, s"r$i")).toDF("k", "payload")
-        .repartitionByRange(2, $"k")
-    SnapshotTable.commitAppend(clustered(0), t, zoneCol = Some("k"))
-    SnapshotTable.commitAppend(clustered(100), t, zoneCol = Some("k"))
-    assert(SnapshotTable.snapshot(t, 2).files.length === 4)
-    // a narrow range hits 1 of 4 files — pruned via the manifest, no footers
-    val cand = SnapshotTable.rangeCandidates(t, 10.0, 20.0)
-    assert(cand.length === 1, s"expected 1 candidate, got $cand")
-    val got = SnapshotTable.readRange(spark, t, 10.0, 20.0)
-      .select("k").as[Long].collect().sorted
-    assert(got === (10L to 20L).toArray)
-    // zone stats from commit 1 carried into commit 2's manifest (append)
-    val zoneKeys = SnapshotTable.snapshot(t, 2).meta.keys.count(_.startsWith("zone:"))
-    assert(zoneKeys === 4)
-    // replace drops the old files' stats and records only its own
-    SnapshotTable.commitReplace(clustered(500), t, zoneCol = Some("k"))
-    val after = SnapshotTable.snapshot(t, 3)
-    assert(after.meta.keys.count(_.startsWith("zone:")) === 2)
-    assert(SnapshotTable.readRange(spark, t, 10.0, 20.0).count() === 0)
-    assert(SnapshotTable.rangeCandidates(t, 510.0, 520.0).length === 1)
-  }
-
-  test("zone edge cases: compact preserves the index; NaN files and zonecol changes stay safe") {
+  test("zone stats in manifests: appends carry them, rewrites and replaces drop them") {
     val t = tmpTable()
     SnapshotTable.commitAppend(
-      (0 until 100).map(i => (i.toDouble, i * 2L)).toDF("k", "v").repartitionByRange(2, $"k"),
-      t, zoneCol = Some("k"))
-    // compaction is routine maintenance: readRange must keep working after
-    SnapshotTable.compact(spark, t, numFiles = 1)
-    assert(SnapshotTable.readRange(spark, t, 5.0, 9.0).count() === 5)
-    assert(SnapshotTable.snapshot(t, SnapshotTable.latestVersion(t).get)
-      .meta.contains("zonecol"))
-    // a NaN-poisoned file records no stats -> always a candidate, rows kept
-    // (a recorded NaN max would wrongly PRUNE: NaN comparisons are false)
+      (0 until 200).map(i => (i.toLong, i.toLong * 2)).toDF("k", "m"), t)
+    SnapshotTable.compactZOrder(spark, t, "k", "m", numFiles = 4)
+    val laid = SnapshotTable.snapshot(t, 2)
+    assert(laid.meta.get("zonecols").contains("k,m"))
+    assert(laid.meta.keys.count(_.startsWith("zone:")) === 8) // 4 files x 2 columns
+    // a narrow range on either column keeps 1 of the 4 files
+    assert(zoneCandidates(t, ("k", 10.0, 20.0)).length === 1)
+    assert(zoneCandidates(t, ("m", 20.0, 40.0)).length === 1)
+    // an append carries the stats and adds a stat-less (always kept) file
+    SnapshotTable.commitAppend(Seq((15L, 30L)).toDF("k", "m").coalesce(1), t)
+    assert(SnapshotTable.snapshot(t, 3).meta.keys.count(_.startsWith("zone:")) === 8)
+    assert(zoneCandidates(t, ("k", 10.0, 20.0)).length === 2)
+    // an upsert rewrites the file holding k = 100: only its stats go
+    SnapshotTable.upsert(spark, t, Seq((100L, -1L)).toDF("k", "m"), Seq("k"))
+    assert(SnapshotTable.snapshot(t, 4).meta.keys.count(_.startsWith("zone:")) === 6)
+    assert(SnapshotTable.read(spark, t).filter($"k" === 100L).select("m").as[Long]
+      .collect().toSeq === Seq(-1L))
+    // a replace drops every old file's stats
+    SnapshotTable.commitReplace(Seq((1L, 2L)).toDF("k", "m"), t)
+    val replaced = SnapshotTable.snapshot(t, 5)
+    assert(!replaced.meta.keys.exists(k => k.startsWith("zone:") || k == "zonecols"))
+  }
+
+  test("zone edge cases: NaN, infinite and all-null values lay out and stay candidates") {
+    val t = tmpTable()
     SnapshotTable.commitAppend(
-      Seq(Double.NaN, 510.0).map(x => (x, 1L)).toDF("k", "v"), t, zoneCol = Some("k"))
-    assert(SnapshotTable.readRange(spark, t, 505.0, 515.0).count() === 1)
-    // appending under a DIFFERENT zone column invalidates old stats (no
-    // wrong-column pruning) but keeps every row reachable
-    SnapshotTable.commitAppend(Seq((1000.0, 7L)).toDF("k", "v"), t, zoneCol = Some("v"))
-    val snap = SnapshotTable.snapshot(t, SnapshotTable.latestVersion(t).get)
-    assert(snap.meta("zonecol") === "v")
-    // old files' zone:* entries were dropped -> they are always candidates
-    val cand = SnapshotTable.rangeCandidates(t, 7.0, 7.0)
-    assert(cand.toSet === snap.files.toSet)
-    assert(SnapshotTable.readRange(spark, t, 7.0, 7.0).count() === 1)
+      (Seq(Double.NaN, 510.0, Double.NegativeInfinity).map(x => (x, Option(1.0))) ++
+        (0 until 100).map(i => (i.toDouble, Option.empty[Double]))).toDF("k", "v"), t)
+    SnapshotTable.compactZOrder(spark, t, "k", "v", numFiles = 2)
+    val snap = SnapshotTable.snapshot(t, 2)
+    // a recorded NaN max would wrongly PRUNE (NaN comparisons are false),
+    // so a file holding a NaN records no "k" stats; "v" is null in most rows
+    // and all-null files record nothing for it
+    assert(snap.files.forall(f => snap.meta.get(s"zone:k:$f").forall(!_.contains("NaN"))))
+    // the candidate files hold the one row in range
+    val got = zoneCandidates(t, ("k", 505.0, 515.0))
+    assert(SnapshotTable.read(spark, t)
+      .filter(org.apache.spark.sql.functions.substring_index(
+        org.apache.spark.sql.functions.input_file_name(), "/", -2).isin(got: _*))
+      .filter($"k".between(505.0, 515.0)).count() === 1)
+    assert(SnapshotTable.read(spark, t).count() === 103)
   }
 
   test("schema evolution: column added mid-history null-fills old files; time travel keeps each version's shape") {
@@ -226,18 +200,18 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     assert(v2.toSeq === Seq((1L, "a", None), (2L, "b", None), (3L, "c", Some("up3"))))
     // v1 time-travels back WITHOUT the later column
     assert(SnapshotTable.readVersion(spark, t, 1).columns.toSeq === Seq("id", "name"))
-    assert(SnapshotTable.schemaOf(t, 1).get.fieldNames.toSeq === Seq("id", "name"))
-    assert(SnapshotTable.schemaOf(t, 2).get.fieldNames.toSeq ===
+    assert(schemaOf(t, 1).get.fieldNames.toSeq === Seq("id", "name"))
+    assert(schemaOf(t, 2).get.fieldNames.toSeq ===
       Seq("id", "name", "ultimate_parent"))
     // appending a NARROWER df after the evolution keeps the wide schema
     SnapshotTable.commitAppend(Seq((4L, "d")).toDF("id", "name"), t)
-    assert(SnapshotTable.schemaOf(t, 3).get.fieldNames.toSeq ===
+    assert(schemaOf(t, 3).get.fieldNames.toSeq ===
       Seq("id", "name", "ultimate_parent"))
     assert(SnapshotTable.read(spark, t).filter($"id" === 3L)
       .select("ultimate_parent").as[String].head() === "up3")
     // replace re-stamps exactly the incoming schema (column drop/rename path)
     SnapshotTable.commitReplace(Seq((9L, "z")).toDF("id", "label"), t)
-    assert(SnapshotTable.schemaOf(t, 4).get.fieldNames.toSeq === Seq("id", "label"))
+    assert(schemaOf(t, 4).get.fieldNames.toSeq === Seq("id", "label"))
     // and the pre-replace version still round-trips its own schema
     assert(SnapshotTable.readVersion(spark, t, 2).columns.toSeq ===
       Seq("id", "name", "ultimate_parent"))
@@ -400,84 +374,33 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       (9L, "z", "insert")))
   }
 
-  test("streaming commits compose with the change data feed: one CDF delta per micro-batch") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val t = tmpTable()
-    val ckpt = Files.createTempDirectory("graft_cdf_ckpt").toString
-    val mem = MemoryStream[Long]
-    val q = SnapshotTable.startStream(mem.toDF().withColumnRenamed("value", "x"),
-      t, ckpt, "cdf_stream")
-    try {
-      mem.addData(1L, 2L); q.processAllAvailable()
-      mem.addData(3L); q.processAllAvailable()
-      val Seq(v1, v2) = SnapshotTable.versions(t)
-      // each micro-batch is one snapshot; its CDF is exactly that batch's rows
-      val d = SnapshotTable.changes(spark, t, v1, v2).collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(d == Set((3L, "insert")))
-      // downstream incremental consumption: latest = previous + CDF inserts
-      val all = SnapshotTable.read(spark, t).collect().map(_.getLong(0)).toSet
-      val prev = SnapshotTable.readVersion(spark, t, v1).collect().map(_.getLong(0)).toSet
-      assert(all == prev ++ d.map(_._1))
-    } finally q.stop()
-  }
-
-  test("clustered compaction: range reads prune to ~selectivity; values survive; time travel intact") {
-    val t = tmpTable()
-    // random arrival order across 4 files: every file spans ~the full range
-    val rnd = new scala.util.Random(5)
-    val vals = rnd.shuffle((1 to 400).toList)
-    SnapshotTable.commitAppend(vals.toDF("x").repartition(4), t, zoneCol = Some("x"))
-    val before = SnapshotTable.rangeCandidates(t, 10.0, 20.0).size
-    assert(before == 4) // random layout: nothing prunes
-    val v = SnapshotTable.compactClustered(spark, t, "x", numFiles = 4)
-    val after = SnapshotTable.rangeCandidates(t, 10.0, 20.0)
-    assert(after.size == 1) // clustered: disjoint spans, one file matches
-    assert(SnapshotTable.readRange(spark, t, 10.0, 20.0)
-      .filter("x >= 10 and x <= 20").as[Int].collect().sorted
-      === (10 to 20).toArray)
-    assert(SnapshotTable.read(spark, t).as[Int].collect().sorted === (1 to 400).toArray)
-    // the pre-compaction version is still readable (compaction = replace)
-    assert(SnapshotTable.readVersion(spark, t, v - 1).as[Int].collect().sorted
-      === (1 to 400).toArray)
-  }
-
-  test("z-order compaction: box reads prune on BOTH dims; 1-D clustering only on its own") {
+  test("z-order compaction: zone stats prune on BOTH dims; rows survive") {
     val t = tmpTable()
     // 64×64 grid in random arrival order across 16 files
     val rnd = new scala.util.Random(7)
     val grid = rnd.shuffle(for (x <- 0 until 64; y <- 0 until 64) yield (x, y))
     SnapshotTable.commitAppend(grid.toDF("x", "y").repartition(16), t)
-    SnapshotTable.compactClustered(spark, t, "x", numFiles = 16)
-    val nFiles = SnapshotTable.rangeCandidates(t, Double.MinValue, Double.MaxValue).size
-    // x-clustered layout: a y-only box prunes NOTHING (every file spans all y)
-    assert(SnapshotTable.rangeCandidatesMulti(t,
-      Seq(("y", 0.0, 7.0))).size == nFiles)
-
     SnapshotTable.compactZOrder(spark, t, "x", "y", numFiles = 16)
-    val zFiles = SnapshotTable.rangeCandidatesMulti(t,
-      Seq(("x", -1e9, 1e9))).size
-    val xCand = SnapshotTable.rangeCandidatesMulti(t, Seq(("x", 0.0, 7.0)))
-    val yCand = SnapshotTable.rangeCandidatesMulti(t, Seq(("y", 0.0, 7.0)))
-    val boxCand = SnapshotTable.rangeCandidatesMulti(t,
-      Seq(("x", 0.0, 7.0), ("y", 0.0, 7.0)))
+    val zFiles = zoneCandidates(t).size
+    val xCand = zoneCandidates(t, ("x", 0.0, 7.0))
+    val yCand = zoneCandidates(t, ("y", 0.0, 7.0))
+    val boxCand = zoneCandidates(t, ("x", 0.0, 7.0), ("y", 0.0, 7.0))
     // z-order tiles the plane: BOTH single-dim ranges prune, the box most
     assert(xCand.size < zFiles && yCand.size < zFiles,
       s"x=${xCand.size} y=${yCand.size} of $zFiles")
     assert(boxCand.size <= math.min(xCand.size, yCand.size))
-    // the legacy single-column path still works (colA doubles as zonecol)
-    assert(SnapshotTable.rangeCandidates(t, 0.0, 7.0).size < zFiles)
-    // pruning is an overapproximation, never a filter: box read is exact
-    val got = SnapshotTable.readRangeMulti(spark, t,
-        Seq(("x", 0.0, 7.0), ("y", 0.0, 7.0)))
+    // pruning is an overapproximation: the kept files hold the whole box
+    val kept = SnapshotTable.read(spark, t)
+      .filter(org.apache.spark.sql.functions.substring_index(
+        org.apache.spark.sql.functions.input_file_name(), "/", -2).isin(boxCand: _*))
+      .filter($"x" <= 7 && $"y" <= 7)
       .as[(Int, Int)].collect().toSet
-    assert(got == (for (x <- 0 to 7; y <- 0 to 7) yield (x, y)).toSet)
-    // row-preserving: full content intact after both rewrites
+    assert(kept == (for (x <- 0 to 7; y <- 0 to 7) yield (x, y)).toSet)
+    // row-preserving: full content intact after the rewrite
     assert(SnapshotTable.read(spark, t).as[(Int, Int)].collect().toSet == grid.toSet)
   }
 
-  test("hilbert compaction: box reads prune on both dims; no wider than z-order overall") {
+  test("hilbert compaction: zone stats prune on both dims; no wider than z-order overall") {
     val t = tmpTable(); val t2 = tmpTable()
     val rnd = new scala.util.Random(7)
     val grid = rnd.shuffle(for (x <- 0 until 64; y <- 0 until 64) yield (x, y))
@@ -485,9 +408,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     SnapshotTable.commitAppend(grid.toDF("x", "y").repartition(16), t2)
     SnapshotTable.compactHilbert(spark, t, "x", "y", numFiles = 16)
     SnapshotTable.compactZOrder(spark, t2, "x", "y", numFiles = 16)
-    val all = SnapshotTable.rangeCandidatesMulti(t, Seq(("x", -1e9, 1e9))).size
-    val xCand = SnapshotTable.rangeCandidatesMulti(t, Seq(("x", 0.0, 7.0)))
-    val yCand = SnapshotTable.rangeCandidatesMulti(t, Seq(("y", 0.0, 7.0)))
+    val all = zoneCandidates(t).size
+    val xCand = zoneCandidates(t, ("x", 0.0, 7.0))
+    val yCand = zoneCandidates(t, ("y", 0.0, 7.0))
     assert(xCand.size < all && yCand.size < all,
       s"hilbert layout must prune both dims: x=${xCand.size} y=${yCand.size} of $all")
     // aggregate pruning across a grid of 8x8 boxes: the adjacency property
@@ -495,15 +418,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     // or trade, so the assertion is on the SUM — the file-skipping bill)
     def bill(dir: String): Int =
       (for (bx <- 0 until 8; by <- 0 until 8) yield
-        SnapshotTable.rangeCandidatesMulti(dir,
-          Seq(("x", bx * 8.0, bx * 8.0 + 7.0), ("y", by * 8.0, by * 8.0 + 7.0))).size).sum
+        zoneCandidates(dir,
+          ("x", bx * 8.0, bx * 8.0 + 7.0), ("y", by * 8.0, by * 8.0 + 7.0)).size).sum
     assert(bill(t) <= bill(t2),
       "hilbert total box-read candidates should not exceed z-order's")
-    // box read is exact; full content survives the rewrite
-    val got = SnapshotTable.readRangeMulti(spark, t,
-        Seq(("x", 0.0, 7.0), ("y", 0.0, 7.0)))
-      .as[(Int, Int)].collect().toSet
-    assert(got == (for (x <- 0 to 7; y <- 0 to 7) yield (x, y)).toSet)
     assert(SnapshotTable.read(spark, t).as[(Int, Int)].collect().toSet == grid.toSet)
   }
 
@@ -570,144 +488,26 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     assert(SnapshotTable.resetConsumer(t, "never_existed") == 0)
   }
 
-  test("CDC replication: pollChanges + applyChanges keep a replica identical through append/upsert/replace") {
-    val src = tmpTable(); val dst = tmpTable()
-    def sync(): Unit =
-      SnapshotTable.pollChanges(spark, src, "replica").foreach { b =>
-        SnapshotTable.applyChanges(spark, dst, b.df, Seq("k"))
-        assert(b.ack())
-      }
-    def rowsOf(t: String): Set[(Long, String)] =
-      SnapshotTable.read(spark, t).collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    SnapshotTable.commitAppend(Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), src)
-    sync() // bootstrap: full snapshot lands as inserts
-    assert(rowsOf(dst) == rowsOf(src))
-    SnapshotTable.commitAppend(Seq((3L, "c")).toDF("k", "v").coalesce(1), src)
-    SnapshotTable.upsert(spark, src, Seq((2L, "B2"), (4L, "d")).toDF("k", "v"), Seq("k"))
-    sync() // one composed window: insert + update across two commits
-    assert(rowsOf(dst) == rowsOf(src))
-    assert(rowsOf(dst) == Set((1L, "a"), (2L, "B2"), (3L, "c"), (4L, "d")))
-    // replace shrinks the source; deletes propagate as key drops
-    SnapshotTable.commitReplace(Seq((2L, "B2"), (9L, "z")).toDF("k", "v").coalesce(1), src)
-    sync()
-    assert(rowsOf(dst) == rowsOf(src))
-    assert(rowsOf(dst) == Set((2L, "B2"), (9L, "z")))
-    // caught up: nothing to poll, replica untouched
-    assert(SnapshotTable.pollChanges(spark, src, "replica").isEmpty)
-  }
-
-  test("SCD2 from CDC: every polled source version reconstructs exactly; one open row per live key") {
-    val src = tmpTable(); val hist = tmpTable()
-    val polled = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def sync(): Unit =
-      SnapshotTable.pollChanges(spark, src, "scd2").foreach { b =>
-        SnapshotTable.scd2Apply(spark, hist, b.df, Seq("k"), b.toVersion)
-        polled += b.toVersion
-        assert(b.ack())
-      }
-    def rowsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
-      df.select("k", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    SnapshotTable.commitAppend(Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), src)
-    sync() // bootstrap
-    SnapshotTable.upsert(spark, src, Seq((2L, "B2"), (3L, "c")).toDF("k", "v"), Seq("k"))
-    sync() // update + insert
-    SnapshotTable.deleteWhere(spark, src,
-      org.apache.spark.sql.functions.col("k") === 1L)
-    SnapshotTable.commitAppend(Seq((4L, "d")).toDF("k", "v").coalesce(1), src)
-    sync() // composed window: delete + insert across two commits
-    // the SCD2 contract: each polled boundary reconstructs the source
-    for (v <- polled)
-      assert(rowsOf(SnapshotTable.scd2AsOf(spark, hist, v)) ==
-        rowsOf(SnapshotTable.readVersion(spark, src, v)), s"asOf v$v diverged")
-    // exactly one open row per live key; closed intervals are well-formed
-    val h = SnapshotTable.read(spark, hist).collect()
-    val open = h.filter(_.getAs[Long]("valid_to") == -1L)
-    assert(open.map(_.getAs[Long]("k")).sorted.toSeq == Seq(2L, 3L, 4L))
-    assert(h.filter(_.getAs[Long]("valid_to") != -1L)
-      .forall(r => r.getAs[Long]("valid_to") > r.getAs[Long]("valid_from")))
-    // the full change story of key 2: one closed row (old value) + one open
-    val k2 = h.filter(_.getAs[Long]("k") == 2L)
-      .map(r => (r.getAs[String]("v"), r.getAs[Long]("valid_to") == -1L)).toSet
-    assert(k2 == Set(("b", false), ("B2", true)))
-  }
-
-  test("SCD2 redelivery: re-applying an already-applied batch is a no-op") {
-    val src = tmpTable(); val hist = tmpTable()
-    SnapshotTable.commitAppend(Seq((1L, "a")).toDF("k", "v").coalesce(1), src)
-    val b1 = SnapshotTable.pollChanges(spark, src, "c1").get
-    assert(SnapshotTable.scd2Apply(spark, hist, b1.df, Seq("k"), b1.toVersion).isDefined)
-    // crash-before-ack: the SAME batch is redelivered (never acked)
-    val redelivered = SnapshotTable.pollChanges(spark, src, "c1").get
-    assert(redelivered.toVersion == b1.toVersion)
-    assert(SnapshotTable.scd2Apply(
-      spark, hist, redelivered.df, Seq("k"), redelivered.toVersion).isEmpty,
-      "an already-applied source version must no-op, never double-write")
-    val h = SnapshotTable.read(spark, hist).collect()
-    assert(h.length == 1 && h.head.getAs[Long]("valid_to") == -1L)
-    assert(redelivered.ack())
-    // also for a later close-only window: delete then redeliver its batch
-    SnapshotTable.deleteWhere(spark, src,
-      org.apache.spark.sql.functions.col("k") === 1L)
-    val b2 = SnapshotTable.pollChanges(spark, src, "c1").get
-    assert(SnapshotTable.scd2Apply(spark, hist, b2.df, Seq("k"), b2.toVersion).isDefined)
-    assert(SnapshotTable.scd2Apply(spark, hist, b2.df, Seq("k"), b2.toVersion).isEmpty)
-    val h2 = SnapshotTable.read(spark, hist).collect()
-    assert(h2.length == 1 && h2.head.getAs[Long]("valid_to") == b2.toVersion)
-  }
-
-  private def histRows(hist: String): Set[(Long, String, Long, Long)] =
-    SnapshotTable.read(spark, hist).collect()
-      .map(r => (r.getAs[Long]("k"), r.getAs[String]("v"),
-        r.getAs[Long]("valid_from"), r.getAs[Long]("valid_to"))).toSet
-
-  test("drainChanges: crash-before-ack redelivery and restart apply each window once") {
-    val src = tmpTable(); val hist = tmpTable()
-    SnapshotTable.commitAppend(Seq((1L, "a")).toDF("k", "v").coalesce(1), src)
-    // crash simulation: apply the window but die before ack
-    val b = SnapshotTable.pollChanges(spark, src, "c").get
-    SnapshotTable.scd2Apply(spark, hist, b.df, Seq("k"), b.toVersion)
-    // the restarted consumer loop redelivers the same window; scd2's
-    // version marker absorbs it and the drain acks past it
-    assert(SnapshotTable.drainChanges(spark, src, "c") { w =>
-      SnapshotTable.scd2Apply(spark, hist, w.df, Seq("k"), w.toVersion); ()
-    } == 1)
-    assert(histRows(hist) == Set((1L, "a", 1L, -1L)), "no double-applied history rows")
-    // offsets live in the table, so a caught-up consumer drains zero
-    // windows after a restart — nothing replays
-    assert(SnapshotTable.drainChanges(spark, src, "c") { _ => fail("must not redeliver") } == 0)
-    // and one more commit drains exactly one window after the "restart"
-    SnapshotTable.upsert(spark, src, Seq((1L, "A2")).toDF("k", "v"), Seq("k"))
-    assert(SnapshotTable.drainChanges(spark, src, "c") { w =>
-      SnapshotTable.scd2Apply(spark, hist, w.df, Seq("k"), w.toVersion); ()
-    } == 1)
-    assert(histRows(hist) == Set((1L, "a", 1L, 2L), (1L, "A2", 2L, -1L)))
-  }
-
-  test("drainChanges: a vacuumed offset fails loudly; autoResync re-bootstraps") {
-    val src = tmpTable(); val hist = tmpTable()
-    SnapshotTable.commitAppend(Seq((1L, "a")).toDF("k", "v").coalesce(1), src)
-    assert(SnapshotTable.drainChanges(spark, src, "c") { w =>
-      SnapshotTable.scd2Apply(spark, hist, w.df, Seq("k"), w.toVersion); ()
-    } == 1)
-    // the consumer lags while the table moves on and retention drops v1
-    SnapshotTable.upsert(spark, src, Seq((1L, "A2"), (2L, "b")).toDF("k", "v"), Seq("k"))
-    SnapshotTable.commitReplace(Seq((1L, "A3"), (2L, "b")).toDF("k", "v").coalesce(1), src)
-    SnapshotTable.vacuum(src, keepVersions = 2)
-    val e = intercept[IllegalStateException] {
-      SnapshotTable.drainChanges(spark, src, "c") { _ => () }
-    }
-    assert(e.getMessage.contains("vacuumed"), e.getMessage)
-    // explicit opt-in: reset + bootstrap redelivery; scd2 re-boundaries
-    // at the resync version and the history still reconstructs the head
-    assert(SnapshotTable.drainChanges(spark, src, "c", autoResync = true) { w =>
-      SnapshotTable.scd2Apply(spark, hist, w.df, Seq("k"), w.toVersion); ()
-    } == 1)
-    val head = SnapshotTable.latestVersion(src).get
-    assert(
-      SnapshotTable.scd2AsOf(spark, hist, head).select("k", "v").collect().map(r =>
-        (r.getLong(0), r.getString(1))).toSet == Set((1L, "A3"), (2L, "b")))
-    // caught up after resync
-    assert(SnapshotTable.pollChanges(spark, src, "c").isEmpty)
+  test("restoreVersion: zero-copy rollback, history intact") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend(Seq((1L, 10L)).toDF("k", "v").coalesce(1), t) // v1
+    SnapshotTable.commitAppend(Seq((2L, 20L)).toDF("k", "v").coalesce(1), t) // v2
+    SnapshotTable.commitReplace(Seq((9L, -9L)).toDF("k", "v").coalesce(1), t) // v3 bad
+    val v4 = SnapshotTable.restoreVersion(t, 2L)
+    assert(v4 == 4L)
+    assert(SnapshotTable.read(spark, t).select("k").as[Long].collect().sorted
+      === Array(1L, 2L), "restored contents")
+    assert(SnapshotTable.snapshot(t, 4L).op == "restore")
+    assert(SnapshotTable.snapshot(t, 4L).files == SnapshotTable.snapshot(t, 2L).files,
+      "zero copy: the restore references v2's files")
+    // history intact: the bad v3 still time-travels
+    assert(SnapshotTable.readVersion(spark, t, 3L).select("v").as[Long]
+      .collect().toSeq == Seq(-9L))
+    // idempotent shortcut
+    assert(SnapshotTable.restoreVersion(t, 4L) == 4L)
+    // restoring further back is one more new version
+    assert(SnapshotTable.restoreVersion(t, 1L) == 5L)
+    assert(SnapshotTable.read(spark, t).count() == 1)
   }
 
   test("empty-table read fails loudly; empty-df commit is a valid snapshot") {

@@ -173,7 +173,7 @@ class SnapshotTxnSpec extends AnyFunSuite {
     }
   }
 
-  test("restore and merge number past abort tombstones; restore refuses under a lock") {
+  test("restore numbers past abort tombstones; restore refuses under a lock") {
     val a = tmp(); val txd = tmp()
     SnapshotTable.commitAppend(Seq(1).toDF("x"), a)   // v1
     SnapshotTable.commitAppend(Seq(2).toDF("x"), a)   // v2
@@ -181,25 +181,13 @@ class SnapshotTxnSpec extends AnyFunSuite {
     SnapshotTxn.stageAppend(h, Seq(9).toDF("x"), a)   // pending v3
     // a restore while the txn lock is held refuses loudly
     intercept[SnapshotTable.ConcurrentCommitException] {
-      SnapshotTable.restoreVersion(spark, a, 1L)
+      SnapshotTable.restoreVersion(a, 1L)
     }
     SnapshotTxn.abort(h)                              // v3 tombstoned
     // restore must claim v4, not collide with the dead v3 forever
-    val rv = SnapshotTable.restoreVersion(spark, a, 1L)
+    val rv = SnapshotTable.restoreVersion(a, 1L)
     assert(rv == 4L, s"restore must number past the tombstone, got $rv")
     assert(ints(a) == Seq(1))
-
-    // branch merge over a tombstoned main tip: same numbering rule
-    val main = tmp(); val br = tmp() + "/b"; val txd2 = tmp()
-    SnapshotTable.commitAppend(Seq(1).toDF("x"), main) // v1
-    SnapshotTable.cloneAt(main, 1L, br)
-    SnapshotTable.commitAppend(Seq(7).toDF("x"), br)
-    val h2 = SnapshotTxn.begin(txd2, Seq(main))
-    SnapshotTxn.stageAppend(h2, Seq(9).toDF("x"), main) // pending v2
-    SnapshotTxn.abort(h2)                               // v2 tombstoned
-    val mv = SnapshotTable.mergeBranch(main, br)
-    assert(mv == 3L, s"merge must number past the tombstone, got $mv")
-    assert(ints(main) == Seq(1, 7))
   }
 
   test("vacuum sweeps .txnok sidecars with their dropped versions") {
