@@ -364,7 +364,8 @@ object SnapshotTable {
     * Delta RESTORE semantics): history stays intact, the bad commits
     * remain time-travelable until vacuum, and readers pinned to them are
     * unaffected. Carried from the RESTORED version: schema, zone stats
-    * and deletion vector — its whole physical truth. Single-shot
+    * and deletion vector — its whole physical truth; the `ts` stamp is the
+    * restore's own. Single-shot
     * CAS: a concurrent commit aborts the restore (the caller re-reads and
     * decides — blind retry could roll back someone else's write). */
   def restoreVersion(tableDir: String, version: Long): Long = {
@@ -372,10 +373,14 @@ object SnapshotTable {
       throw new IllegalArgumentException(s"restore on empty table $tableDir"))
     if (version == cur) return cur
     val snap = snapshot(tableDir, version) // throws if vacuumed
+    // the restore's own commit time, never the restored version's: a
+    // carried stamp would let TIMESTAMP AS OF an instant before the restore
+    // resolve to it
     val carried = snap.meta.view.filterKeys(k =>
-      !(k == "version" || k == "op" || k == "restored_from")).toMap
+      !(k == "version" || k == "op" || k == "restored_from" || k == "ts")).toMap
     val v = nextSlotGuarded(tableDir, cur)
-    val body = (Seq(s"version=$v", "op=restore", s"restored_from=$version")
+    val body = (Seq(s"version=$v", "op=restore", s"restored_from=$version",
+        s"ts=${System.currentTimeMillis()}")
       ++ carried.toSeq.sortBy(_._1).map { case (k, value) => s"$k=$value" }
       ++ snap.files).mkString("", "\n", "\n")
     val tmp = Files.createTempFile(snapDir(tableDir), s".v$v-", ".tmp")
@@ -964,7 +969,8 @@ object SnapshotTable {
     *
     * Carried into the clone's v1 manifest: schema, zone columns and
     * per-file zone stats, and the deletion vector (all are properties of
-    * the FILE SET, which clone preserves byte-for-byte). */
+    * the FILE SET, which clone preserves byte-for-byte). The `ts` stamp is
+    * the clone's own. */
   def cloneAt(srcDir: String, version: Long, destDir: String): Long = {
     // same visibility guard as readVersion: cloning a pending transaction
     // version would permanently publish uncommitted rows (the clone's
@@ -998,8 +1004,9 @@ object SnapshotTable {
         k.startsWith("zone:"))
       .toMap + ("cloned_from" ->
         s"${Paths.get(srcDir).toAbsolutePath}@v$version")
+    // the clone's own commit time: TIMESTAMP AS OF resolves on it
     val body =
-      (Seq("version=1", "op=clone")
+      (Seq("version=1", "op=clone", s"ts=${System.currentTimeMillis()}")
         ++ carried.toSeq.sortBy(_._1).map { case (k, value) => s"$k=$value" }
         ++ snap.files)
         .mkString("", "\n", "\n")

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -204,5 +206,42 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(got.toSeq == Seq(5L, 15L), "a pruned scan must still honor the vector")
     assert(GraftSnapshotScan.filesPrunedRuntime.get() - before >= 3,
       "m in {50, 100, 150} lives in one of four m-clustered files")
+  }
+
+  test("a MOR delete that loses the race commits nothing and leaves no vector dir") {
+    val t = tmpTable(); seed(t)
+    SnapshotTable.commitAppend(Seq((99L, "racer")).toDF("k", "v").coalesce(1), t) // v2
+    def dvDirs(): Int = {
+      val s = Files.list(Paths.get(t))
+      try s.iterator().asScala.count(_.getFileName.toString.startsWith("dv-"))
+      finally s.close()
+    }
+    intercept[SnapshotTable.ConcurrentCommitException](
+      SnapshotTable.deleteWhereMor(spark, t, col("k") === 1L, asOfVersion = Some(1L)))
+    assert(SnapshotTable.latestVersion(t).contains(2L))
+    assert(dvDirs() == 0, "the losing writer's staged vector is deleted")
+    assert(rows(t).map(_._1) == (1L to 12L).toSet + 99L)
+  }
+
+  test("MOR deletes compose with ADD COLUMNS: the vector applies under the evolved schema") {
+    val t = tmpTable(); seed(t, n = 6, parts = 2)
+    SnapshotTable.addColumns(spark, t,
+      Seq(org.apache.spark.sql.types.StructField("w", org.apache.spark.sql.types.LongType)))
+    SnapshotTable.commitAppend(Seq((7L, "v7", 70L)).toDF("k", "v", "w").coalesce(1), t)
+    SnapshotTable.deleteWhereMor(spark, t, col("k") === 2L || col("w") === 70L)
+    val got = SnapshotTable.read(spark, t).collect()
+      .map(r => (r.getAs[Long]("k"), Option(r.getAs[Any]("w")))).toSet
+    assert(got == Set(1L, 3L, 4L, 5L, 6L).map(k => (k, None)))
+    // the pre-delete version still shows both rows, new column and all
+    assert(SnapshotTable.readVersion(spark, t, 3L).count() == 7L)
+  }
+
+  test("a change window spanning a MOR delete and its materialization shows each deleted row once") {
+    val t = tmpTable(); seed(t)
+    SnapshotTable.deleteWhereMor(spark, t, col("k") === 4L || col("k") === 8L) // v2
+    SnapshotTable.materializeDeletes(spark, t)                                 // v3
+    val c = SnapshotTable.changes(spark, t, 1L, 3L).collect()
+      .map(r => (r.getAs[Long]("k"), r.getAs[String]("_change"))).toSeq.sorted
+    assert(c == Seq((4L, "delete"), (8L, "delete")))
   }
 }

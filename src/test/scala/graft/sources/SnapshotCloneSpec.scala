@@ -72,4 +72,51 @@ class SnapshotCloneSpec extends AnyFunSuite {
       SnapshotTable.cloneAt(src, 1L, dst) // dst already a table
     }
   }
+
+  test("cloning a vacuumed version fails before the target becomes a table") {
+    val src = tmpTable(); val dst = tmpTable() + "/t"
+    SnapshotTable.commitAppend(Seq(1).toDF("x"), src)
+    SnapshotTable.commitReplace(Seq(2).toDF("x"), src)
+    SnapshotTable.vacuum(src, keepVersions = 1)
+    intercept[java.nio.file.NoSuchFileException](SnapshotTable.cloneAt(src, 1L, dst))
+    assert(!Files.exists(java.nio.file.Paths.get(dst)))
+    // the retained version still clones into the same target
+    assert(SnapshotTable.cloneAt(src, 2L, dst) == 1L)
+    assert(SnapshotTable.read(spark, dst).as[Int].collect().toSeq == Seq(2))
+  }
+
+  test("a clone starts its own history at v1 and names its source") {
+    val src = tmpTable(); val dst = tmpTable() + "/t"
+    (1 to 3).foreach(i => SnapshotTable.commitAppend(Seq(i).toDF("x"), src))
+    SnapshotTable.cloneAt(src, 2L, dst)
+    assert(SnapshotTable.versions(dst) == Seq(1L))
+    val meta = SnapshotTable.snapshot(dst, 1L).meta
+    assert(meta.get("cloned_from").contains(
+      s"${java.nio.file.Paths.get(src).toAbsolutePath}@v2"))
+    assert(SnapshotTable.snapshot(dst, 1L).files == SnapshotTable.snapshot(src, 2L).files,
+      "same relative file names, now linked under the clone")
+    // the source's later history is not the clone's
+    assert(SnapshotTable.commitAppend(Seq(9).toDF("x"), dst) == 2L)
+    assert(SnapshotTable.read(spark, dst).as[Int].collect().sorted.toSeq == Seq(1, 2, 9))
+  }
+
+  test("a clone of a schema-evolved version null-fills its older files") {
+    val src = tmpTable(); val dst = tmpTable() + "/t"
+    SnapshotTable.commitAppend(Seq(1L).toDF("k"), src)
+    SnapshotTable.commitAppend(Seq((2L, "b")).toDF("k", "v"), src)
+    SnapshotTable.cloneAt(src, 2L, dst)
+    val got = SnapshotTable.read(spark, dst).collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)))).toSet
+    assert(got == Set((1L, None), (2L, Some("b"))))
+  }
+
+  test("a clone stamps its own commit time, so TIMESTAMP AS OF resolves on it") {
+    val src = tmpTable(); val dst = tmpTable() + "/t"
+    SnapshotTable.commitAppend(Seq(1).toDF("x"), src)
+    val srcTs = SnapshotTable.commitTsOf(src, 1L).get
+    Thread.sleep(20)
+    val before = System.currentTimeMillis()
+    SnapshotTable.cloneAt(src, 1L, dst)
+    assert(SnapshotTable.commitTsOf(dst, 1L).exists(ts => ts >= before && ts > srcTs))
+  }
 }

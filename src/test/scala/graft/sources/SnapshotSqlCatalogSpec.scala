@@ -384,6 +384,28 @@ class SnapshotSqlCatalogSpec extends AnyFunSuite {
     assert(e.getMessage.toLowerCase.contains("syntax") ||
       e.getMessage.contains("read-only"), e.getMessage)
   }
+
+  test("TIMESTAMP AS OF before a restore serves the state the restore undid") {
+    val t = s"$warehouse/tsr"
+    SnapshotTable.commitAppend(Seq((1L, "a")).toDF("k", "v").coalesce(1), t)   // v1
+    Thread.sleep(60)
+    SnapshotTable.commitReplace(Seq((9L, "bad")).toDF("k", "v").coalesce(1), t) // v2
+    Thread.sleep(60)
+    val beforeRestore = System.currentTimeMillis()
+    Thread.sleep(60)
+    SnapshotTable.restoreVersion(t, 1L)                                         // v3
+    def at(ms: Long): Seq[Long] = {
+      val s = java.time.format.DateTimeFormatter
+        .ofPattern("yyyy-MM-dd HH:mm:ss.SSS")
+        .withZone(java.time.ZoneOffset.UTC)
+        .format(java.time.Instant.ofEpochMilli(ms))
+      spark.sql(s"SELECT k FROM graft_snap.tsr TIMESTAMP AS OF '$s'")
+        .as[Long].collect().sorted.toSeq
+    }
+    assert(at(beforeRestore) == Seq(9L), "the restore had not happened yet => v2")
+    assert(at(System.currentTimeMillis()) == Seq(1L), "now => the restored state")
+  }
+
   test("atomic CTAS: the table appears only on success, with full snapshot semantics") {
     SnapshotTable.commitAppend(
       Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "a", 30L)).toDF("k", "grp", "v")

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -515,5 +517,296 @@ class SnapshotTableSpec extends AnyFunSuite {
     intercept[IllegalStateException](SnapshotTable.read(spark, t))
     SnapshotTable.commitAppend(Seq.empty[Int].toDF("x"), t)
     assert(SnapshotTable.read(spark, t).count() === 0L)
+  }
+
+  test("a directory that is not a table has no versions; init makes an empty table") {
+    val t = tmpTable() + "/t"
+    assert(SnapshotTable.versions(t).isEmpty && SnapshotTable.latestVersion(t).isEmpty)
+    SnapshotTable.init(t)
+    assert(Files.isDirectory(Paths.get(t, "_snapshots")))
+    assert(SnapshotTable.versions(t).isEmpty)
+    SnapshotTable.init(t) // idempotent
+    assert(SnapshotTable.commitAppend(Seq(1).toDF("x"), t) == 1L)
+  }
+
+  test("each writer names its manifest op: append, replace, merge, add-columns, delete-mor, restore") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend(Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), t)
+    SnapshotTable.commitReplace(Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), t)
+    SnapshotTable.upsert(spark, t, Seq((2L, "B")).toDF("k", "v"), Seq("k"))
+    SnapshotTable.addColumns(spark, t,
+      Seq(org.apache.spark.sql.types.StructField("w", org.apache.spark.sql.types.LongType)))
+    SnapshotTable.deleteWhereMor(spark, t, org.apache.spark.sql.functions.col("k") === 1L)
+    SnapshotTable.restoreVersion(t, 2L)
+    assert(SnapshotTable.versions(t).map(SnapshotTable.snapshot(t, _).op) ==
+      Seq("append", "replace", "merge", "add-columns", "delete-mor", "restore"))
+    assert(SnapshotTable.versions(t).forall(v =>
+      SnapshotTable.snapshot(t, v).meta.get("version").contains(v.toString)))
+    assert(SnapshotTable.snapshot(t, 6L).meta.get("restored_from").contains("2"))
+  }
+
+  test("commitTsOf reads the manifest's ts stamp; one writer's stamps follow commit order") {
+    val t = tmpTable()
+    (1 to 3).foreach(i => SnapshotTable.commitAppend(Seq(i).toDF("x"), t))
+    val ts = SnapshotTable.versions(t).map(v => SnapshotTable.commitTsOf(t, v).get)
+    assert(ts == SnapshotTable.versions(t).map(v =>
+      SnapshotTable.snapshot(t, v).meta("ts").toLong))
+    assert(ts == ts.sorted)
+    // a restore is a new commit with its own stamp, not the restored
+    // version's: TIMESTAMP AS OF an instant before it must not resolve to it
+    Thread.sleep(20)
+    val r = SnapshotTable.restoreVersion(t, 1L)
+    assert(SnapshotTable.commitTsOf(t, r).exists(_ > ts.last))
+  }
+
+  test("changes requires fromVersion < toVersion") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend(Seq(1).toDF("x"), t)
+    SnapshotTable.commitAppend(Seq(2).toDF("x"), t)
+    intercept[IllegalArgumentException](SnapshotTable.changes(spark, t, 2L, 2L))
+    intercept[IllegalArgumentException](SnapshotTable.changes(spark, t, 2L, 1L))
+  }
+
+  test("changes across a metadata-only commit are empty but carry the new schema") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend(Seq((1L, "a")).toDF("k", "v"), t)
+    SnapshotTable.addColumns(spark, t,
+      Seq(org.apache.spark.sql.types.StructField("w", org.apache.spark.sql.types.LongType)))
+    val c = SnapshotTable.changes(spark, t, 1L, 2L)
+    assert(c.columns.toSeq == Seq("k", "v", "w", "_change"))
+    assert(c.count() == 0L)
+  }
+
+  test("changes resolve schema evolution by name: a new column null-fills on old files") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend(Seq((1L, "a")).toDF("k", "v").coalesce(1), t)
+    SnapshotTable.commitAppend(Seq((2L, "b", 7L)).toDF("k", "v", "w").coalesce(1), t)
+    SnapshotTable.commitReplace(Seq((2L, "b", 7L)).toDF("k", "v", "w").coalesce(1), t)
+    val c = SnapshotTable.changes(spark, t, 1L, 3L)
+    assert(c.columns.toSeq == Seq("k", "v", "w", "_change"))
+    assert(c.collect().map(r => (r.getLong(0), r.getString(1),
+      Option(r.get(2)).map(_.asInstanceOf[Long]), r.getString(3))).toSet ==
+      Set((2L, "b", Some(7L), "insert"), (1L, "a", None, "delete")))
+  }
+
+  test("change feed of a copy-on-write delete: rows that shared the rewritten file cancel out") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend(
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").coalesce(1), t)
+    SnapshotTable.deleteWhere(spark, t, org.apache.spark.sql.functions.col("k") === 2L)
+    assert(SnapshotTable.snapshot(t, 2L).files.toSet
+      .intersect(SnapshotTable.snapshot(t, 1L).files.toSet).isEmpty,
+      "the one data file was rewritten")
+    assert(SnapshotTable.changes(spark, t, 1L, 2L).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet ==
+      Set((2L, "b", "delete")))
+  }
+
+  test("pollChanges on a table with no snapshots returns nothing") {
+    val t = tmpTable()
+    assert(SnapshotTable.pollChanges(spark, t, "etl").isEmpty)
+    SnapshotTable.init(t)
+    assert(SnapshotTable.pollChanges(spark, t, "etl").isEmpty)
+  }
+
+  test("CDC replica: folding pollChanges windows through upsert and deleteWhere keeps a replica identical") {
+    import org.apache.spark.sql.functions.col
+    val src = tmpTable(); val dst = tmpTable()
+    def rowsOf(t: String): Set[(Long, String)] =
+      SnapshotTable.read(spark, t).collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    // a keyed window: the key's insert row (if any) is its new value; a key
+    // with only delete rows left the table
+    def sync(): Unit =
+      SnapshotTable.pollChanges(spark, src, "replica").foreach { b =>
+        val w = b.df.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+        val ins = w.filter(_._3 == "insert").map(r => (r._1, r._2)).toSeq
+        val gone = w.filter(_._3 == "delete").map(_._1).toSet -- ins.map(_._1)
+        if (ins.nonEmpty) SnapshotTable.upsert(spark, dst, ins.toDF("k", "v"), Seq("k"))
+        if (gone.nonEmpty) SnapshotTable.deleteWhere(spark, dst, col("k").isin(gone.toSeq: _*))
+        assert(b.ack())
+      }
+    SnapshotTable.commitAppend(Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), src)
+    sync() // bootstrap: the full snapshot lands as inserts
+    assert(rowsOf(dst) == rowsOf(src))
+    SnapshotTable.commitAppend(Seq((3L, "c")).toDF("k", "v").coalesce(1), src)
+    SnapshotTable.upsert(spark, src, Seq((2L, "B2"), (4L, "d")).toDF("k", "v"), Seq("k"))
+    sync() // one window composes an insert and an update across two commits
+    assert(rowsOf(dst) == Set((1L, "a"), (2L, "B2"), (3L, "c"), (4L, "d")))
+    SnapshotTable.deleteWhere(spark, src, col("k") === 3L)
+    SnapshotTable.commitReplace(Seq((2L, "B2"), (9L, "z")).toDF("k", "v").coalesce(1), src)
+    sync() // deletes and a shrinking replace propagate as key drops
+    assert(rowsOf(dst) == rowsOf(src))
+    assert(rowsOf(dst) == Set((2L, "B2"), (9L, "z")))
+    assert(SnapshotTable.pollChanges(spark, src, "replica").isEmpty)
+  }
+
+  test("ack refuses a consumer id that is not a path-safe token") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend(Seq((1L, "a")).toDF("k", "v"), t)
+    val b = SnapshotTable.pollChanges(spark, t, "team/etl").get
+    intercept[IllegalArgumentException](b.ack())
+    assert(!Files.exists(Paths.get(t, "_consumers")), "a refused ack writes nothing")
+  }
+
+  test("consumer ids may contain '-': offsets of 'etl' and 'etl-2' never mix") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend(Seq((1L, "a")).toDF("k", "v"), t)
+    assert(SnapshotTable.pollChanges(spark, t, "etl-2").get.ack())
+    assert(SnapshotTable.consumerOffset(t, "etl").isEmpty)
+    assert(SnapshotTable.consumerOffset(t, "etl-2").contains((0L, 1L)))
+    assert(SnapshotTable.pollChanges(spark, t, "etl").get.fromVersion.isEmpty,
+      "'etl' still bootstraps")
+    assert(SnapshotTable.pollChanges(spark, t, "etl-2").isEmpty)
+  }
+
+  test("each ack sweeps its consumer's older offsets, keeping the previous one") {
+    val t = tmpTable()
+    for (i <- 1 to 4) {
+      SnapshotTable.commitAppend(Seq((i.toLong, "x")).toDF("k", "v"), t)
+      assert(SnapshotTable.pollChanges(spark, t, "c").get.ack())
+    }
+    SnapshotTable.commitAppend(Seq((9L, "x")).toDF("k", "v"), t)
+    assert(SnapshotTable.pollChanges(spark, t, "other").get.ack())
+    def offsetFiles(id: String): Seq[String] = {
+      val s = Files.list(Paths.get(t, "_consumers"))
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith(id + "-") && n.endsWith(".offset")).toSeq.sorted
+      finally s.close()
+    }
+    assert(offsetFiles("c") == Seq("c-00000002.offset", "c-00000003.offset"))
+    assert(offsetFiles("other") == Seq("other-00000000.offset"))
+    assert(SnapshotTable.consumerOffset(t, "c").contains((3L, 4L)))
+  }
+
+  test("resetConsumer forgets only the named consumer") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend(Seq((1L, "a")).toDF("k", "v"), t)
+    assert(SnapshotTable.pollChanges(spark, t, "a").get.ack())
+    assert(SnapshotTable.pollChanges(spark, t, "b").get.ack())
+    assert(SnapshotTable.resetConsumer(t, "a") == 1)
+    assert(SnapshotTable.pollChanges(spark, t, "a").get.fromVersion.isEmpty, "a re-bootstraps")
+    assert(SnapshotTable.pollChanges(spark, t, "b").isEmpty, "b stays caught up")
+  }
+
+  test("upsert matches on every key column of a composite key") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend(
+      Seq((1L, "x", 10L), (1L, "y", 11L), (2L, "x", 20L)).toDF("a", "b", "v").coalesce(1), t)
+    SnapshotTable.upsert(spark, t,
+      Seq((1L, "y", 99L), (2L, "y", 21L)).toDF("a", "b", "v"), Seq("a", "b"))
+    assert(SnapshotTable.read(spark, t).as[(Long, String, Long)].collect().toSet ==
+      Set((1L, "x", 10L), (1L, "y", 99L), (2L, "x", 20L), (2L, "y", 21L)))
+  }
+
+  test("upsert refuses an empty key list") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend(Seq((1L, "a")).toDF("k", "v"), t)
+    intercept[IllegalArgumentException](
+      SnapshotTable.upsert(spark, t, Seq((1L, "b")).toDF("k", "v"), Seq.empty))
+    assert(SnapshotTable.latestVersion(t).contains(1L))
+  }
+
+  test("upsert resolves update columns by name; a column the update lacks null-fills") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend(Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "v", "w").coalesce(1), t)
+    SnapshotTable.upsert(spark, t, Seq(("B", 2L)).toDF("v", "k"), Seq("k"))
+    val got = SnapshotTable.read(spark, t).collect()
+      .map(r => (r.getAs[Long]("k"), r.getAs[String]("v"), Option(r.getAs[Any]("w")))).toSet
+    assert(got == Set((1L, "a", Some(10L)), (2L, "B", None)))
+    assert(schemaOf(t, 2L).map(_.fieldNames.toSeq).contains(Seq("k", "v", "w")),
+      "the table schema keeps the column the update lacked")
+  }
+
+  test("deleteWhere, deleteWhereMor, materializeDeletes, restoreVersion and addColumns refuse an empty table") {
+    val t = tmpTable()
+    val p = org.apache.spark.sql.functions.col("k") === 1L
+    intercept[IllegalArgumentException](SnapshotTable.deleteWhere(spark, t, p))
+    intercept[IllegalArgumentException](SnapshotTable.deleteWhereMor(spark, t, p))
+    intercept[IllegalArgumentException](SnapshotTable.materializeDeletes(spark, t))
+    intercept[IllegalArgumentException](SnapshotTable.restoreVersion(t, 1L))
+    intercept[IllegalArgumentException](SnapshotTable.addColumns(spark, t,
+      Seq(org.apache.spark.sql.types.StructField("w", org.apache.spark.sql.types.LongType))))
+    assert(SnapshotTable.versions(t).isEmpty)
+  }
+
+  test("restoring a vacuumed version fails and commits nothing") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend(Seq(1).toDF("x"), t)
+    SnapshotTable.commitReplace(Seq(2).toDF("x"), t)
+    SnapshotTable.commitReplace(Seq(3).toDF("x"), t)
+    SnapshotTable.vacuum(t, keepVersions = 2)
+    intercept[java.nio.file.NoSuchFileException](SnapshotTable.restoreVersion(t, 1L))
+    assert(SnapshotTable.versions(t) == Seq(2L, 3L))
+    assert(SnapshotTable.restoreVersion(t, 2L) == 4L)
+    assert(SnapshotTable.read(spark, t).as[Int].collect().toSeq == Seq(2))
+  }
+
+  test("restoreVersion carries the restored version's schema: a column added later is gone") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend(Seq((1L, "a")).toDF("k", "v"), t)
+    SnapshotTable.commitAppend(Seq((2L, "b", 7L)).toDF("k", "v", "w"), t)
+    SnapshotTable.restoreVersion(t, 1L)
+    assert(SnapshotTable.read(spark, t).columns.toSeq == Seq("k", "v"))
+    assert(schemaOf(t, 3L) == schemaOf(t, 1L))
+    assert(SnapshotTable.readVersion(spark, t, 2L).columns.toSeq == Seq("k", "v", "w"))
+  }
+
+  test("addColumns is metadata-only: no file moves, new fields forced nullable") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
+    val t = tmpTable()
+    SnapshotTable.commitAppend(Seq((1L, "a")).toDF("k", "v"), t)
+    val dirsBefore = Files.list(Paths.get(t)).count()
+    val v = SnapshotTable.addColumns(spark, t,
+      Seq(StructField("w", LongType, nullable = false), StructField("n", StringType)))
+    assert(SnapshotTable.snapshot(t, v).files == SnapshotTable.snapshot(t, 1L).files)
+    assert(Files.list(Paths.get(t)).count() == dirsBefore, "no data dir staged")
+    val sc = schemaOf(t, v).get
+    assert(sc.fieldNames.toSeq == Seq("k", "v", "w", "n"))
+    assert(sc("w").nullable && sc("n").nullable)
+    assert(SnapshotTable.read(spark, t).collect().map(r =>
+      (r.getLong(0), r.getString(1), r.isNullAt(2), r.isNullAt(3))).toSeq ==
+      Seq((1L, "a", true, true)))
+  }
+
+  test("addColumns refuses existing names case-insensitively, duplicates and an empty list") {
+    import org.apache.spark.sql.types.{LongType, StructField}
+    val t = tmpTable()
+    SnapshotTable.commitAppend(Seq((1L, "a")).toDF("k", "v"), t)
+    intercept[IllegalArgumentException](
+      SnapshotTable.addColumns(spark, t, Seq(StructField("V", LongType))))
+    intercept[IllegalArgumentException](SnapshotTable.addColumns(spark, t,
+      Seq(StructField("w", LongType), StructField("W", LongType))))
+    intercept[IllegalArgumentException](SnapshotTable.addColumns(spark, t, Seq.empty))
+    assert(SnapshotTable.latestVersion(t).contains(1L), "a refusal commits nothing")
+  }
+
+  test("vacuum needs keepVersions >= 1; a window wider than history drops nothing") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend(Seq(1).toDF("x"), t)
+    SnapshotTable.commitReplace(Seq(2).toDF("x"), t)
+    intercept[IllegalArgumentException](SnapshotTable.vacuum(t, keepVersions = 0))
+    assert(SnapshotTable.vacuum(t, keepVersions = 5) == ((0, 0)))
+    assert(SnapshotTable.readVersion(spark, t, 1L).as[Int].collect().toSeq == Seq(1))
+  }
+
+  test("replace narrows the schema: a dropped column is not read, time travel keeps it") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend(Seq((1L, "a")).toDF("k", "v"), t)
+    SnapshotTable.commitReplace(Seq(2L).toDF("k"), t)
+    SnapshotTable.commitAppend(Seq(3L).toDF("k"), t)
+    assert(SnapshotTable.read(spark, t).columns.toSeq == Seq("k"))
+    assert(SnapshotTable.read(spark, t).as[Long].collect().sorted.toSeq == Seq(2L, 3L))
+    assert(SnapshotTable.readVersion(spark, t, 1L).columns.toSeq == Seq("k", "v"))
+  }
+
+  test("curve compaction on a constant column keeps every row and records equal bounds") {
+    val t = tmpTable()
+    SnapshotTable.commitAppend((1 to 40).map(i => (i, 5.0)).toDF("x", "c").repartition(4), t)
+    val v = SnapshotTable.compactZOrder(spark, t, "x", "c", numFiles = 2)
+    assert(SnapshotTable.read(spark, t).as[(Int, Double)].collect().toSet ==
+      (1 to 40).map(i => (i, 5.0)).toSet)
+    val snap = SnapshotTable.snapshot(t, v)
+    assert(snap.files.forall(f => snap.meta.get(s"zone:c:$f").contains("5.0,5.0")))
+    assert(zoneCandidates(t, ("c", 6.0, 9.0)).isEmpty)
   }
 }

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -203,5 +205,66 @@ class SnapshotTxnSpec extends AnyFunSuite {
     assert(!Files.exists(SnapshotTable.txnOkPath(a, 2L)),
       ".txnok sidecars must not leak past their vacuumed versions")
     assert(ints(a) == Seq(1, 2, 3, 4))
+  }
+
+  private def dataDirs(dir: String): Int = {
+    val s = Files.list(java.nio.file.Paths.get(dir))
+    try s.iterator().asScala.count(_.getFileName.toString.startsWith("data-"))
+    finally s.close()
+  }
+
+  test("stageReplace publishes a full replace only at the decision") {
+    val a = tmp(); val b = tmp(); val txd = tmp()
+    SnapshotTable.commitAppend(Seq(1, 2).toDF("x"), a)
+    SnapshotTable.commitAppend(Seq(10).toDF("x"), b)
+    val h = SnapshotTxn.begin(txd, Seq(a, b))
+    SnapshotTxn.stageReplace(h, Seq(7).toDF("x"), a)
+    SnapshotTxn.stageAppend(h, Seq(11).toDF("x"), b)
+    assert(ints(a) == Seq(1, 2) && ints(b) == Seq(10))
+    SnapshotTxn.commit(h)
+    assert(ints(a) == Seq(7) && ints(b) == Seq(10, 11))
+    assert(SnapshotTable.snapshot(a, 2L).op == "replace")
+    assert(SnapshotTable.readVersion(spark, a, 1L).as[Int].collect().sorted.toSeq == Seq(1, 2))
+  }
+
+  test("staging on a table outside the transaction is refused before any data is written") {
+    val a = tmp(); val c = tmp(); val txd = tmp()
+    SnapshotTable.commitAppend(Seq(1).toDF("x"), a)
+    SnapshotTable.commitAppend(Seq(5).toDF("x"), c)
+    val h = SnapshotTxn.begin(txd, Seq(a))
+    intercept[IllegalArgumentException](SnapshotTxn.stageAppend(h, Seq(6).toDF("x"), c))
+    assert(dataDirs(c) == 1 && ints(c) == Seq(5))
+    SnapshotTxn.abort(h)
+  }
+
+  test("a refused second stage on one table drops its staged data") {
+    val a = tmp(); val txd = tmp()
+    SnapshotTable.commitAppend(Seq(1).toDF("x"), a)
+    val h = SnapshotTxn.begin(txd, Seq(a))
+    SnapshotTxn.stageAppend(h, Seq(2).toDF("x"), a)
+    intercept[SnapshotTable.ConcurrentCommitException](
+      SnapshotTxn.stageAppend(h, Seq(3).toDF("x"), a))
+    assert(dataDirs(a) == 2, "v1's data and the first stage only")
+    SnapshotTxn.commit(h)
+    assert(ints(a) == Seq(1, 2))
+  }
+
+  test("begin needs a member; commit refuses an unstaged member; openTxnId names the holder while open") {
+    intercept[IllegalArgumentException](SnapshotTxn.begin(tmp(), Seq.empty))
+    val a = tmp(); val txd = tmp()
+    SnapshotTable.commitAppend(Seq(1).toDF("x"), a)
+    assert(SnapshotTxn.openTxnId(a).isEmpty)
+    val h = SnapshotTxn.begin(txd, Seq(a))
+    assert(SnapshotTxn.openTxnId(a).contains(h.txid))
+    intercept[SnapshotTxn.TxnStateException](SnapshotTxn.commit(h))
+    assert(SnapshotTxn.openTxnId(a).contains(h.txid), "a refused commit keeps the lock")
+    SnapshotTxn.stageAppend(h, Seq(2).toDF("x"), a)
+    SnapshotTxn.commit(h)
+    assert(ints(a) == Seq(1, 2))
+    assert(SnapshotTxn.openTxnId(a).isEmpty)
+    val h2 = SnapshotTxn.begin(txd, Seq(a))
+    assert(SnapshotTxn.openTxnId(a).contains(h2.txid) && h2.txid != h.txid)
+    SnapshotTxn.abort(h2)
+    assert(SnapshotTxn.openTxnId(a).isEmpty)
   }
 }
