@@ -9,9 +9,8 @@ package graft
   * tree write identical files, and a plain `diff` of two trees' outputs
   * shows only real plan changes.
   *
-  * Usage: runMain graft.ExplainQuery <queryName> <outFile> [sfDir]
-  *        runMain graft.ExplainQuery <q1,q2,...> <outDir> [sfDir]
-  * The list form plans every query in one session and writes
+  * Usage: runMain graft.ExplainQuery <q1,q2,...> <outDir> [sfDir]
+  * Plans every listed query in one session and writes
   * `<outDir>/<query>.txt` for each.
   */
 object ExplainQuery {
@@ -35,14 +34,12 @@ object ExplainQuery {
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val spark = Harness.localSession()
     val pid = ProcessHandle.current().pid()
-    if (names.size > 1) java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     for (name <- names) {
       val df = SparkEntry.queries(name)(spark, sfDir)
       val plan = mask(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode), pid)
-      val outFile =
-        if (names.size > 1) java.nio.file.Paths.get(out, s"$name.txt")
-        else java.nio.file.Paths.get(out)
+      val outFile = java.nio.file.Paths.get(out, s"$name.txt")
       java.nio.file.Files.write(outFile,
         plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       println(s"EXPLAINQUERY wrote $outFile (${plan.length} chars)")

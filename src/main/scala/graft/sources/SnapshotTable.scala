@@ -214,7 +214,8 @@ object SnapshotTable {
     // ranks scale between the FINITE bounds and clamp to the 16-bit grid:
     // ±Infinity lands on an edge and NaN (which Spark orders above every
     // double) on the top one. An unclamped NaN or infinite rank fails the
-    // long cast under ANSI mode.
+    // long cast under ANSI mode. A NULL value keeps a NULL rank (`greatest`
+    // would skip it and give 0).
     def finite(c: Column): Column = {
       val d = c.cast("double")
       when(!isnan(d) && abs(d) =!= Double.PositiveInfinity, d)
@@ -225,7 +226,7 @@ object SnapshotTable {
       min(finite(col(colB))).as("__mnb"),
       max(finite(col(colB))).as("__mxb"))
     def scale(c: Column, mn: Column, mx: Column): Column =
-      when(mx === mn, lit(0L)).otherwise(
+      when(mx === mn, lit(0L)).when(c.isNotNull,
         least(greatest((c.cast("double") - mn) / (mx - mn) * 65535.0, lit(0.0)),
           lit(65535.0)).cast("long"))
     val laid = df.crossJoin(broadcast(mm))

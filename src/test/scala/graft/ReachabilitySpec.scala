@@ -28,8 +28,9 @@ class ReachabilitySpec extends AnyFunSuite {
   private val allowlist = Map(
     "RorPipeline" -> "the entry point of the rorbench harness",
     "StreamingIngest" -> "a library entry point: the paper's incremental variant",
-    "CatalogSelect" -> ("a library entry point: the reference's S1 dump selection " +
-      "(fetch.py's newest-record query); the local harness is handed its dump path"))
+    "CatalogSelect" -> ("unreached: the reference's S1 dump selection, which no " +
+      "main calls yet; kept until ROADMAP direction 5 decides whether the " +
+      "harness uses it or it goes"))
 
   private val snapshotTableAllowlist = Map(
     "resetConsumer" -> ("the only recovery path the vacuumed-offset error of " +

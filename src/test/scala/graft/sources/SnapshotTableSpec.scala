@@ -187,6 +187,25 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(SnapshotTable.read(spark, t).count() === 103)
   }
 
+  test("curve compaction keeps a NULL value's rank NULL: the null rows lay out together") {
+    // half the rows have a NULL "v", interleaved over the whole "k" range:
+    // a NULL rank gives a NULL curve key, which range partitioning puts in
+    // one file; a rank of 0 would spread them along "k" over both files
+    val rows = (0 until 100).map(i =>
+      (i.toDouble, if (i % 2 == 0) Option(i.toDouble) else Option.empty[Double]))
+    for (compaction <- Seq[(String, Int) => Long](
+           SnapshotTable.compactZOrder(spark, _, "k", "v", _),
+           SnapshotTable.compactHilbert(spark, _, "k", "v", _))) {
+      val t = tmpTable()
+      SnapshotTable.commitAppend(rows.toDF("k", "v"), t)
+      compaction(t, 2)
+      val nullFiles = SnapshotTable.read(spark, t).filter($"v".isNull)
+        .select(org.apache.spark.sql.functions.input_file_name()).distinct().count()
+      assert(nullFiles === 1)
+      assert(SnapshotTable.read(spark, t).count() === 100)
+    }
+  }
+
   test("schema evolution: column added mid-history null-fills old files; time travel keeps each version's shape") {
     // the reference's own evolution case: ror.json grew `ultimate_parent`
     // (/root/reference/schemas/ror.json:215-220) — a column added after
